@@ -1,7 +1,7 @@
 """The extraction job plan: the Spark-native re-expression of the
 reference's request pipeline (SURVEY.md §3.4) at table scale.
 
-    scan pages -> anti-join manifest (resume) -> keep-latest dedup
+    scan pages -> drop committed buckets (resume) -> keep-latest dedup
       -> bucket/salt -> repartition -> Arrow extract -> write by bucket
       -> lineage counters -> commit manifest
 
@@ -33,9 +33,10 @@ Scale design notes (the parts the north rule grades):
   sample, you don't scan, to find skew).  This is explicit because the
   skew is in UDF compute time, which AQE's shuffle-size-based skew
   handling cannot see (SURVEY.md §4.2).
-* **Idempotent resume**: completed buckets are anti-joined out via the
-  manifest (broadcast — the manifest is tiny); interrupted buckets are
-  rewritten in place through dynamic partition overwrite.
+* **Idempotent resume**: completed buckets are filtered out by a literal
+  ``isin`` over the manifest's bucket ids (read on the driver — the
+  manifest is tiny); interrupted buckets are rewritten in place through
+  dynamic partition overwrite.
 """
 
 from __future__ import annotations
@@ -49,8 +50,8 @@ from pyspark.sql import functions as F
 from ocr_spark.operators.extract import extract_pages
 from ocr_spark.sources.catalog import Catalog, LINEAGE_SCHEMA
 
-__all__ = ["JobConfig", "prepare_pages", "detect_hot_hosts", "probe_skew",
-           "with_salt", "run_extraction_job"]
+__all__ = ["JobConfig", "prepare_pages", "probe_skew", "with_salt",
+           "run_extraction_job"]
 
 _HOST_RE = r"^[a-z][a-z0-9+.\-]*://([^/]+)"
 
@@ -135,23 +136,17 @@ def _skew_agg(df: DataFrame, cfg: JobConfig) -> DataFrame:
     return agged.filter(F.col("host").isNull() | cond)
 
 
-def detect_hot_hosts(df: DataFrame, cfg: JobConfig) -> DataFrame:
-    """Sampled per-host count aggregate -> hosts needing a wider salt
-    fan-out.  Sampling keeps this sub-linear: at 10^12 docs you cannot
-    afford a full scan just to find skew.  The probe reads ONLY the url
-    column unless ``sample_bytes`` is set (row-level sampling cannot
-    push below the scan, so weighing by bytes decompresses the html
-    column for the sampled files); see JobConfig.sample_bytes for the
-    default-on rationale and the 100-TB escape hatch."""
-    agged = _skew_agg(df, cfg)
-    return agged.filter(F.col("host").isNotNull()).select("host", "est_docs")
-
-
 def probe_skew(df: DataFrame, cfg: JobConfig) -> tuple[list, int, int]:
     """One collected probe pass -> (hot-host rows, est corpus docs, est
-    corpus html bytes).  The totals size the html exchange (see
-    ``JobConfig.exchange_partition_bytes``); est_bytes is 0 when
-    ``sample_bytes`` is off."""
+    corpus html bytes).  Hot hosts need a wider salt fan-out.  Sampling
+    keeps this sub-linear: at 10^12 docs you cannot afford a full scan
+    just to find skew.  The probe reads ONLY the url column unless
+    ``sample_bytes`` is set (row-level sampling cannot push below the
+    scan, so weighing by bytes decompresses the html column for the
+    sampled files); see JobConfig.sample_bytes for the default-on
+    rationale and the 100-TB escape hatch.  The totals size the html
+    exchange (see ``JobConfig.exchange_partition_bytes``); est_bytes is
+    0 when ``sample_bytes`` is off."""
     rows = _skew_agg(df, cfg).collect()
     hot = [(r.host, r.est_docs) for r in rows if r.host is not None]
     tot = next((r for r in rows if r.host is None), None)
@@ -161,22 +156,17 @@ def probe_skew(df: DataFrame, cfg: JobConfig) -> tuple[list, int, int]:
     return hot, est_docs, est_bytes
 
 
-def with_salt(df: DataFrame, hot_hosts: DataFrame, cfg: JobConfig) -> DataFrame:
+def with_salt(df: DataFrame, hot_hosts: list[str], cfg: JobConfig) -> DataFrame:
     """salt = second, independent url hash; hot hosts fan out wider.
-    Broadcast join — the hot-host dim is tiny by construction."""
-    hot = F.broadcast(hot_hosts.select("host").withColumn("is_hot", F.lit(True)))
+    The hot set is a literal ``isin`` (an InSet hash lookup past ten
+    hosts): it is small by construction and already on the driver, so
+    no dim relation is built or broadcast in every chunk."""
     salt_hash = F.xxhash64(F.col("url"), F.lit("salt"))
-    return (
-        df.join(hot, on="host", how="left")
-        .withColumn(
-            "salt",
-            F.when(F.col("is_hot").isNotNull(),
-                   F.pmod(salt_hash, F.lit(cfg.hot_salts)))
-            .otherwise(F.pmod(salt_hash, F.lit(cfg.base_salts)))
-            .cast("int"),
-        )
-        .drop("is_hot")
-    )
+    fan_out = F.lit(cfg.base_salts)
+    if hot_hosts:
+        fan_out = F.when(F.col("host").isin(hot_hosts),
+                         F.lit(cfg.hot_salts)).otherwise(fan_out)
+    return df.withColumn("salt", F.pmod(salt_hash, fan_out).cast("int"))
 
 
 def keep_latest(df: DataFrame) -> DataFrame:
@@ -233,20 +223,19 @@ def run_extraction_job(
     phases: dict[str, float] = {}
     df = prepare_pages(pages, cfg.n_buckets)
 
-    # resume: drop buckets this run already committed (broadcast anti-join)
-    done = cat.committed_buckets(cfg.run_id)
-    done_ids = [r.bucket for r in done.collect()]  # manifest is tiny by design
+    # resume: drop buckets this run already committed (a literal filter;
+    # the manifest is tiny by design and read on the driver)
+    done_ids = cat.committed_bucket_ids(cfg.run_id)
     if done_ids:
         df = df.filter(~F.col("bucket").isin(done_ids))
 
     # skew probe runs eagerly (it is a tiny result by construction), so
     # its cost is visible in phases and the hot set ships as a literal
-    # broadcast dim instead of re-running lazily under the join
+    # instead of re-running lazily under the plan
     t0 = time.perf_counter()
     hot_rows, est_docs, est_bytes = probe_skew(df, cfg)
     phases["probe_s"] = round(time.perf_counter() - t0, 3)
-    hot = spark.createDataFrame(hot_rows, "host string, est_docs long")
-    df = with_salt(df, hot, cfg)
+    df = with_salt(df, [host for host, _ in hot_rows], cfg)
 
     parallelism = cfg.parallelism or int(
         spark.conf.get("spark.sql.shuffle.partitions")

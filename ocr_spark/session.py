@@ -12,7 +12,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "ENGINE_CONFS"]
+__all__ = ["get_spark", "default_driver_mem", "ENGINE_CONFS"]
+
+# the directory holding the ocr_spark package (or engine.zip): Python
+# workers need it on their path whatever the working directory
+PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 ENGINE_CONFS = {
     "spark.sql.adaptive.enabled": "true",
@@ -75,6 +79,16 @@ GC_JVM_OPTS = ("-XX:G1HeapRegionSize=32m "
                "-XX:MetaspaceSize=256m")
 
 
+def default_driver_mem(cores: int | None = None) -> str:
+    """Local-mode driver heap sized from the host: a quarter of physical
+    memory, at most 2 GB per core in use, within [1 GB, 32 GB].  -Xms is
+    pinned to it, so it must be a heap the host can actually commit."""
+    with open("/proc/meminfo") as f:
+        mem_mb = int(f.readline().split()[1]) // 1024
+    cores = cores or len(os.sched_getaffinity(0))
+    return f"{max(1024, min(mem_mb // 4, 2048 * cores, 32768))}m"
+
+
 def get_spark(app: str = "ocr_spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra: dict | None = None) -> SparkSession:
@@ -83,10 +97,19 @@ def get_spark(app: str = "ocr_spark", cores: int | None = None,
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
     builder = SparkSession.builder.appName(app)
+    extra = dict(extra or {})
     if not os.environ.get("SPARK_MASTER") and "SPARK_ENV_LOADED" not in os.environ:
         builder = builder.master(f"local[{cores}]" if cores else "local[*]")
-        heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+        heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(cores)
         builder = builder.config("spark.driver.memory", heap)
+        # workers find ocr_spark (and so the daemon below) from any cwd
+        key = "spark.executorEnv.PYTHONPATH"
+        extra[key] = os.pathsep.join(filter(None, (PKG_ROOT, extra.get(key))))
+        # lazy zip-archive invalidation: a task no longer pays ~0.2 s of
+        # archive re-reads before its first row (see ocr_spark.pyworker).
+        # On a cluster, pass it with --conf where engine.zip is on the
+        # workers' PYTHONPATH.
+        extra.setdefault("spark.python.daemon.module", "ocr_spark.pyworker")
         # local mode: the driver JVM is the executor; -Xms pins the
         # heap (Spark passes only -Xmx to the driver — see GC_JVM_OPTS
         # pathology #1; executors get -Xms=-Xmx from Spark itself)
@@ -111,7 +134,7 @@ def get_spark(app: str = "ocr_spark", cores: int | None = None,
     builder = builder.config("spark.sql.shuffle.partitions", str(n_shuffle))
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)
-    for k, v in (extra or {}).items():
+    for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -64,7 +64,10 @@ class Table:
     def read_or_empty(self, schema: T.StructType) -> DataFrame:
         if self.exists():
             return self.spark.read.schema(schema).parquet(self.path)
-        return self.spark.createDataFrame([], schema)
+        # a JVM-local empty relation: createDataFrame([]) would run
+        # Python tasks for zero rows
+        return self.spark.range(0).select(
+            [F.lit(None).cast(f.dataType).alias(f.name) for f in schema])
 
     def append(self, df: DataFrame, partition_by: tuple[str, ...] = ()) -> None:
         w = df.write.mode("append")
@@ -170,6 +173,19 @@ class Catalog:
         """Buckets already committed for this run (anti-join target)."""
         m = self.manifest().read_or_empty(MANIFEST_SCHEMA)
         return m.filter(F.col("run_id") == run_id).select("bucket").distinct()
+
+    def committed_bucket_ids(self, run_id: str) -> list[int]:
+        """``committed_buckets`` as a sorted list, read on the driver
+        with pyarrow, the way ``append_rows`` wrote it: the manifest is
+        tiny by design, and a Spark job here costs more than the read."""
+        import pyarrow.parquet as pq
+
+        m = self.manifest()
+        if not m.exists():
+            return []
+        t = pq.read_table(m.path, columns=["bucket"],
+                          filters=[("run_id", "=", run_id)])
+        return sorted(set(t.column("bucket").to_pylist()))
 
     def commit_buckets(self, run_id: str, buckets: list[int]) -> None:
         """Append manifest rows — the atomic last step per chunk: data

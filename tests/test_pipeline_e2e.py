@@ -31,6 +31,12 @@ def oracle_expected(rows):
     }
 
 
+# pages schema inference (1), skew probe (2: aggregate, result), write
+# (3: html exchange, extract + text exchange, parquet write), lineage
+# read-back (3: schema inference, aggregate, result)
+FRESH_RUN_JOBS = 9
+
+
 @pytest.fixture(scope="module")
 def expected():
     return oracle_expected(gen_pages(400, seed=42))
@@ -63,6 +69,31 @@ def test_e2e_byte_equality_vs_oracle(spark, pages_parquet, tmp_path, expected):
     assert mismatches == []
     assert stats["n_docs"] == len(expected)
     assert stats["n_ok"] > 0 and stats["n_err"] > 0  # corpus has error genres
+
+
+def test_fresh_single_chunk_run_job_count(spark, pages_parquet, tmp_path):
+    """Pin the Spark jobs of a fresh single-chunk run.  Reading the
+    (absent) manifest and salting by the hot-host set launch none: the
+    manifest is read with pyarrow on the driver and the hot set is a
+    literal.  A row-less Python job (``createDataFrame`` of driver-held
+    rows costs a Python task per core) would show up here as extra jobs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("job_count", "fresh single-chunk run")
+    try:
+        _run(spark, pages_parquet, tmp_path, "job_count", n_buckets=16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("job_count")) == FRESH_RUN_JOBS
+
+
+def test_fresh_manifest_reads_launch_no_python(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "fresh"))
+    assert cat.committed_bucket_ids("r") == []
+    done = cat.committed_buckets("r")
+    assert done.columns == ["bucket"] and done.count() == 0
+    # createDataFrame([]) would scan a Python RDD (ExistingRDD)
+    assert "ExistingRDD" not in done._jdf.queryExecution().executedPlan().toString()
 
 
 def test_partitioning_invariance(spark, pages_parquet, tmp_path, expected):

@@ -60,18 +60,21 @@ def test_extraction_scan_prunes_unused_columns(spark):
 
 def test_pipeline_has_no_per_row_python(spark, pages_parquet):
     from ocr_spark.operators.extract import extract_pages
-    from ocr_spark.plans.pipeline import JobConfig, prepare_pages, with_salt, detect_hot_hosts
+    from ocr_spark.plans.pipeline import JobConfig, prepare_pages, probe_skew, with_salt
 
     pages = prepare_pages(spark.read.parquet(pages_parquet), 16)
-    cfg = JobConfig()
-    salted = with_salt(pages, detect_hot_hosts(pages, cfg), cfg)
+    cfg = JobConfig(hot_count_threshold=1)  # every sampled host is hot
+    hot = [host for host, _ in probe_skew(pages, cfg)[0]]
+    assert hot
+    salted = with_salt(pages, hot, cfg)
     ext = extract_pages(salted.repartition(8, "bucket", "salt"),
                         passthrough=("url", "bucket"))
     plan = plan_of(ext)
     assert "BatchEvalPython" not in plan
     assert "MapInArrow" in plan
-    # hot-host dim goes in broadcast
-    assert "BroadcastHashJoin" in plan
+    # the hot-host set is a literal: no dim relation is joined (or
+    # broadcast again in every chunk) under the kernel
+    assert "Join" not in plan and "Broadcast" not in plan
 
 
 def test_keep_latest_shuffles_skinny_projection(spark, pages_parquet):
