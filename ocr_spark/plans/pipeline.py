@@ -3,7 +3,7 @@ reference's request pipeline (SURVEY.md §3.4) at table scale.
 
     scan pages -> drop committed buckets (resume) -> keep-latest dedup
       -> bucket/salt -> repartition -> Arrow extract -> write by bucket
-      -> lineage counters -> commit manifest
+      -> lineage read back on the driver -> commit manifest
 
 Scale design notes (the parts the north rule grades):
 
@@ -36,7 +36,8 @@ Scale design notes (the parts the north rule grades):
 * **Idempotent resume**: completed buckets are filtered out by a literal
   ``isin`` over the manifest's bucket ids (read on the driver — the
   manifest is tiny); interrupted buckets are rewritten in place through
-  dynamic partition overwrite.
+  dynamic partition overwrite.  Run totals sum one lineage row per
+  committed bucket, so fresh and resumed runs count alike.
 """
 
 from __future__ import annotations
@@ -251,7 +252,6 @@ def run_extraction_job(
     chunks = [all_buckets[i:i + chunk] for i in range(0, len(all_buckets), chunk)]
 
     n_chunks = 0
-    this_run_rows: list = []
     for bucket_ids in chunks:
         part = df.filter(F.col("bucket").isin(bucket_ids)) if len(chunks) > 1 else df
         # THE one wide exchange of html: distribute by (bucket, salt).
@@ -295,34 +295,12 @@ def run_extraction_job(
 
         phases["extract_write_s"] = phases.get("extract_write_s", 0.0) + wall_ms / 1000.0
 
-        # lineage from the landed files (self-verifying read-back; the
-        # scan is column-pruned to the four counter columns, so it does
-        # not re-read text/spans/html).  The per-bucket rows are tiny,
-        # so they are collected once and re-used for the run totals —
-        # the read-back aggregation runs exactly one Spark job.
+        # lineage: per-bucket counters read back from the files that just
+        # landed, with pyarrow on the driver — no Spark job after the write
         t0 = time.perf_counter()
-        landed = out_table.read().filter(F.col("bucket").isin(bucket_ids))
-        lineage = (
-            landed.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
-                F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("n_err"),
-                F.sum("bytes_in").alias("bytes_in"),
-                F.sum("bytes_out").alias("bytes_out"),
-            )
-            .withColumn("run_id", F.lit(cfg.run_id))
-            .withColumn("wall_ms", F.lit(wall_ms))
-            .select("run_id", "bucket", "n_docs", "n_ok", "n_err",
-                    "bytes_in", "bytes_out", "wall_ms")
-        )
-        chunk_rows = lineage.collect()
-        this_run_rows.extend(chunk_rows)
+        chunk_rows = cat.landed_counters(out_table, cfg.run_id, bucket_ids, wall_ms)
         if chunk_rows:
-            # tiny table: driver-side pyarrow append, no Spark job
-            cat.lineage().append_rows(
-                [tuple(r) for r in chunk_rows], LINEAGE_SCHEMA
-            )
+            cat.lineage().append_rows(chunk_rows, LINEAGE_SCHEMA)
         phases["lineage_s"] = round(
             phases.get("lineage_s", 0.0) + time.perf_counter() - t0, 3)
         # write-then-commit ordering: manifest rows land strictly after data
@@ -333,37 +311,16 @@ def run_extraction_job(
         n_chunks += 1
 
     wall_s = time.perf_counter() - t_start
-    if done_ids:
-        # resumed run: totals must also cover buckets committed by the
-        # interrupted run, so read the full lineage for this run_id
-        lineage_df = cat.lineage().read().filter(F.col("run_id") == cfg.run_id)
-        totals = lineage_df.agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_ok").alias("n_ok"),
-            F.sum("n_err").alias("n_err"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum("bytes_out").alias("bytes_out"),
-        ).collect()[0]
-    else:
-        # fresh run: totals come from the already-collected per-bucket
-        # rows — no extra Spark action in the serial tail
-        from types import SimpleNamespace
-        s = lambda k: sum(getattr(r, k) or 0 for r in this_run_rows) \
-            if this_run_rows else None
-        totals = SimpleNamespace(n_docs=s("n_docs"), n_ok=s("n_ok"),
-                                 n_err=s("n_err"), bytes_in=s("bytes_in"),
-                                 bytes_out=s("bytes_out"))
+    # fresh and resumed runs alike: totals cover every committed bucket
+    # of this run, including those committed by an interrupted run
+    totals = cat.run_totals(cfg.run_id)
     return {
         "run_id": cfg.run_id,
         "wall_s": wall_s,
         "n_chunks": n_chunks,
         "resumed_buckets_skipped": len(done_ids),
-        "n_docs": totals.n_docs,
-        "n_ok": totals.n_ok,
-        "n_err": totals.n_err,
-        "bytes_in": totals.bytes_in,
-        "bytes_out": totals.bytes_out,
-        "docs_per_s": (totals.n_docs or 0) / wall_s if wall_s else 0.0,
-        "gb_per_s": (totals.bytes_in or 0) / 1e9 / wall_s if wall_s else 0.0,
+        **totals,
+        "docs_per_s": (totals["n_docs"] or 0) / wall_s if wall_s else 0.0,
+        "gb_per_s": (totals["bytes_in"] or 0) / 1e9 / wall_s if wall_s else 0.0,
         "phases": phases,
     }

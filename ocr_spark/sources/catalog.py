@@ -51,12 +51,8 @@ class Table:
         self.name = name
 
     def exists(self) -> bool:
-        if not os.path.isdir(self.path):
-            return False
-        for root, _dirs, files in os.walk(self.path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        return any(f.endswith(".parquet")
+                   for _root, _dirs, files in os.walk(self.path) for f in files)
 
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path)
@@ -68,12 +64,6 @@ class Table:
         # Python tasks for zero rows
         return self.spark.range(0).select(
             [F.lit(None).cast(f.dataType).alias(f.name) for f in schema])
-
-    def append(self, df: DataFrame, partition_by: tuple[str, ...] = ()) -> None:
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path)
 
     def append_rows(self, rows: list[tuple], schema: T.StructType) -> None:
         """Driver-side append for TINY tables (manifest/lineage: a few
@@ -170,7 +160,9 @@ class Catalog:
         return self.table("lineage")
 
     def committed_buckets(self, run_id: str) -> DataFrame:
-        """Buckets already committed for this run (anti-join target)."""
+        """Buckets already committed for this run (anti-join target).
+        The job reads ``committed_bucket_ids``; this DataFrame form stays
+        because perfbench times and traces it."""
         m = self.manifest().read_or_empty(MANIFEST_SCHEMA)
         return m.filter(F.col("run_id") == run_id).select("bucket").distinct()
 
@@ -186,6 +178,56 @@ class Catalog:
         t = pq.read_table(m.path, columns=["bucket"],
                           filters=[("run_id", "=", run_id)])
         return sorted(set(t.column("bucket").to_pylist()))
+
+    def landed_counters(self, table: Table, run_id: str, buckets: list[int],
+                        wall_ms: int) -> list[tuple]:
+        """Lineage rows for the ``bucket=N/`` dirs of ``table`` that just
+        landed, read back on the driver with pyarrow one batch of the
+        counter columns at a time.  A null status counts in neither
+        ``n_ok`` nor ``n_err``; a bucket with no rows gets no row; like a
+        Spark scan, it skips ``_``/``.``-prefixed files."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        def counters(t):
+            return (t.num_rows,
+                    pc.sum(pc.equal(t["status"], "ok"), min_count=0).as_py(),
+                    pc.sum(pc.not_equal(t["status"], "ok"), min_count=0).as_py(),
+                    pc.sum(t["bytes_in"], min_count=0).as_py(),
+                    pc.sum(t["bytes_out"], min_count=0).as_py())
+
+        rows = []
+        for b in buckets:
+            d = os.path.join(table.path, f"bucket={b}")
+            parts = []
+            for f in sorted(os.listdir(d)) if os.path.isdir(d) else ():
+                if f.startswith(("_", ".")):
+                    continue
+                with pq.ParquetFile(os.path.join(d, f)) as pf:
+                    parts += map(counters, pf.iter_batches(
+                        columns=["status", "bytes_in", "bytes_out"]))
+            sums = [sum(c) for c in zip(*parts)]
+            if sums and sums[0]:
+                rows.append((run_id, b, *sums, wall_ms))
+        return rows
+
+    def run_totals(self, run_id: str) -> dict:
+        """The lineage counters of ``run_id`` summed over the buckets the
+        manifest commits, one row per bucket.  A crash between a chunk's
+        lineage append and its commit leaves rows that the resumed run
+        appends again, equal apart from ``wall_ms``; the smallest is kept."""
+        import pyarrow.parquet as pq
+
+        committed = self.committed_bucket_ids(run_id)
+        lin = self.lineage()
+        rows = (pq.read_table(lin.path, filters=[("run_id", "=", run_id),
+                                                 ("bucket", "in", committed)])
+                .to_pylist() if committed and lin.exists() else [])
+        kept: dict[int, dict] = {}
+        for r in sorted(rows, key=lambda r: r["wall_ms"]):
+            kept.setdefault(r["bucket"], r)
+        return {k: sum(r[k] for r in kept.values()) if kept else None
+                for k in ("n_docs", "n_ok", "n_err", "bytes_in", "bytes_out")}
 
     def commit_buckets(self, run_id: str, buckets: list[int]) -> None:
         """Append manifest rows — the atomic last step per chunk: data
