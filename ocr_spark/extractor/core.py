@@ -29,7 +29,7 @@ import json
 import re
 import unicodedata
 import zlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from html import unescape
 from html.parser import HTMLParser
 
@@ -208,196 +208,63 @@ _WS_RE = re.compile("[\\s\u200b\u200c\ufeff]+")  # \\s (Unicode) + zero-width ch
 def _collapse(s: str) -> str:
     """The normalization policy (the byte-equality contract):
     NFC-normalize, collapse all whitespace runs (incl. NBSP/ZWSP) to a
-    single ASCII space, strip ends."""
+    single ASCII space, strip ends.  On ASCII this is
+    ``" ".join(s.split())``: NFC is the identity there, and ``re``'s
+    ``\\s`` and ``str.split()`` both split on ``Py_UNICODE_ISSPACE``."""
+    if s.isascii():
+        return " ".join(s.split())
     return _WS_RE.sub(" ", unicodedata.normalize("NFC", s)).strip()
 
 
-@dataclass
+@dataclass(slots=True)
 class _Block:
-    kind: str = "p"
-    chunks: list = field(default_factory=list)       # text chunks
-    anchor_chars: int = 0                            # non-ws chars inside <a>
-    total_chars: int = 0                             # non-ws chars total
-    start: int = -1                                  # char offset of first chunk
-    end: int = -1                                    # char offset past last chunk
-    in_content_ancestor: bool = False
-    in_boiler_ancestor: bool = False
-    _text: str | None = None
+    kind: str
+    _text: str                  # normalized per _collapse
+    words: int                  # len(_text.split())
+    start: int                  # char offset of first chunk
+    end: int                    # char offset past last chunk
+    anchor_chars: int           # non-ws chars inside <a>
+    total_chars: int            # non-ws chars total
+    in_content_ancestor: bool
+    in_boiler_ancestor: bool
 
     def text(self) -> str:
-        # memoized: called from both the flush check and the classifier
-        if self._text is None:
-            self._text = _collapse("".join(self.chunks))
         return self._text
 
 
-class _BlockParser(HTMLParser):
-    """Streams the DOM into a flat sequence of text blocks with link /
-    char statistics and char-offset spans into the decoded document."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.blocks: list[_Block] = []
-        self._cur = _Block()
-        self._stack: list[str] = []
-        self._ignore_depth = 0
-        self._anchor_depth = 0
-        self._content_depth = 0
-        self._boiler_depth = 0
-        self._line_starts: list[int] = [0]
-
-    # -- offset bookkeeping ------------------------------------------------
-    def feed(self, data: str) -> None:  # type: ignore[override]
-        # Precompute char offset of each line start so getpos() -> offset.
-        starts = [0]
-        for m in re.finditer("\n", data):
-            starts.append(m.end())
-        self._line_starts = starts
-        super().feed(data)
-        self.close()
-
-    def _offset(self) -> int:
-        line, col = self.getpos()
-        if line - 1 < len(self._line_starts):
-            return self._line_starts[line - 1] + col
-        return self._line_starts[-1] + col
-
-    # -- block lifecycle ----------------------------------------------------
-    def _flush(self, next_kind: str = "p") -> None:
-        b = self._cur
-        if b.chunks and b.text():
-            self.blocks.append(b)
-        self._cur = _Block(
-            kind=next_kind,
-            in_content_ancestor=self._content_depth > 0,
-            in_boiler_ancestor=self._boiler_depth > 0,
-        )
-
-    # -- HTMLParser hooks ----------------------------------------------------
-    def handle_starttag(self, tag, attrs):
-        tag = tag.lower()
-        if tag in _IGNORE_SUBTREE:
-            if tag not in _VOID_TAGS:
-                self._ignore_depth += 1
+def _finish_block(blocks, chunks, kind, start, end, anchor_chars,
+                  in_content, in_boiler) -> None:
+    """Append the block made of the text ``chunks`` unless they collapse
+    to nothing.  A whitespace-only block never reaches ``_collapse``
+    (NFC maps whitespace to whitespace), and one ``split()`` gives the
+    ASCII text, its word count and its non-whitespace char count."""
+    raw = "".join(chunks)
+    parts = raw.split()
+    if not parts:
+        return
+    if raw.isascii():
+        text, words = " ".join(parts), len(parts)
+    else:
+        text = _collapse(raw)
+        if not text:  # zero-width characters only
             return
-        if self._ignore_depth:
-            return
-        if tag == "a":
-            self._anchor_depth += 1
-            return
-        if tag in _BLOCK_TAGS:
-            if tag in _CONTENT_ANCESTORS:
-                self._content_depth += 1
-            if tag in _BOILERPLATE_ANCESTORS:
-                self._boiler_depth += 1
-            self._flush(next_kind=tag)
-            if tag in _VOID_TAGS:  # br, hr: flush only
-                if tag in _CONTENT_ANCESTORS:
-                    self._content_depth -= 1
-                if tag in _BOILERPLATE_ANCESTORS:
-                    self._boiler_depth -= 1
-            else:
-                self._stack.append(tag)
-
-    def handle_startendtag(self, tag, attrs):
-        tag = tag.lower()
-        if self._ignore_depth:
-            return
-        if tag in _BLOCK_TAGS:
-            self._flush(next_kind=tag)
-
-    def handle_endtag(self, tag):
-        tag = tag.lower()
-        if tag in _IGNORE_SUBTREE:
-            if self._ignore_depth:
-                self._ignore_depth -= 1
-            return
-        if self._ignore_depth:
-            return
-        if tag == "a":
-            if self._anchor_depth:
-                self._anchor_depth -= 1
-            return
-        if tag in _BLOCK_TAGS:
-            # Unwind the open-tag stack (tolerates unclosed markup).
-            if tag in self._stack:
-                while self._stack:
-                    popped = self._stack.pop()
-                    if popped in _CONTENT_ANCESTORS:
-                        self._content_depth -= 1
-                    if popped in _BOILERPLATE_ANCESTORS:
-                        self._boiler_depth -= 1
-                    if popped == tag:
-                        break
-            self._flush()
-
-    def handle_data(self, data):
-        if self._ignore_depth or not data:
-            return
-        off = self._offset()
-        b = self._cur
-        if b.start < 0:
-            b.start = off
-        b.end = off + len(data)
-        b.chunks.append(data)
-        b._text = None
-        # non-whitespace char count: str.split() splits exactly on
-        # str.isspace() whitespace, so the token-length sum equals the
-        # per-char isspace scan at C speed
-        nws = sum(map(len, data.split()))
-        b.total_chars += nws
-        if self._anchor_depth:
-            b.anchor_chars += nws
-
-    def close(self) -> None:  # final flush
-        super().close()
-        b = self._cur
-        if b.chunks and b.text():
-            self.blocks.append(b)
-            self._cur = _Block()
+        words = len(text.split())
+    blocks.append(_Block(kind, text, words, start, end, anchor_chars,
+                         sum(map(len, parts)), in_content, in_boiler))
 
 
-# tag name per html.parser's tagfind_tolerant
-_TAGNAME_RE = re.compile(r"[a-zA-Z][^\t\n\r\f />\x00]*")
-# attribute region after the tag name, transcribed from html.parser's
-# locatestarttagend_tolerant (CPython 3.11): quotes are special ONLY as
-# attribute-value delimiters right after '='; a stray quote inside an
-# unquoted value (crawl HTML: <div class=a"b>) is a bare-value char and
-# the tag still closes at the next '>'.  (The round-2 quote-aware region
-# regex treated ANY quote as opening a quoted section, which on such
-# input either swallowed content up to a mate quote or fell into the
-# truncated-tag path and leaked the rest of the document as one data
-# blob — ADVICE.md round 2.)
-_ATTRS_RE = re.compile(
-    r"""
-  (?:[\s/]*                          # optional whitespace before attribute name
-    (?:(?<=['"\s/])[^\s/>][^\s/=>]*  # attribute name
-      (?:\s*=+\s*                    # value indicator
-        (?:'[^']*'                   # LITA-enclosed value
-          |"[^"]*"                   # LIT-enclosed value
-          |(?!['"])[^>\s]*           # bare value
-         )
-        \s*                          # possibly followed by a space
-       )?(?:\s|/(?!>))*
-     )*
-   )?
-  \s*                                # trailing whitespace
-""",
-    re.VERBOSE,
-)
-# tagfind_tolerant's trailing whitespace/slash run + attrfind_tolerant,
-# used to re-derive stdlib's end-token (">" vs "/>" vs bogus) in the
-# rare ambiguous case where the char before '>' is '/'
-_TAGTRAIL_RE = re.compile(r"(?:\s|/(?!>))*")
-_ATTRFIND_RE = re.compile(
-    r"""((?<=['"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*"""
-    r"""('[^']*'|"[^"]*"|(?!['"])[^>\s]*))?(?:\s|/(?!>))*"""
-)
-# chars after the attr region that stdlib treats as "incomplete input"
-# (check_for_whole_start_tag -> -1 -> goahead's find('>') data fallback)
-_INCOMPLETE_NEXT = frozenset(
-    "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-)
+# What a token does to the block builder, one code per (token kind, tag);
+# a tag absent from a table does nothing.  Codes below _A_OPEN act even
+# inside an ignored subtree.  </embed> leaves one though <embed> never
+# enters one, as in the oracle.
+_TEXT = 1          # (_step only) literal text at the '<'
+_IGN_CLOSE, _IGN_OPEN = 2, 3
+_IGN_RAW = 4       # script/style: skip the rawtext and its close tag
+_A_OPEN, _A_CLOSE = 5, 6
+_FLUSH = 7         # end the block; the next one takes the tag as kind
+_OPEN, _OPEN_CONTENT, _OPEN_BOILER = 8, 9, 10  # _FLUSH + push the tag
+_CLOSE = 11        # unwind the stack to the tag if open; end the block
+
 # html.parser's CDATA_CONTENT_ELEMENTS: rawtext until a full close tag.
 # set_cdata_mode's "interesting" pattern is '</\s*elem\s*>' — a lone
 # '</script foo>' does NOT end the section.
@@ -405,222 +272,355 @@ _CDATA_CLOSE = {
     "script": re.compile(r"</\s*script\s*>", re.IGNORECASE),
     "style": re.compile(r"</\s*style\s*>", re.IGNORECASE),
 }
-# endtagfind / bogus-comment / declaration closers, per html.parser +
-# _markupbase (CPython 3.11)
-_ENDTAG_RE = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
+
+_START_ACT: dict[str, int] = {"a": _A_OPEN}
+for _t in _BLOCK_TAGS:
+    _START_ACT[_t] = (_FLUSH if _t in _VOID_TAGS  # br, hr
+                      else _OPEN_CONTENT if _t in _CONTENT_ANCESTORS
+                      else _OPEN_BOILER if _t in _BOILERPLATE_ANCESTORS
+                      else _OPEN)
+for _t in _IGNORE_SUBTREE - _VOID_TAGS:  # <embed> has no subtree
+    _START_ACT[_t] = _IGN_RAW if _t in _CDATA_CLOSE else _IGN_OPEN
+_END_ACT = {**dict.fromkeys(_BLOCK_TAGS, _CLOSE), "a": _A_CLOSE,
+            **dict.fromkeys(_IGNORE_SUBTREE, _IGN_CLOSE)}
+del _t
+
+# One regex per '<'.  Group 1 is the name of a start tag whose attribute
+# region provably ends where html.parser's does, at a '>' with no '/'
+# before it: a quote-free region not starting with NUL (_ATTR_RE's loop
+# runs through it to the '>'), or whitespace-separated name[=value]
+# pairs whose quoted or bare values hold no '>', quote or '/'.  Group 2
+# is the name of a well-formed end tag (endtagfind).  Neither crosses a
+# '>', so a failed try costs at most the distance to the next '>', which
+# _step then consumes.  Any other '<' matches empty and takes _step.
+_TOKEN_RE = re.compile(
+    r"""
+  <(?:
+    ([a-zA-Z][^\t\n\r\f />\x00]*+)            # start tag name (tagfind_tolerant)
+    (?:(?:[^>"'\x00][^>"']*+)?+(?<!/)          # quote-free region
+      |(?:\s++[^\s/>"'=]++                     # or: name
+          (?:\s*+=\s*+(?:"[^">]*+"|'[^'>]*+'|[^\s>"'/]*+))?+  # [= value]
+        )*+\s*+
+    )>
+   |/\s*+([a-zA-Z][-.a-zA-Z0-9:_]*+)\s*+>     # end tag
+  )?
+""",
+    re.VERBOSE,
+)
+# chars that end a tag name (tagfind_tolerant)
+_NAME_END_RE = re.compile(r"[\t\n\r\f />\x00]")
+# One attribute of the region after the tag name, transcribed from
+# html.parser's locatestarttagend_tolerant (CPython 3.11): that region
+# is _ATTRS_LEAD_RE, then _ATTR_RE as often as it matches (its trailing
+# '\s*' never matches anything more).  Quotes are special ONLY as
+# attribute-value delimiters right after '='; a stray quote inside an
+# unquoted value (crawl HTML: <div class=a"b>) is a bare-value char and
+# the tag still closes at the next '>' (ADVICE.md round 2).  Its '\s*'
+# after the value moves no end, so it also stands for attrfind_tolerant.
+_ATTRS_LEAD_RE = re.compile(r"[\s/]*")  # whitespace before the first name
+_ATTR_RE = re.compile(
+    r"""
+  (?<=['"\s/])[^\s/>][^\s/=>]*       # attribute name
+  (?:\s*=+\s*                        # value indicator
+    (?:'[^']*'                       # LITA-enclosed value
+      |"[^"]*"                       # LIT-enclosed value
+      |(?!['"])[^>\s]*               # bare value
+     )
+    \s*                              # possibly followed by a space
+   )?(?:\s|/(?!>))*
+""",
+    re.VERBOSE,
+)
+# tagfind_tolerant's trailing whitespace/slash run, used to re-derive
+# stdlib's end-token (">" vs "/>" vs bogus) in the rare ambiguous case
+# where the char before '>' is '/'
+_TAGTRAIL_RE = re.compile(r"(?:\s|/(?!>))*")
+# chars after the attr region that stdlib treats as "incomplete input"
+# (check_for_whole_start_tag -> -1 -> goahead's find('>') data fallback)
+_INCOMPLETE_NEXT = frozenset(
+    "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+)
+# bogus-comment / declaration closers, per html.parser + _markupbase
+# (CPython 3.11)
+_GT_RE = re.compile(">")
 _COMMENTCLOSE_RE = re.compile(r"--\s*>")
 _MARKEDCLOSE_RE = re.compile(r"]\s*]\s*>")
 _MSMARKEDCLOSE_RE = re.compile(r"]\s*>")
 _DECLNAME_RE = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")
 
 
-class _FastBlockParser(_BlockParser):
-    """Drop-in replacement for the stdlib-driven parse: a tolerant
-    regex lexer feeding the SAME block handlers.  ~2x faster because it
-    never tokenizes attributes (the handlers only use tag names) and
-    scans inter-tag text as whole segments.  Behaviour is pinned to the
-    stdlib path by a differential test over every synthesizer genre
-    plus adversarial markup shapes
-    (tests/test_core_html.py::test_fast_parser_matches_stdlib*).  Tag
-    ends are located with a transcription of html.parser's
-    locatestarttagend_tolerant, and the three stdlib fallbacks are
-    replicated: incomplete-at-EOF (emit through the next '>' as data),
-    bogus-attr-region (emit the partial tag as raw data, resume at the
-    offending char), and the bare-value '/' disambiguation for
-    XHTML-style self-closing tags.
+class _FastBlockParser:
+    """The HTML lexer and block builder: streams a decoded document into
+    a flat sequence of text blocks (``self.blocks``) with link / char
+    statistics and char-offset spans.  It must match, block for block,
+    the stdlib ``html.parser``-driven oracle in tests/html_oracle.py
+    (tests/test_core_html.py::test_fast_parser_matches_stdlib*).
 
-    Charref decoding matches html.parser's convert_charrefs=True: each
-    inter-tag data segment is html.unescape()d, offsets refer to the
-    source, segment end = start + len(decoded) (same formula as the
-    stdlib path's getpos()-based bookkeeping)."""
+    Most tags are one ``_TOKEN_RE`` match and one table lookup
+    (``_START_ACT`` / ``_END_ACT``).  Every other '<' takes ``_step``, a
+    transcription of html.parser's tolerant rules: comments,
+    declarations, odd quoting, bogus attribute regions (emitted as raw
+    data), the bare-value '/' of XHTML-style self-closing tags, and
+    constructs left open at EOF (emitted through the next '>' as data).
+    Attributes are never tokenized: the builder only uses tag names.
+    Each inter-tag data segment is html.unescape()d (convert_charrefs);
+    offsets refer to the source, segment end = start + len(decoded).
 
-    def feed(self, data: str) -> None:  # type: ignore[override]
-        self._pos = 0
-        i, n = 0, len(data)
+    Lexing is linear in the input: ``_step`` reuses its last search for
+    each closer (``_next``) and memoizes attribute-region walks
+    (``_region_end``), and end tags find their open element through a
+    per-tag count beside the stack."""
+
+    def __init__(self) -> None:
+        self.blocks: list[_Block] = []
+        self._data = ""
+        self._found: dict = {}               # pattern -> (from, match)
+        self._attrs_end: dict[int, int] = {}  # region boundary -> region end
+
+    def feed(self, data: str) -> None:
+        """Lex the whole document into ``self.blocks``."""
+        self._data = data
+        blocks = self.blocks
+        search = _TOKEN_RE.search
         find = data.find
+        start_act, end_act = _START_ACT, _END_ACT
+        n = len(data)
+        last = data.rfind(">") + 1  # no '<' past the last '>' is a token
+        stack: list[str] = []              # open block elements
+        n_open: dict[str, int] = {}        # tag -> its count in stack
+        ignore = anchor = content = boiler = 0
+        # the block being built
+        kind, in_content, in_boiler = "p", False, False
+        chunks: list[str] = []
+        start = end = anchor_chars = 0
+        i = 0
         while i < n:
-            lt = find("<", i)
+            m = search(data, i, last)
+            lt = m.start() if m else find("<", i)
             if lt < 0:
-                self._pos = i
-                seg = data[i:]
-                self.handle_data(unescape(seg) if "&" in seg else seg)
-                break
-            if lt > i:
-                self._pos = i
+                lt = n
+            if lt > i and not ignore:
                 seg = data[i:lt]
-                self.handle_data(unescape(seg) if "&" in seg else seg)
-            c = data[lt + 1:lt + 2]
-            if c and c.isascii() and c.isalpha():
-                m = _TAGNAME_RE.match(data, lt + 1)
-                name = m.group(0).lower()
-                ne = m.end()
-                # fast path (the overwhelming majority of crawl tags):
-                # a quote-free attr region always matches _ATTRS_RE up
-                # to exactly the next '>' — attr names/bare values
-                # consume every non-space-non-'>' char and inter-attr
-                # whitespace bridges them, so no bogus/incomplete stop
-                # is possible without a quote.  Two C-level scans
-                # replace the regex engine here; quoted or truncated
-                # tags take the faithful slow path.
-                gt = find(">", ne)
-                if gt >= 0:
-                    seg = data[ne:gt]
-                    if '"' not in seg and "'" not in seg:
-                        j, nxt = gt, ">"
-                    else:
-                        j = _ATTRS_RE.match(data, ne).end()
-                        nxt = data[j:j + 1]
-                else:
-                    j = _ATTRS_RE.match(data, ne).end()
-                    nxt = data[j:j + 1]
-                if nxt == ">":
-                    endpos = j + 1
-                elif nxt == "/" and data.startswith("/>", j):
-                    endpos = j + 2
-                elif nxt == "" or nxt in _INCOMPLETE_NEXT:
-                    # incomplete start tag at EOF (stdlib
-                    # check_for_whole_start_tag -> -1)
-                    i = self._incomplete_fallback(data, lt, find)
-                    continue
-                else:
-                    # bogus char where an attribute was expected:
-                    # stdlib emits the partial tag as data (with NO
-                    # charref decode — parse_starttag's fallback calls
-                    # handle_data on the raw slice) and resumes at the
-                    # offending char
-                    endpos = j if j > lt else lt + 1
-                    self._pos = lt
-                    self.handle_data(data[lt:endpos])
-                    i = endpos
-                    continue
-                # starttag vs XHTML startendtag, per stdlib
-                # parse_starttag's end-token check.  The attr regions
-                # diverge only when the char before '>' is '/': replay
-                # attrfind there to learn whether that '/' was absorbed
-                # into a bare attribute value (<div a=1/> is a normal
-                # start tag; <br/> is not).
-                if data[endpos - 2:endpos - 1] == "/" and endpos - 2 >= m.end():
-                    k = _TAGTRAIL_RE.match(data, m.end()).end()
-                    while k < endpos:
-                        am = _ATTRFIND_RE.match(data, k)
-                        if not am or am.end() == k:
-                            break
-                        k = am.end()
-                    end_tok = data[k:endpos].strip()
-                    if end_tok not in (">", "/>"):
-                        self._pos = lt
-                        self.handle_data(data[lt:endpos])
-                        i = endpos
-                        continue
-                    if end_tok == "/>":
-                        self.handle_startendtag(name, [])
-                        i = endpos
-                        continue
-                self.handle_starttag(name, [])
-                i = endpos
-                cd = _CDATA_CLOSE.get(name)
-                if cd:
-                    mm = cd.search(data, i)
-                    if not mm:
-                        # unterminated rawtext: the section never closes
-                        # (stdlib buffers it away; the block handlers
-                        # drop script/style content either way, so
-                        # emitting it as cdata data is equivalent)
-                        self._pos = i
-                        self.handle_data(data[i:])
-                        break
-                    if mm.start() > i:
-                        self._pos = i
-                        self.handle_data(data[i:mm.start()])
-                    self.handle_endtag(name)
-                    i = mm.end()
-            elif c == "/":
-                if find(">", lt + 1) < 0:
-                    # parse_endtag -> -1: EOF data fallback
-                    i = self._incomplete_fallback(data, lt, find)
-                    continue
-                em = _ENDTAG_RE.match(data, lt)
-                if em:
-                    self.handle_endtag(em.group(1).lower())
-                    i = em.end()
-                    continue
-                m = _TAGNAME_RE.match(data, lt + 2)
-                if m:
-                    # '>' exists past the name (names can't contain '>')
-                    g2 = find(">", m.end())
-                    self.handle_endtag(m.group(0).lower())
-                    i = g2 + 1
-                elif data.startswith("</>", lt):
-                    i = lt + 3
-                else:
-                    # '</' + non-name: bogus comment, skipped to '>'
-                    # ('>' existence checked above)
-                    i = find(">", lt + 2) + 1
-            elif c == "!":
-                if data.startswith("!--", lt + 1):
-                    mm = _COMMENTCLOSE_RE.search(data, lt + 4)
-                    i = mm.end() if mm else self._incomplete_fallback(
-                        data, lt, find)
-                elif data.startswith("![", lt + 1):
-                    # marked section (<![CDATA[ / <![if ...): stdlib
-                    # closes CDATA-family at ']\s*]\s*>', MS-office
-                    # if/else/endif at ']\s*>'; unknown names raise in
-                    # stdlib — treated as a bogus comment here (the
-                    # production parser must never raise per-document)
-                    dm = _DECLNAME_RE.match(data, lt + 3)
-                    sect = dm.group(0).lower().strip() if dm else ""
-                    if sect in ("temp", "cdata", "ignore", "include",
-                                "rcdata"):
-                        mm = _MARKEDCLOSE_RE.search(data, lt + 3)
-                    elif sect in ("if", "else", "endif"):
-                        mm = _MSMARKEDCLOSE_RE.search(data, lt + 3)
-                    else:
-                        mm = None
-                        g2 = find(">", lt + 3)
-                        i = g2 + 1 if g2 >= 0 else self._incomplete_fallback(
-                            data, lt, find)
-                        continue
-                    i = mm.end() if mm else self._incomplete_fallback(
-                        data, lt, find)
-                elif data[lt:lt + 9].lower() == "<!doctype":
-                    g2 = find(">", lt + 9)
-                    i = g2 + 1 if g2 >= 0 else self._incomplete_fallback(
-                        data, lt, find)
-                else:  # bogus comment
-                    g2 = find(">", lt + 2)
-                    i = g2 + 1 if g2 >= 0 else self._incomplete_fallback(
-                        data, lt, find)
-            elif c == "?":  # processing instruction
-                g2 = find(">", lt + 2)
-                i = g2 + 1 if g2 >= 0 else self._incomplete_fallback(
-                    data, lt, find)
+                if "&" in seg:
+                    seg = unescape(seg)
+                if seg:
+                    if not chunks:
+                        start = i
+                    chunks.append(seg)
+                    end = i + len(seg)
+                    if anchor:
+                        # str.split() splits exactly on str.isspace()
+                        anchor_chars += sum(map(len, seg.split()))
+            li = m.lastindex if m else None
+            if li == 1:
+                val = m[1].lower()
+                code = start_act.get(val, 0)
+                i = m.end()
+            elif li == 2:
+                val = m[2].lower()
+                code = end_act.get(val, 0)
+                i = m.end()
+            elif lt < n:
+                code, val, i = self._step(data, lt)
             else:
-                # lone '<' not opening a construct: literal text
-                self._pos = lt
-                self.handle_data("<")
-                i = lt + 1
-        self.close()
+                break
+            if not code:
+                continue
+            if code >= _FLUSH:
+                if ignore:
+                    continue
+                if code == _CLOSE:
+                    if n_open.get(val):  # unwind (tolerates unclosed markup)
+                        while True:
+                            top = stack.pop()
+                            n_open[top] -= 1
+                            top_act = start_act[top]
+                            if top_act == _OPEN_CONTENT:
+                                content -= 1
+                            elif top_act == _OPEN_BOILER:
+                                boiler -= 1
+                            if top == val:
+                                break
+                    val = "p"
+                elif code != _FLUSH:
+                    stack.append(val)
+                    n_open[val] = n_open.get(val, 0) + 1
+                    if code == _OPEN_CONTENT:
+                        content += 1
+                    elif code == _OPEN_BOILER:
+                        boiler += 1
+                if chunks:
+                    _finish_block(blocks, chunks, kind, start, end,
+                                  anchor_chars, in_content, in_boiler)
+                    chunks = []
+                    anchor_chars = 0
+                kind, in_content, in_boiler = val, content > 0, boiler > 0
+            elif code >= _A_OPEN:
+                if not ignore:
+                    if code == _A_OPEN:
+                        anchor += 1
+                    elif anchor:
+                        anchor -= 1
+            elif code == _TEXT:
+                if val and not ignore:
+                    if not chunks:
+                        start = lt
+                    chunks.append(val)
+                    end = lt + len(val)
+                    if anchor:
+                        anchor_chars += sum(map(len, val.split()))
+            elif code == _IGN_RAW:
+                # the section's text is dropped and its close tag leaves
+                # the subtree, so the ignore depth is unchanged (an
+                # unclosed section runs to EOF)
+                mm = _CDATA_CLOSE[val].search(data, i)
+                i = mm.end() if mm else n
+            elif code == _IGN_OPEN:
+                ignore += 1
+            elif ignore:  # _IGN_CLOSE
+                ignore -= 1
+        if chunks:
+            _finish_block(blocks, chunks, kind, start, end, anchor_chars,
+                          in_content, in_boiler)
 
-    def _incomplete_fallback(self, data: str, lt: int, find) -> int:
+    def _step(self, data: str, lt: int) -> tuple[int, str | None, int]:
+        """The exact path for the '<' at ``lt``: ``(code, value, resume)``
+        where ``value`` is the tag name, or the text for ``_TEXT``."""
+        c = data[lt + 1:lt + 2]
+        if c.isascii() and c.isalpha():
+            ne = self._name_end(lt + 2)
+            j = self._region_end(ne)
+            nxt = data[j:j + 1]
+            if nxt == ">":
+                endpos = j + 1
+            elif nxt == "/" and data.startswith("/>", j):
+                endpos = j + 2
+            elif nxt == "" or nxt in _INCOMPLETE_NEXT:
+                # incomplete: stdlib check_for_whole_start_tag -> -1
+                return self._incomplete(data, lt)
+            else:
+                # bogus char where an attribute was expected: stdlib
+                # emits the partial tag as data (with NO charref decode —
+                # parse_starttag's fallback calls handle_data on the raw
+                # slice) and resumes at the offending char
+                return _TEXT, data[lt:j], j
+            # the name is sliced only for a tag that consumes it: an
+            # unclosed one can run to EOF
+            name = data[lt + 1:ne].lower()
+            # starttag vs XHTML startendtag, per stdlib parse_starttag's
+            # end-token check.  The attr regions diverge only when the
+            # char before '>' is '/': replay attrfind there to learn
+            # whether that '/' was absorbed into a bare attribute value
+            # (<div a=1/> is a normal start tag; <br/> is not).
+            if data[endpos - 2] == "/" and endpos - 2 >= ne:
+                k = _TAGTRAIL_RE.match(data, ne).end()
+                while k < endpos:
+                    am = _ATTR_RE.match(data, k)
+                    if am is None:
+                        break
+                    k = am.end()
+                end_tok = data[k:endpos].strip()
+                if end_tok == "/>":  # XHTML <br/>, <div/>
+                    return _FLUSH if name in _BLOCK_TAGS else 0, name, endpos
+                if end_tok != ">":
+                    return _TEXT, data[lt:endpos], endpos
+            return _START_ACT.get(name, 0), name, endpos
+        if c == "/":
+            if self._next(_GT_RE, lt + 1) is None:
+                # parse_endtag -> -1: EOF data fallback
+                return self._incomplete(data, lt)
+            # a well-formed end tag was _TOKEN_RE's; html.parser takes
+            # the name and skips to the next '>'
+            d = data[lt + 2:lt + 3]
+            if d.isascii() and d.isalpha():
+                ne = self._name_end(lt + 3)
+                name = data[lt + 2:ne].lower()
+                return _END_ACT.get(name, 0), name, self._next(_GT_RE, ne).end()
+            if data.startswith("</>", lt):
+                return 0, None, lt + 3
+            # '</' + non-name: bogus comment, skipped to '>'
+            return 0, None, self._next(_GT_RE, lt + 2).end()
+        if c == "!":
+            if data.startswith("!--", lt + 1):
+                mm = self._next(_COMMENTCLOSE_RE, lt + 4)
+            elif data.startswith("![", lt + 1):
+                # marked section (<![CDATA[ / <![if ...): stdlib closes
+                # CDATA-family at ']\s*]\s*>', MS-office if/else/endif at
+                # ']\s*>'; unknown names raise in stdlib — treated as a
+                # bogus comment here (the production parser must never
+                # raise per-document)
+                dm = _DECLNAME_RE.match(data, lt + 3)
+                sect = dm.group(0).lower().strip() if dm else ""
+                if sect in ("temp", "cdata", "ignore", "include", "rcdata"):
+                    mm = self._next(_MARKEDCLOSE_RE, lt + 3)
+                elif sect in ("if", "else", "endif"):
+                    mm = self._next(_MSMARKEDCLOSE_RE, lt + 3)
+                else:
+                    mm = self._next(_GT_RE, lt + 3)
+            elif data[lt:lt + 9].lower() == "<!doctype":
+                mm = self._next(_GT_RE, lt + 9)
+            else:  # bogus comment
+                mm = self._next(_GT_RE, lt + 2)
+        elif c == "?":  # processing instruction
+            mm = self._next(_GT_RE, lt + 2)
+        else:  # lone '<' not opening a construct: literal text
+            return _TEXT, "<", lt + 1
+        return (0, None, mm.end()) if mm else self._incomplete(data, lt)
+
+    def _incomplete(self, data: str, lt: int) -> tuple[int, str, int]:
         """goahead(end=1)'s recovery for a construct whose parser
         returned -1 at EOF: emit through the next '>' inclusive (else
         up to the next '<', else one char) as charref-decoded data,
-        then resume parsing.  Returns the resume offset."""
-        g2 = find(">", lt + 1)
-        if g2 >= 0:
-            k2 = g2 + 1
+        then resume parsing."""
+        gt = self._next(_GT_RE, lt + 1)
+        if gt is not None:
+            k = gt.end()
         else:
-            k2 = find("<", lt + 1)
-            if k2 < 0:
-                k2 = lt + 1
-        self._pos = lt
-        seg = data[lt:k2]
-        self.handle_data(unescape(seg) if "&" in seg else seg)
-        return k2
+            k = data.find("<", lt + 1)
+            if k < 0:
+                k = lt + 1
+        seg = data[lt:k]
+        return _TEXT, unescape(seg) if "&" in seg else seg, k
 
-    def _offset(self) -> int:
-        return self._pos
+    def _next(self, pat: re.Pattern, pos: int) -> re.Match | None:
+        """``pat.search(data, pos)``.  A search from p that found nothing,
+        or found a match at m, answers every later search from a position
+        in [p, m], so runs of '<' that share one closer (or its absence)
+        scan for it once."""
+        hit = self._found.get(pat)
+        if hit is not None:
+            p, m = hit
+            if p <= pos and (m is None or pos <= m.start()):
+                return m
+        m = pat.search(self._data, pos)
+        self._found[pat] = (pos, m)
+        return m
 
+    def _name_end(self, pos: int) -> int:
+        """End of the tag name that continues at ``pos``."""
+        m = self._next(_NAME_END_RE, pos)
+        return m.start() if m else len(self._data)
+
+    def _region_end(self, pos: int) -> int:
+        """End of the attribute region after a tag name ending at
+        ``pos``: ``_ATTRS_LEAD_RE``, then ``_ATTR_RE`` while it matches.
+        Where the walk reaches a boundary an earlier walk visited, it
+        takes that walk's end: ``_ATTR_RE`` cannot match empty and its
+        lookbehind reads only the data, so the rest of the walk depends
+        only on the position."""
+        data, memo = self._data, self._attrs_end
+        k = _ATTRS_LEAD_RE.match(data, pos).end()
+        path = []
+        while k not in memo:
+            path.append(k)
+            m = _ATTR_RE.match(data, k)
+            if m is None:
+                memo[k] = k
+            else:
+                k = m.end()
+        for b in path:
+            memo[b] = memo[k]
+        return memo[k]
 
 def _link_density(b: _Block) -> float:
     return b.anchor_chars / b.total_chars if b.total_chars else 0.0
@@ -645,7 +645,7 @@ def _classify(blocks: list[_Block],
     services/business_license_processor.py:24-54 -> profiles.py); the
     remaining constants are the published Boilerpipe rule set."""
     n = len(blocks)
-    words = [len(b.text().split()) for b in blocks]
+    words = [b.words for b in blocks]
     link = [_link_density(b) for b in blocks]
     keep = [False] * n
     for i in range(n):
@@ -667,11 +667,6 @@ def _classify(blocks: list[_Block],
     return keep
 
 
-# The production lexer.  _BlockParser (stdlib html.parser machinery)
-# remains as the differential-testing reference implementation.
-_PARSER_IMPL = _FastBlockParser
-
-
 def extract_html(payload: bytes, profile: dict | None = None) -> dict:
     """HTML bytes -> {text, spans, n_blocks, status, error_msg}.
 
@@ -681,10 +676,14 @@ def extract_html(payload: bytes, profile: dict | None = None) -> dict:
     **byte** offsets into the source payload.  ``profile`` optionally
     overrides the classifier thresholds (keys ``max_link_density``,
     ``min_words``; missing keys keep defaults).
+
+    Time is linear in the payload on any markup, hostile included
+    (tests/test_core_html.py::test_hostile_markup_is_linear); memory is
+    not bounded beyond the decoded text and its blocks.
     """
     try:
         decoded, codec = decode_html(payload)
-        parser = _PARSER_IMPL()
+        parser = _FastBlockParser()
         parser.feed(decoded)
         blocks = parser.blocks
         prof = profile or {}

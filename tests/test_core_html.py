@@ -1,9 +1,13 @@
 """Unit tests for the oracle HTML extractor (SURVEY.md §5.2.2-3)."""
 
 import hashlib
+import random
+import re
+import time
 
 from ocr_spark.data.synth import gen_pages
 from ocr_spark.extractor import core
+from tests.html_oracle import BlockParser, collapse
 
 
 def ex(html: bytes):
@@ -155,7 +159,7 @@ def test_fast_parser_matches_stdlib_on_corpus():
         if core.sniff_doc_kind(r["html"]) != "html":
             continue
         decoded, _ = core.decode_html(r["html"])
-        assert _blocks_with(core._BlockParser, decoded) == \
+        assert _blocks_with(BlockParser, decoded) == \
             _blocks_with(core._FastBlockParser, decoded), r["url"]
         checked += 1
     assert checked > 300
@@ -220,9 +224,31 @@ def test_fast_parser_matches_stdlib_adversarial():
         "<html><body><p>" + "h " * 18 + "</p><div a=",
         "<html><body><p>" + "i " * 18 + '</p><div a="x',
         "<html><body><p>" + "j " * 18 + "</p></div",
+        # quoted attributes, the token regex's second region form, and
+        # the shapes next to it that must take the exact path
+        '<html><body><article><div a="x>y"><p>' + "q " * 18
+        + "</p></div></article></body></html>",
+        "<html><body><div a='x' b=\"y\"><p>" + "q " * 18 + "</p></div>",
+        '<html><body><div a = "x"><p>' + "q " * 18 + "</p></div>",
+        '<html><body><div a="x"b="y"><p>' + "q " * 18 + "</p></div>",
+        "<html><body><div a==b><p>" + "q " * 18 + "</p></div>",
+        '<html><body><div ="x"><p>' + "q " * 18 + "</p></div>",
+        "<html><body><article a=b/><p>" + "q " * 18 + "</p></article>",
+        '<html><body><div a="x"/><p>' + "q " * 18 + '</p><img a="1"/>r',
+        # non-ASCII whitespace inside tags: part of the tag name before
+        # any ASCII whitespace, attribute separators after it
+        "<html><body><div\xa0a><p>" + "u " * 18 + "</p></div\xa0>",
+        "<html><body><div a\x0bb='1'\x1c c\u2003d=\"2\"><p>" + "u " * 18
+        + "</p><p\x0b>v</p\x1c></div>",
+        # NUL after a tag name: html.parser emits the partial tag as text
+        "<html><body><p>" + "v " * 18 + "<div\x00 x>w</p><a&amp;\x00 b>",
+        # text mixing ASCII with NBSP, ZWSP and combining marks
+        "<html><body><article><p>caf\u0065\u0301\xa0au\u200blait "
+        + "k\xa0" * 18 + "</p><p>plain ascii</p><p>\u200b\ufeff</p>"
+        "<p> \xa0\u3000 </p></article></body></html>",
     ]
     for html in cases:
-        a = _blocks_with(core._BlockParser, html)
+        a = _blocks_with(BlockParser, html)
         b = _blocks_with(core._FastBlockParser, html)
         assert a == b, (html[:60], a, b)
 
@@ -231,9 +257,6 @@ def test_fast_parser_matches_stdlib_fuzz():
     """Seeded markup-soup fuzz: the fast lexer must agree with stdlib
     on arbitrary tag-fragment interleavings (the crawl-HTML reality),
     wherever stdlib itself does not raise."""
-    import random
-
-    rng = random.Random(20260817)
     atoms = ['<div', '<p', '<a', '<br', '<script', '</div>', '</p>',
              '</script>', ' class=', ' href=', '"', "'", 'a"b', "x'y",
              '=', '/', '>', '/>', ' ', 'word ', '&amp;', '&#65;', '&',
@@ -241,18 +264,152 @@ def test_fast_parser_matches_stdlib_fuzz():
              '\n', '<nav>', '</nav>', '<article>', '</article>', '\t',
              '<!doctype html>', '<![CDATA[ x ]]>', '<!-->', '</ p>',
              '</script foo>', '<div a=1/>', '<div "x">', '</>', ';']
-    checked = 0
-    for _ in range(1500):
-        s = "".join(rng.choice(atoms) for _ in range(rng.randint(2, 30)))
-        try:
-            a = _blocks_with(core._BlockParser, s)
-        except Exception:
-            continue  # stdlib raising (e.g. unknown marked section) is
-            # out of contract; the fast parser never raises
-        b = _blocks_with(core._FastBlockParser, s)
-        assert a == b, (repr(s), a, b)
-        checked += 1
-    assert checked > 1000
+    # quoted-attribute shapes, non-ASCII whitespace and NUL inside tags,
+    # and text that crosses the ASCII boundary of _collapse
+    quoted = [' a="x>y"', " a='x' b=\"y\"", ' a = "x"', ' a="x"b="y"',
+              ' a==b', ' ="x"', ' a=b/', ' a="x"/', '<img a="1"/>',
+              '\xa0', '\x0b', '\x1c', '\u2003', '\x00', 'caf\u0065\u0301 ',
+              'x\u200by ', '\ufeff', '\u3000']
+    for pool in (atoms, atoms + quoted):
+        rng = random.Random(20260817)
+        checked = 0
+        for _ in range(1500):
+            s = "".join(rng.choice(pool) for _ in range(rng.randint(2, 30)))
+            try:
+                a = _blocks_with(BlockParser, s)
+            except Exception:
+                continue  # stdlib raising (e.g. unknown marked section) is
+                # out of contract; the fast parser never raises
+            b = _blocks_with(core._FastBlockParser, s)
+            assert a == b, (repr(s), a, b)
+            checked += 1
+        assert checked > 1000
+
+
+# Shapes on which the lexer used to take quadratic time: 55 s, 10.7 s,
+# 0.79 s, 1.5 s and 0.93 s for one 32-72 KB page, single process.
+HOSTILE = {
+    "open_tags": lambda k: "<a " * k,
+    "open_quotes": lambda k: '<a "' * k,
+    "open_eq": lambda k: "<a=" * k,
+    "open_comments": lambda k: "<!-- " * k,
+    "unclosed_nesting": lambda k: "<div>" * k + "</p>" * k,
+}
+# more constructs whose closer search is shared by every '<' of a run
+HOSTILE.update((u, lambda k, u=u: u * k) for u in (
+    '<a x="', "</a ", "<!", "<![CDATA[", "<?", "<a\x00", "<", "<a/"))
+
+
+def test_hostile_markup_is_linear():
+    for name, make in HOSTILE.items():
+        k = 1
+        while len(make(k)) < 64 * 1024:
+            k *= 2
+        for tail in ("", ">"):
+            payload = (make(k) + tail).encode()
+            t = time.process_time()
+            out = core.extract_bytes(payload)
+            took = time.process_time() - t
+            assert out["status"] == "ok", (name, out["error_msg"])
+            assert took < 1.0, (name, tail, took)
+
+
+def test_hostile_markup_matches_stdlib():
+    for name, make in HOSTILE.items():
+        for tail in ("", ">", "x>y"):
+            html = make(50) + tail
+            assert _blocks_with(BlockParser, html) == \
+                _blocks_with(core._FastBlockParser, html), (name, tail)
+
+
+def test_common_tags_take_the_token_regex(monkeypatch):
+    """_step is the exact path for rare constructs.  On the synthesizer
+    corpus no start tag with plain or simply quoted attributes and no
+    well-formed end tag may reach it."""
+    simple = re.compile(
+        r"""<[a-zA-Z][a-zA-Z0-9]*(?:\s+[a-zA-Z_:][-\w:.]*"""
+        r"""(?:\s*=\s*(?:"[^">]*"|'[^'>]*'|[^\s"'=<>`/]+))?)*\s*>"""
+        r"""|</[a-zA-Z][a-zA-Z0-9]*\s*>""")
+    taken = []
+    step = core._FastBlockParser._step
+
+    def spy(self, data, lt):
+        taken.append(data[lt:data.find(">", lt) + 1])
+        return step(self, data, lt)
+
+    monkeypatch.setattr(core._FastBlockParser, "_step", spy)
+    n_simple = 0
+    for r in gen_pages(600, seed=321):
+        if core.sniff_doc_kind(r["html"]) != "html":
+            continue
+        decoded, _ = core.decode_html(r["html"])
+        n_simple += sum(1 for _ in simple.finditer(decoded))
+        core._FastBlockParser().feed(decoded)
+    assert n_simple > 20000
+    assert taken  # the doctype still takes it
+    assert [t for t in taken if simple.fullmatch(t)] == []
+
+
+def test_token_regex_agrees_with_exact_path():
+    """Every tag _TOKEN_RE takes is the tag _step would have read at the
+    same '<', with the same end; an end tag is html.parser's endtagfind."""
+    endtagfind = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
+    rng = random.Random(11)
+    atoms = ['<a', '<div', '</p>', '</ a>', '<br', ' ', '\t', '\xa0',
+             '\x0b', '\x00', 'x', '=', '"', "'", '/', '>', '/>', ' x=',
+             ' y="1"', " z='2'", '"x>y"', '<']
+    taken = 0
+    for _ in range(20000):
+        s = "".join(rng.choice(atoms) for _ in range(rng.randint(1, 20)))
+        last = s.rfind(">") + 1
+        for lt in (i for i, ch in enumerate(s) if ch == "<"):
+            m = core._TOKEN_RE.match(s, lt, last)
+            if not m or not m.lastindex:
+                continue
+            taken += 1
+            if m.lastindex == 2:
+                em = endtagfind.match(s, lt)
+                assert em and em.end() == m.end() and em[1] == m[2], repr(s)
+                continue
+            p = core._FastBlockParser()
+            p._data = s
+            code, name, end = p._step(s, lt)
+            assert (code, name, end) == (
+                core._START_ACT.get(m[1].lower(), 0), m[1].lower(), m.end()
+            ), (repr(s), lt)
+    assert taken > 5000
+
+
+def test_region_walk_matches_attrs_regex():
+    """_region_end (lead, then _ATTR_RE while it matches, memoized by
+    boundary) ends where html.parser's whole locatestarttagend_tolerant
+    attribute region does, from every offset."""
+    full = re.compile(r"(?:[\s/]*(?:" + core._ATTR_RE.pattern + r")*)?\s*",
+                      re.VERBOSE)
+    rng = random.Random(3)
+    atoms = ['a', 'b', '=', '"', "'", ' ', '/', '>', '<', '\t', '\xa0',
+             '\x00', 'x=', '="', "='", '/>', '\n']
+    for _ in range(5000):
+        s = "".join(rng.choice(atoms) for _ in range(rng.randint(1, 40)))
+        p = core._FastBlockParser()
+        p._data = s
+        for off in range(len(s) + 1):
+            assert p._region_end(off) == full.match(s, off).end(), (repr(s), off)
+
+
+def test_collapse_matches_reference():
+    """The ASCII shortcut and the NFC path of _collapse both equal the
+    NFC + regex reference, across the ASCII / non-ASCII boundary."""
+    rng = random.Random(17)
+    mixed = ["a", "Z", "0", ".", " ", "\t", "\n", "\r", "\x0b", "\x0c",
+             "\x1c", "\x1f", "\x85", "\xa0", "\u2000", "\u2003", "\u3000",
+             "\u200b", "\u200c", "\ufeff", "e\u0301", "\u0301", "\u212b",
+             "\u00df", "\ud55c"]
+    ascii_chars = [chr(c) for c in range(128)]
+    for pool in (mixed, ascii_chars):
+        for _ in range(20000):
+            s = "".join(rng.choice(pool) for _ in range(rng.randint(0, 16)))
+            assert core._collapse(s) == collapse(s), repr(s)
 
 
 def test_profile_thresholds_change_classification():
