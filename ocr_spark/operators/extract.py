@@ -1,4 +1,4 @@
-"""The extraction operator: vectorized Arrow-batched UDF stage.
+"""The extraction operators: vectorized Arrow-batched UDF stages.
 
 This is the Spark expression of the reference's core extractor chain
 O3->O9->O13 (services/file_processor.py dispatch, the Gemini call at
@@ -12,24 +12,43 @@ Python inside the batch kernel is the allowed pattern (SURVEY.md
 §2.3).  The kernel is the *same* function as the pytest oracle
 (`ocr_spark.extractor.core.extract_bytes`), which is what makes
 byte-equality structural rather than aspirational.
+
+Two kernels live here.  :func:`extract_pages` is the job's kernel: it
+alone keeps state across batches (streaming dedup), reads a second
+column (the profile key), builds a nested column (spans) and times each
+row.  :func:`map_payloads` is the one scaffold for every other per-page
+field operator (head fields, JSON-LD, microdata, links, dates, charsets,
+and the tables/Markdown of ``operators/structure.py``): each is one
+``extractor`` function applied per payload.
 """
 
 from __future__ import annotations
 
+import operator
 import time
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from ocr_spark.extractor.core import extract_bytes
+from ocr_spark.extractor.core import (decode_html, extract_bytes,
+                                      extract_http_equiv, extract_hreflang,
+                                      extract_jsonld, extract_meta,
+                                      extract_meta_kv, extract_microdata,
+                                      extract_publish_date, extract_rel_links)
 
-__all__ = ["extract_pages", "extract_meta_pages", "extract_jsonld_pages",
-           "extract_microdata_pages", "rel_links_pages",
-           "http_equiv_pages",
+__all__ = ["extract_pages", "map_payloads",
+           "extract_meta_pages", "extract_jsonld_pages", "http_equiv_pages",
+           "rel_links_pages", "hreflang_pages", "publish_date_pages",
+           "meta_kv_pages", "social_cards", "extract_microdata_pages",
+           "sniff_charsets",
            "EXTRACT_RESULT_FIELDS", "META_RESULT_FIELDS",
-           "JSONLD_RESULT_FIELDS", "MICRODATA_RESULT_FIELDS",
-           "REL_LINK_RESULT_FIELDS", "HTTP_EQUIV_RESULT_FIELDS",
+           "JSONLD_RESULT_FIELDS", "HTTP_EQUIV_RESULT_FIELDS",
+           "REL_LINK_RESULT_FIELDS", "HREFLANG_RESULT_FIELDS",
+           "PUBLISH_DATE_RESULT_FIELDS", "META_KV_RESULT_FIELDS",
+           "MICRODATA_RESULT_FIELDS", "CHARSET_RESULT_FIELDS",
            "SPAN_TYPE"]
 
 SPAN_TYPE = T.ArrayType(
@@ -109,6 +128,7 @@ def extract_pages(
     if not with_spans:
         result_fields = [f for f in result_fields if f.name != "spans"]
     out_schema = T.StructType(in_fields + result_fields)
+    arrow_types = {f.name: to_arrow_type(f.dataType) for f in result_fields}
     cols = list(passthrough) + [payload_col]
 
     # Arrow-native kernel (mapInArrow, not mapInPandas): passthrough
@@ -167,7 +187,7 @@ def extract_pages(
                 extract_ms.append(dt_ms)
             arrays = [batch.column(cols.index(c)) for c in passthrough]
             names = list(passthrough)
-            arrays.append(pa.array(texts, pa.string()))
+            arrays.append(pa.array(texts, arrow_types["text"]))
             names.append("text")
             if with_spans:
                 arrays.append(pa.ListArray.from_arrays(
@@ -180,20 +200,80 @@ def extract_pages(
                     ),
                 ))
                 names.append("spans")
-            for nm, vals, typ in (
-                ("n_blocks", n_blocks, pa.int32()),
-                ("status", status, pa.string()),
-                ("error_msg", error_msg, pa.string()),
-                ("doc_kind", doc_kind, pa.string()),
-                ("bytes_in", bytes_in, pa.int64()),
-                ("bytes_out", bytes_out, pa.int64()),
-                ("extract_ms", extract_ms, pa.int64()),
+            for nm, vals in (
+                ("n_blocks", n_blocks),
+                ("status", status),
+                ("error_msg", error_msg),
+                ("doc_kind", doc_kind),
+                ("bytes_in", bytes_in),
+                ("bytes_out", bytes_out),
+                ("extract_ms", extract_ms),
             ):
-                arrays.append(pa.array(vals, typ))
+                arrays.append(pa.array(vals, arrow_types[nm]))
                 names.append(nm)
             yield pa.RecordBatch.from_arrays(arrays, names)
 
     return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+
+
+def map_payloads(
+    df: DataFrame,
+    payload_col: str,
+    passthrough: tuple[str, ...],
+    fields: list[T.StructField],
+    row_fn,
+    many: bool = False,
+) -> DataFrame:
+    """Apply a per-page function to ``payload_col`` in ONE Arrow-batched
+    ``mapInArrow`` pass: the output is the ``passthrough`` columns plus
+    ``fields``.  ``row_fn(payload)`` gets the raw payload (``None`` for
+    NULL) and returns one tuple in ``fields`` order; with ``many`` it
+    returns an iterable of such tuples (0..n rows per page) and the
+    passthrough values are repeated per emitted row with one ``take``.
+    Passthrough columns of a one-to-one pass are forwarded zero-copy;
+    the binary payload never shuffles.  Arrow types come from
+    ``fields`` on the driver, so the Spark schema is the only
+    declaration of each column."""
+    n_pass = len(passthrough)
+    names = [*passthrough, *(f.name for f in fields)]
+    arrow_types = [to_arrow_type(f.dataType) for f in fields]
+    out_schema = T.StructType([df.schema[c] for c in passthrough] + fields)
+
+    def kernel(batches):
+        import pyarrow as pa  # executor-side import
+
+        for batch in batches:
+            payloads = batch.column(n_pass).to_pylist()
+            if many:
+                idx, rows = [], []
+                for i, payload in enumerate(payloads):
+                    for row in row_fn(payload):
+                        idx.append(i)
+                        rows.append(row)
+                take = pa.array(idx, pa.int64())
+                arrays = [batch.column(j).take(take) for j in range(n_pass)]
+            else:
+                rows = [row_fn(payload) for payload in payloads]
+                arrays = [batch.column(j) for j in range(n_pass)]
+            values = zip(*rows) if rows else [[]] * len(fields)
+            arrays += [pa.array(v, t) for v, t in zip(values, arrow_types)]
+            yield pa.RecordBatch.from_arrays(arrays, names)
+
+    return (df.select(*passthrough, payload_col)
+            .mapInArrow(kernel, schema=out_schema))
+
+
+def _core_pages(df, payload_col, passthrough, fields, extract, many=False):
+    """:func:`map_payloads` over an ``extractor.core`` function that
+    returns a dict (with ``many``, a list of dicts) keyed by the
+    ``fields`` names.  A NULL payload reads as ``b""``."""
+    get = operator.itemgetter(*(f.name for f in fields))
+
+    def row_fn(payload):
+        out = extract(b"" if payload is None else payload)
+        return map(get, out) if many else get(out)
+
+    return map_payloads(df, payload_col, passthrough, fields, row_fn, many)
 
 
 META_RESULT_FIELDS = [
@@ -220,31 +300,8 @@ def extract_meta_pages(
     kernel pass (``mapInArrow``, no per-row Python dispatch), the
     binary payload never shuffles, passthrough columns are forwarded
     zero-copy, output is the skinny field projection."""
-    from ocr_spark.extractor.core import extract_meta
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + META_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            fields = {f.name: [] for f in META_RESULT_FIELDS}
-            for payload in payloads:
-                m = extract_meta(payload if payload is not None else b"")
-                for k, v in fields.items():
-                    v.append(m[k])
-            arrays = [batch.column(i) for i in range(len(passthrough))]
-            names = list(passthrough)
-            for f in META_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa.string()))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    return _core_pages(df, payload_col, passthrough, META_RESULT_FIELDS,
+                       extract_meta)
 
 
 JSONLD_RESULT_FIELDS = [
@@ -272,38 +329,8 @@ def extract_jsonld_pages(
     one batched pass, no per-row Python dispatch, the binary payload
     never shuffles, malformed blocks come back as ``parse_error`` ROWS
     (the engine-wide error taxonomy), never exceptions."""
-    from ocr_spark.extractor.core import extract_jsonld
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + JSONLD_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            idx: list[int] = []
-            fields = {f.name: [] for f in JSONLD_RESULT_FIELDS}
-            for rowno, payload in enumerate(payloads):
-                for ent in extract_jsonld(
-                        payload if payload is not None else b""):
-                    idx.append(rowno)
-                    for k in fields:
-                        fields[k].append(ent[k])
-            arrays = [batch.column(i).take(pa.array(idx, pa.int64()))
-                      for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"script_idx": pa.int32(), "entity_idx": pa.int32(),
-                        "etype": pa.string(), "name": pa.string(),
-                        "word_count": pa.int64(), "status": pa.string()}
-            for f in JSONLD_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    return _core_pages(df, payload_col, passthrough, JSONLD_RESULT_FIELDS,
+                       extract_jsonld, many=True)
 
 
 HTTP_EQUIV_RESULT_FIELDS = [
@@ -324,36 +351,8 @@ def http_equiv_pages(
     redirect target; extracted by ``extractor.core.extract_http_equiv``.
     One-to-ONE per page (unlike the jsonld/microdata kernels), same
     Arrow discipline: one batched pass, payload never shuffles."""
-    from ocr_spark.extractor.core import extract_http_equiv
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + HTTP_EQUIV_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            fields = {f.name: [] for f in HTTP_EQUIV_RESULT_FIELDS}
-            for payload in payloads:
-                row = extract_http_equiv(
-                    payload if payload is not None else b"")
-                for k in fields:
-                    fields[k].append(row[k])
-            arrays = [batch.column(i) for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"html_lang": pa.string(),
-                        "content_language": pa.string(),
-                        "refresh_delay": pa.int32(),
-                        "refresh_url": pa.string()}
-            for f in HTTP_EQUIV_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    return _core_pages(df, payload_col, passthrough,
+                       HTTP_EQUIV_RESULT_FIELDS, extract_http_equiv)
 
 
 REL_LINK_RESULT_FIELDS = [
@@ -377,37 +376,8 @@ def rel_links_pages(
     Same Arrow discipline as the jsonld/microdata kernels: one batched
     pass, passthrough repeated per emitted row, the binary payload
     never shuffles."""
-    from ocr_spark.extractor.core import extract_rel_links
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + REL_LINK_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            idx: list[int] = []
-            fields = {f.name: [] for f in REL_LINK_RESULT_FIELDS}
-            for rowno, payload in enumerate(payloads):
-                for row in extract_rel_links(
-                        payload if payload is not None else b""):
-                    idx.append(rowno)
-                    for k in fields:
-                        fields[k].append(row[k])
-            arrays = [batch.column(i).take(pa.array(idx, pa.int64()))
-                      for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"link_idx": pa.int32(), "rel": pa.string(),
-                        "href": pa.string()}
-            for f in REL_LINK_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    return _core_pages(df, payload_col, passthrough,
+                       REL_LINK_RESULT_FIELDS, extract_rel_links, many=True)
 
 
 HREFLANG_RESULT_FIELDS = [
@@ -431,37 +401,8 @@ def hreflang_pages(
     Same Arrow discipline as the rel-link kernel: one batched pass,
     passthrough repeated per emitted row, the binary payload never
     shuffles."""
-    from ocr_spark.extractor.core import extract_hreflang
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + HREFLANG_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            idx: list[int] = []
-            fields = {f.name: [] for f in HREFLANG_RESULT_FIELDS}
-            for rowno, payload in enumerate(payloads):
-                for row in extract_hreflang(
-                        payload if payload is not None else b""):
-                    idx.append(rowno)
-                    for k in fields:
-                        fields[k].append(row[k])
-            arrays = [batch.column(i).take(pa.array(idx, pa.int64()))
-                      for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"link_idx": pa.int32(), "hreflang": pa.string(),
-                        "href": pa.string()}
-            for f in HREFLANG_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    return _core_pages(df, payload_col, passthrough,
+                       HREFLANG_RESULT_FIELDS, extract_hreflang, many=True)
 
 
 PUBLISH_DATE_RESULT_FIELDS = [
@@ -490,35 +431,8 @@ def publish_date_pages(
     Scale: the binary payload never shuffles (kernel is a map), the
     fallback is whole-stage-codegen'd, and the output is a skinny
     (url, date) projection ready for freshness joins."""
-    from ocr_spark.extractor.core import extract_publish_date
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + PUBLISH_DATE_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            fields = {f.name: [] for f in PUBLISH_DATE_RESULT_FIELDS}
-            for payload in payloads:
-                row = extract_publish_date(
-                    payload if payload is not None else b"")
-                for k in fields:
-                    fields[k].append(row[k])
-            arrays = [batch.column(i) for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"source": pa.string(),
-                        "published_raw": pa.string(),
-                        "published": pa.date32()}
-            for f in PUBLISH_DATE_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    marked = df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    marked = _core_pages(df, payload_col, passthrough,
+                         PUBLISH_DATE_RESULT_FIELDS, extract_publish_date)
     pat = r"/(\d{4})/(\d{2})/(\d{2})/"
     g = [F.regexp_extract(F.col(url_col), pat, i) for i in (1, 2, 3)]
     url_date = F.try_to_date(
@@ -557,38 +471,9 @@ def meta_kv_pages(
     (:func:`social_cards`); extracted by ``extractor.core.
     extract_meta_kv``.  Same Arrow discipline as the rel-link kernel:
     one batched pass, the binary payload never shuffles."""
-    from ocr_spark.extractor.core import extract_meta_kv
-
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + META_KV_RESULT_FIELDS
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            idx: list[int] = []
-            fields = {f.name: [] for f in META_KV_RESULT_FIELDS}
-            for rowno, payload in enumerate(payloads):
-                for row in extract_meta_kv(
-                        payload if payload is not None else b"",
-                        prefixes):
-                    idx.append(rowno)
-                    for k in fields:
-                        fields[k].append(row[k])
-            arrays = [batch.column(i).take(pa.array(idx, pa.int64()))
-                      for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"idx": pa.int32(), "key": pa.string(),
-                        "content": pa.string()}
-            for f in META_KV_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    return _core_pages(df, payload_col, passthrough, META_KV_RESULT_FIELDS,
+                       partial(extract_meta_kv, prefixes=prefixes),
+                       many=True)
 
 
 def social_cards(kv: DataFrame, ids: DataFrame,
@@ -655,38 +540,14 @@ def extract_microdata_pages(
     pass (no per-row Python dispatch), the binary payload never
     shuffles, and orphaned itemprops come back as ``orphan_prop`` ROWS
     rather than exceptions."""
-    from ocr_spark.extractor.core import extract_microdata
+    return _core_pages(df, payload_col, passthrough,
+                       MICRODATA_RESULT_FIELDS, extract_microdata, many=True)
 
-    cols = list(passthrough) + [payload_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + MICRODATA_RESULT_FIELDS
-    )
 
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            idx: list[int] = []
-            fields = {f.name: [] for f in MICRODATA_RESULT_FIELDS}
-            for rowno, payload in enumerate(payloads):
-                for row in extract_microdata(
-                        payload if payload is not None else b""):
-                    idx.append(rowno)
-                    for k in fields:
-                        fields[k].append(row[k])
-            arrays = [batch.column(i).take(pa.array(idx, pa.int64()))
-                      for i in range(len(passthrough))]
-            names = list(passthrough)
-            pa_types = {"item_idx": pa.int32(), "item_type": pa.string(),
-                        "prop": pa.string(), "value": pa.string(),
-                        "status": pa.string()}
-            for f in MICRODATA_RESULT_FIELDS:
-                arrays.append(pa.array(fields[f.name], pa_types[f.name]))
-                names.append(f.name)
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+CHARSET_RESULT_FIELDS = [
+    T.StructField("codec", T.StringType(), True),
+    T.StructField("text", T.StringType(), True),
+]
 
 
 def sniff_charsets(
@@ -705,32 +566,9 @@ def sniff_charsets(
     kernel pass (no per-row Python dispatch); emits the detected
     ``codec`` plus the decoded ``text`` (replacement-char policy, never
     fails) so downstream ops are bytes-free."""
-    from ocr_spark.extractor.core import decode_html
+    def row_fn(payload):
+        text, codec = decode_html(b"" if payload is None else payload)
+        return codec, text
 
-    cols = list(passthrough) + [payload_col]
-    out_fields = [T.StructField("codec", T.StringType()),
-                  T.StructField("text", T.StringType())]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + out_fields
-    )
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            payloads = batch.column(len(cols) - 1).to_pylist()
-            codecs, texts = [], []
-            for payload in payloads:
-                text, codec = decode_html(payload if payload is not None
-                                          else b"")
-                codecs.append(codec)
-                texts.append(text)
-            arrays = [batch.column(i) for i in range(len(passthrough))]
-            names = list(passthrough)
-            arrays.append(pa.array(codecs, pa.string()))
-            names.append("codec")
-            arrays.append(pa.array(texts, pa.string()))
-            names.append("text")
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    return map_payloads(df, payload_col, passthrough, CHARSET_RESULT_FIELDS,
+                        row_fn)

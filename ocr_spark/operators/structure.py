@@ -11,8 +11,8 @@ need the STRUCTURE kept instead:
   instruction-tuning corpora store pages in.
 
 Both run as ONE Arrow-batched kernel pass over the binary html
-column (``mapInArrow`` — the html never shuffles, there is no per-row
-Python UDF dispatch), reusing the charset sniffing of
+column (``operators.extract.map_payloads`` — the html never shuffles,
+there is no per-row Python UDF dispatch), reusing the charset sniffing of
 ``extractor.core.decode_html``.  Parsers are the same stdlib
 ``html.parser`` stack as extraction — tolerant of unclosed tags.
 
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ocr_spark.extractor.core import decode_html
+from ocr_spark.operators.extract import map_payloads
 
 __all__ = ["parse_tables", "extract_tables", "to_markdown", "html_markdown",
            "table_records"]
@@ -150,37 +151,9 @@ def extract_tables(df: DataFrame, html_col: str = "html",
     (a cell string + 3 ints), so even table-heavy pages expand to far
     fewer bytes than their html.  Pages without tables emit nothing.
     """
-    cols = [*passthrough, html_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough] + _TABLE_SCHEMA_EXTRA)
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            htmls = batch.column(len(cols) - 1).to_pylist()
-            idx, ti, ri, ci, hdr, txt = [], [], [], [], [], []
-            for i, h in enumerate(htmls):
-                if h is None:
-                    continue
-                for t, r, c, is_th, cell in parse_tables(h):
-                    idx.append(i)
-                    ti.append(t)
-                    ri.append(r)
-                    ci.append(c)
-                    hdr.append(is_th)
-                    txt.append(cell)
-            take = pa.array(idx, pa.int64())
-            arrays = [batch.column(j).take(take)
-                      for j in range(len(passthrough))]
-            arrays += [pa.array(ti, pa.int32()), pa.array(ri, pa.int32()),
-                       pa.array(ci, pa.int32()), pa.array(hdr, pa.bool_()),
-                       pa.array(txt, pa.string())]
-            yield pa.RecordBatch.from_arrays(
-                arrays, list(passthrough)
-                + ["table_idx", "row_idx", "col_idx", "is_header", "cell"])
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    return map_payloads(df, html_col, passthrough, _TABLE_SCHEMA_EXTRA,
+                        lambda h: () if h is None else parse_tables(h),
+                        many=True)
 
 
 # ---------------------------------------------------------------------------
@@ -413,23 +386,9 @@ def html_markdown(df: DataFrame, html_col: str = "html",
                   passthrough: tuple[str, ...] = ("url",)) -> DataFrame:
     """Pages -> ``passthrough + (markdown string)`` in one Arrow-batched
     narrow pass (same zero-shuffle shape as :func:`extract_tables`)."""
-    cols = [*passthrough, html_col]
-    out_schema = T.StructType(
-        [df.schema[c] for c in passthrough]
-        + [T.StructField("markdown", T.StringType(), True)])
-
-    def kernel(batches):
-        import pyarrow as pa  # executor-side import
-
-        for batch in batches:
-            htmls = batch.column(len(cols) - 1).to_pylist()
-            md = [None if h is None else to_markdown(h) for h in htmls]
-            arrays = [batch.column(j) for j in range(len(passthrough))]
-            arrays.append(pa.array(md, pa.string()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, list(passthrough) + ["markdown"])
-
-    return df.select(*cols).mapInArrow(kernel, schema=out_schema)
+    return map_payloads(df, html_col, passthrough,
+                        [T.StructField("markdown", T.StringType(), True)],
+                        lambda h: (None if h is None else to_markdown(h),))
 
 
 def table_records(cells, id_col: str = "doc_id",

@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 __all__ = ["Catalog", "Table"]
 
@@ -77,16 +78,11 @@ class Table:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        type_map = {
-            T.StringType(): pa.string(),
-            T.IntegerType(): pa.int32(),
-            T.LongType(): pa.int64(),
-            # isAdjustedToUTC=true so Spark reads TimestampType (ltz),
-            # same as its own written timestamps
-            T.TimestampType(): pa.timestamp("us", tz="UTC"),
-        }
+        # TimestampType maps to timestamp[us, tz=UTC]: isAdjustedToUTC=true,
+        # so Spark reads it back as TimestampType (ltz), same as its own
+        # written timestamps
         arrow_schema = pa.schema(
-            [(f.name, type_map[f.dataType]) for f in schema.fields]
+            [(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
         )
         cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
         table = pa.Table.from_arrays(

@@ -2281,3 +2281,138 @@ class TestRecordLinkage:
         }
         # (1,11)/(2,10) score below t_possible and are dropped;
         # 13 shares no block and never becomes a candidate
+
+
+# --- per-page field kernels vs. their extractor functions -----------------
+
+_FIELD_PAGES = [
+    b'<html lang="en"><head><title>Story</title>'
+    b'<meta name="description" content="About &amp; more">'
+    b'<link rel="canonical" href="https://a.ex/story">'
+    b'<meta property="og:title" content="OG Story">'
+    b'<meta property="og:image" content="https://a.ex/i.png">'
+    b'<meta name="twitter:card" content="summary">'
+    b'<meta property="article:published_time" content="2021-05-06T08:00:00Z">'
+    b'<script type="application/ld+json">{"@type":"Article","headline":'
+    b'"H","wordCount":120,"datePublished":"2020-02-03"}</script>'
+    b'<script type="application/ld+json">{"@type": broken</script>'
+    b'</head><body><h1>Story</h1><p>Body text.</p></body></html>',
+    b'<html lang="de"><head><meta http-equiv="refresh" '
+    b'content="5; url=https://a.ex/next">'
+    b'<meta http-equiv="content-language" content="de-DE">'
+    b'<link rel="alternate" hreflang="en" href="https://a.ex/en">'
+    b'<link rel="alternate" hreflang="x-default" href="https://a.ex/">'
+    b'<link rel="next" href="https://a.ex/p2"></head>'
+    b'<body><a rel="prev nofollow" href="/p0">back</a>'
+    b'<time datetime="2019-01-02">Jan 2</time></body></html>',
+    b'<html><body><div itemscope itemtype="https://schema.org/Product">'
+    b'<span itemprop="name">Anvil</span>'
+    b'<div itemprop="offers" itemscope itemtype="https://schema.org/Offer">'
+    b'<meta itemprop="price" content="7.00"></div></div>'
+    b'<p itemprop="stray">orphan</p>'
+    b'<table><tr><th>k</th><th>v</th></tr><tr><td>a</td><td>1</td></tr>'
+    b'<tr><td>b</td></tr></table><ul><li>one</li><li><b>two</b></li></ul>'
+    b'</body></html>',
+    b"",
+    None,
+    b"\xef\xbb\xbf<html><body><p>bom caf\xc3\xa9</p></body></html>",
+    b'<html><head><meta charset="windows-1252"></head>'
+    b"<body><p>caf\xe9 \x93quoted\x94</p></body></html>",
+    b"<html><body><p>latin-1 caf\xe9 na\xefve</p>"
+    b"<table><tr><td>x</td><td>y</td></tr></table></body></html>",
+    b"<p>no head, no fields</p>",
+]
+
+
+def _field_operator_cases():
+    from pyspark.sql import types as T
+
+    from ocr_spark.extractor import core
+    from ocr_spark.operators import extract as ex
+    from ocr_spark.operators import structure as st
+
+    def one(fn):
+        return lambda p: [fn(b"" if p is None else p)]
+
+    def many(fn):
+        return lambda p: fn(b"" if p is None else p)
+
+    return {
+        "meta": (ex.extract_meta_pages, ex.META_RESULT_FIELDS,
+                 one(core.extract_meta)),
+        "jsonld": (ex.extract_jsonld_pages, ex.JSONLD_RESULT_FIELDS,
+                   many(core.extract_jsonld)),
+        "http_equiv": (ex.http_equiv_pages, ex.HTTP_EQUIV_RESULT_FIELDS,
+                       one(core.extract_http_equiv)),
+        "rel_links": (ex.rel_links_pages, ex.REL_LINK_RESULT_FIELDS,
+                      many(core.extract_rel_links)),
+        "hreflang": (ex.hreflang_pages, ex.HREFLANG_RESULT_FIELDS,
+                     many(core.extract_hreflang)),
+        "publish_date": (ex.publish_date_pages,
+                         ex.PUBLISH_DATE_RESULT_FIELDS,
+                         one(core.extract_publish_date)),
+        "meta_kv": (ex.meta_kv_pages, ex.META_KV_RESULT_FIELDS,
+                    many(core.extract_meta_kv)),
+        "microdata": (ex.extract_microdata_pages, ex.MICRODATA_RESULT_FIELDS,
+                      many(core.extract_microdata)),
+        "charsets": (ex.sniff_charsets,
+                     [T.StructField("codec", T.StringType(), True),
+                      T.StructField("text", T.StringType(), True)],
+                     lambda p: [dict(zip(("text", "codec"), core.decode_html(
+                         b"" if p is None else p)))]),
+        "tables": (st.extract_tables,
+                   [T.StructField("table_idx", T.IntegerType(), False),
+                    T.StructField("row_idx", T.IntegerType(), False),
+                    T.StructField("col_idx", T.IntegerType(), False),
+                    T.StructField("is_header", T.BooleanType(), False),
+                    T.StructField("cell", T.StringType(), False)],
+                   lambda p: [] if p is None else [
+                       dict(zip(("table_idx", "row_idx", "col_idx",
+                                 "is_header", "cell"), c))
+                       for c in st.parse_tables(p)]),
+        "markdown": (st.html_markdown,
+                     [T.StructField("markdown", T.StringType(), True)],
+                     lambda p: [{"markdown": None if p is None
+                                 else st.to_markdown(p)}]),
+    }
+
+
+@pytest.mark.parametrize("name", ["meta", "jsonld", "http_equiv", "rel_links",
+                                  "hreflang", "publish_date", "meta_kv",
+                                  "microdata", "charsets", "tables",
+                                  "markdown"])
+def test_field_operator_matches_extractor(spark, name):
+    """Every per-page field operator returns the passthrough fields plus
+    its declared fields, and exactly the rows its extractor function
+    gives per page in plain Python.  One partition in batches of 2 rows
+    puts the field-less pages 8 and 9 in one batch, so one-to-many
+    operators see batches that emit no rows; NULL and empty payloads
+    keep each operator's own policy."""
+    from pyspark.sql import types as T
+
+    op, fields, oracle = _field_operator_cases()[name]
+    rows = [(f"https://f.ex/{i}", i, p) for i, p in enumerate(_FIELD_PAGES)]
+    rows.append(("https://f.ex/2018/03/05/dated", len(rows), b"<p>x</p>"))
+    df = spark.createDataFrame(
+        rows, "url string, doc_id long, html binary").coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        out = op(df, passthrough=("url", "doc_id"))
+        got = [tuple(r) for r in out.collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert out.schema == T.StructType(
+        [df.schema["url"], df.schema["doc_id"]] + list(fields))
+    names = [f.name for f in fields]
+    want = [(url, doc_id, *(d[k] for k in names))
+            for url, doc_id, p in rows for d in oracle(p)]
+    if name == "publish_date":
+        # the /YYYY/MM/DD/ url fallback is JVM-side, not the kernel's
+        by_url = {r[1] for r in got if r[2] == "url"}
+        assert by_url == {len(rows) - 1}
+        got = [r for r in got if r[1] not in by_url]
+        want = [r for r in want if r[1] not in by_url]
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    assert any(v is not None for r in want for v in r[2:])
