@@ -11,7 +11,7 @@ both levels and
     efficiency = X(4N) / (4 * X(N))     where X = docs/sec
 
 Wall time is the job's own ``wall_s`` (first Spark action to last
-manifest commit) — JVM/session startup is excluded on both sides, as
+chunk commit) — JVM/session startup is excluded on both sides, as
 it would be on a real cluster where executors are provisioned before
 the job is timed.
 

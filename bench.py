@@ -7,7 +7,7 @@ Prints ONE JSON line:
    "extract_docs_per_s": ..., "extract_gb_per_s": ...}
 
 The extraction headline runs the full pipeline (dedup, salt,
-repartition, Arrow extract, write, lineage, manifest) over a seeded
+repartition, Arrow extract, write, lineage commit) over a seeded
 synthetic pages corpus; corpus parquet is cached under .cache/.
 """
 

@@ -3,7 +3,7 @@ reference's request pipeline (SURVEY.md §3.4) at table scale.
 
     scan pages -> drop committed buckets (resume) -> keep-latest dedup
       -> bucket/salt -> repartition -> Arrow extract -> write by bucket
-      -> lineage read back on the driver -> commit manifest
+      -> lineage read back on the driver -> commit (one lineage append)
 
 Scale design notes (the parts the north rule grades):
 
@@ -24,8 +24,8 @@ Scale design notes (the parts the north rule grades):
   a catastrophic file-count explosion on a real cluster (10k tasks x
   4k buckets = 40M files per run).
 * **bucket = pmod(xxhash64(url), B)** is the resume / layout unit: the
-  output is ``partitionBy(bucket)`` and the checkpoint manifest is
-  keyed ``(run_id, bucket)``.  B is a deploy-time knob (64 here; O(4k)
+  output is ``partitionBy(bucket)`` and the commit record (a lineage
+  row) is keyed ``(run_id, bucket)``.  B is a deploy-time knob (64 here; O(4k)
   at 10^12 docs so a bucket stays ~25M docs).
 * **salt** spreads compute inside a bucket: an independent second hash
   of the url, with a larger fan-out for documents from *hot hosts*
@@ -33,10 +33,12 @@ Scale design notes (the parts the north rule grades):
   sample, you don't scan, to find skew).  This is explicit because the
   skew is in UDF compute time, which AQE's shuffle-size-based skew
   handling cannot see (SURVEY.md §4.2).
-* **Idempotent resume**: completed buckets are filtered out by a literal
-  ``isin`` over the manifest's bucket ids (read on the driver — the
-  manifest is tiny); interrupted buckets are rewritten in place through
-  dynamic partition overwrite.  Run totals sum one lineage row per
+* **Idempotent resume**: each chunk commits by one atomic append of a
+  lineage row per bucket, counters included, strictly after its data
+  landed.  Completed buckets are filtered out by a literal ``isin`` over
+  the run's lineage bucket ids (read on the driver — the table is
+  tiny); interrupted buckets are rewritten in place through dynamic
+  partition overwrite.  Run totals sum the run's lineage rows, one per
   committed bucket, so fresh and resumed runs count alike.
 """
 
@@ -211,8 +213,8 @@ def run_extraction_job(
 
     Output layout under ``out_root``:
       pages_extracted/bucket=N/*.parquet   (url, warc_ts, lang, text, spans, ...)
-      lineage/*.parquet                    (run_id, bucket, counters)
-      manifest/*.parquet                   (run_id, bucket, committed_at)
+      lineage/*.parquet                    (run_id, bucket, counters,
+                                            committed_at): the commit log
     """
     cfg = cfg or JobConfig()
     if isinstance(pages, str):
@@ -225,7 +227,7 @@ def run_extraction_job(
     df = prepare_pages(pages, cfg.n_buckets)
 
     # resume: drop buckets this run already committed (a literal filter;
-    # the manifest is tiny by design and read on the driver)
+    # the lineage table is tiny by design and read on the driver)
     done_ids = cat.committed_bucket_ids(cfg.run_id)
     if done_ids:
         df = df.filter(~F.col("bucket").isin(done_ids))
@@ -299,13 +301,11 @@ def run_extraction_job(
         # landed, with pyarrow on the driver — no Spark job after the write
         t0 = time.perf_counter()
         chunk_rows = cat.landed_counters(out_table, cfg.run_id, bucket_ids, wall_ms)
-        if chunk_rows:
-            cat.lineage().append_rows(chunk_rows, LINEAGE_SCHEMA)
         phases["lineage_s"] = round(
             phases.get("lineage_s", 0.0) + time.perf_counter() - t0, 3)
-        # write-then-commit ordering: manifest rows land strictly after data
+        # the commit: one atomic append, strictly after the data landed
         t0 = time.perf_counter()
-        cat.commit_buckets(cfg.run_id, bucket_ids)
+        cat.lineage().append_rows(chunk_rows, LINEAGE_SCHEMA)
         phases["commit_s"] = round(
             phases.get("commit_s", 0.0) + time.perf_counter() - t0, 3)
         n_chunks += 1

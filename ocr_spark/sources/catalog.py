@@ -2,12 +2,12 @@
 
 The sandbox has no Iceberg runtime jars (SURVEY.md §7.0), so this thin
 layer implements the table properties the north rule actually
-exercises — identity, schema-on-read, bucket partition layout, append,
-dynamic-partition overwrite, and a manifest/snapshot record for
-checkpoint-resume — over plain Parquet paths.  On a real cluster with
-``spark.jars.packages=org.apache.iceberg:...`` the same call sites swap
-to ``spark.read.table`` / ``df.writeTo(...).append()`` via the
-``use_iceberg`` flag; nothing else in the engine changes.
+exercises — identity, schema-on-read, bucket partition layout, atomic
+append, dynamic-partition overwrite, and one commit record per bucket
+for checkpoint-resume (the ``lineage`` table) — over plain Parquet
+paths.  On a real cluster the call sites map onto
+``spark.read.table`` / ``df.writeTo(...).append()`` of Iceberg tables;
+nothing else in the engine changes.
 """
 
 from __future__ import annotations
@@ -21,14 +21,6 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 __all__ = ["Catalog", "Table"]
 
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
-)
-
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -39,6 +31,7 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("bytes_in", T.LongType(), True),
         T.StructField("bytes_out", T.LongType(), True),
         T.StructField("wall_ms", T.LongType(), True),
+        T.StructField("committed_at", T.TimestampType(), True),
     ]
 )
 
@@ -55,9 +48,6 @@ class Table:
         return any(f.endswith(".parquet")
                    for _root, _dirs, files in os.walk(self.path) for f in files)
 
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
-
     def read_or_empty(self, schema: T.StructType) -> DataFrame:
         if self.exists():
             return self.spark.read.schema(schema).parquet(self.path)
@@ -67,12 +57,15 @@ class Table:
             [F.lit(None).cast(f.dataType).alias(f.name) for f in schema])
 
     def append_rows(self, rows: list[tuple], schema: T.StructType) -> None:
-        """Driver-side append for TINY tables (manifest/lineage: a few
-        rows per chunk).  A Spark write job costs 1-3 s of serial tail
+        """Atomic driver-side append for TINY tables (lineage: a few rows
+        per chunk).  A Spark write job costs 1-3 s of serial tail
         (scheduling + committer temp-dir renames) to land a 1 KB file;
         writing the parquet file directly with pyarrow is milliseconds
-        and reads back identically through spark.read.parquet.  Data
-        tables keep the distributed write path."""
+        and reads back identically through spark.read.parquet.  The file
+        is written under a hidden temp name and renamed into place, so a
+        crash mid-write leaves only a ``.``-prefixed file that Spark,
+        pyarrow and ``exists`` all skip.  Data tables keep the
+        distributed write path."""
         import uuid
 
         import pyarrow as pa
@@ -91,9 +84,10 @@ class Table:
             schema=arrow_schema,
         )
         os.makedirs(self.path, exist_ok=True)
-        pq.write_table(
-            table, os.path.join(self.path, f"part-{uuid.uuid4().hex}.parquet")
-        )
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.path, name))
 
     def overwrite_partitions(self, df: DataFrame,
                              partition_by: tuple[str, ...]) -> None:
@@ -106,7 +100,7 @@ class Table:
 
 
 class Catalog:
-    """A directory of tables + the checkpoint manifest / lineage pair
+    """A directory of tables + the per-bucket commit records (``lineage``)
     used for idempotent resume (FIXTURES.md §3)."""
 
     def __init__(self, spark: SparkSession, root: str):
@@ -148,10 +142,7 @@ class Catalog:
         spec and re-introduce the exchange."""
         return self.spark.table(name)
 
-    # -- checkpoint manifest ------------------------------------------------
-    def manifest(self) -> Table:
-        return self.table("manifest")
-
+    # -- commit records ------------------------------------------------
     def lineage(self) -> Table:
         return self.table("lineage")
 
@@ -159,29 +150,32 @@ class Catalog:
         """Buckets already committed for this run (anti-join target).
         The job reads ``committed_bucket_ids``; this DataFrame form stays
         because perfbench times and traces it."""
-        m = self.manifest().read_or_empty(MANIFEST_SCHEMA)
-        return m.filter(F.col("run_id") == run_id).select("bucket").distinct()
+        lin = self.lineage().read_or_empty(LINEAGE_SCHEMA)
+        return lin.filter(F.col("run_id") == run_id).select("bucket")
 
     def committed_bucket_ids(self, run_id: str) -> list[int]:
         """``committed_buckets`` as a sorted list, read on the driver
-        with pyarrow, the way ``append_rows`` wrote it: the manifest is
+        with pyarrow, the way ``append_rows`` wrote it: the table is
         tiny by design, and a Spark job here costs more than the read."""
         import pyarrow.parquet as pq
 
-        m = self.manifest()
-        if not m.exists():
+        lin = self.lineage()
+        if not lin.exists():
             return []
-        t = pq.read_table(m.path, columns=["bucket"],
+        t = pq.read_table(lin.path, columns=["bucket"],
                           filters=[("run_id", "=", run_id)])
-        return sorted(set(t.column("bucket").to_pylist()))
+        return sorted(t.column("bucket").to_pylist())
 
     def landed_counters(self, table: Table, run_id: str, buckets: list[int],
                         wall_ms: int) -> list[tuple]:
-        """Lineage rows for the ``bucket=N/`` dirs of ``table`` that just
-        landed, read back on the driver with pyarrow one batch of the
-        counter columns at a time.  A null status counts in neither
-        ``n_ok`` nor ``n_err``; a bucket with no rows gets no row; like a
-        Spark scan, it skips ``_``/``.``-prefixed files."""
+        """The chunk's commit record: one lineage row per bucket, counting
+        the ``bucket=N/`` dirs of ``table`` that just landed, read back on
+        the driver with pyarrow one batch of the counter columns at a
+        time.  A null status counts in neither ``n_ok`` nor ``n_err``; a
+        bucket with no rows gets a row of zeros; like a Spark scan, it
+        skips ``_``/``.``-prefixed files."""
+        from datetime import datetime, timezone
+
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -192,49 +186,31 @@ class Catalog:
                     pc.sum(t["bytes_in"], min_count=0).as_py(),
                     pc.sum(t["bytes_out"], min_count=0).as_py())
 
+        now = datetime.now(timezone.utc)
         rows = []
         for b in buckets:
             d = os.path.join(table.path, f"bucket={b}")
-            parts = []
+            sums = (0,) * 5
             for f in sorted(os.listdir(d)) if os.path.isdir(d) else ():
                 if f.startswith(("_", ".")):
                     continue
                 with pq.ParquetFile(os.path.join(d, f)) as pf:
-                    parts += map(counters, pf.iter_batches(
-                        columns=["status", "bytes_in", "bytes_out"]))
-            sums = [sum(c) for c in zip(*parts)]
-            if sums and sums[0]:
-                rows.append((run_id, b, *sums, wall_ms))
+                    for batch in pf.iter_batches(
+                            columns=["status", "bytes_in", "bytes_out"]):
+                        sums = tuple(map(sum, zip(sums, counters(batch))))
+            rows.append((run_id, b, *sums, wall_ms, now))
         return rows
 
     def run_totals(self, run_id: str) -> dict:
-        """The lineage counters of ``run_id`` summed over the buckets the
-        manifest commits, one row per bucket.  A crash between a chunk's
-        lineage append and its commit leaves rows that the resumed run
-        appends again, equal apart from ``wall_ms``; the smallest is kept."""
+        """The lineage counters of ``run_id`` summed over its committed
+        buckets: one row each, so fresh and resumed runs count alike."""
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        committed = self.committed_bucket_ids(run_id)
+        keys = ("n_docs", "n_ok", "n_err", "bytes_in", "bytes_out")
         lin = self.lineage()
-        rows = (pq.read_table(lin.path, filters=[("run_id", "=", run_id),
-                                                 ("bucket", "in", committed)])
-                .to_pylist() if committed and lin.exists() else [])
-        kept: dict[int, dict] = {}
-        for r in sorted(rows, key=lambda r: r["wall_ms"]):
-            kept.setdefault(r["bucket"], r)
-        return {k: sum(r[k] for r in kept.values()) if kept else None
-                for k in ("n_docs", "n_ok", "n_err", "bytes_in", "bytes_out")}
-
-    def commit_buckets(self, run_id: str, buckets: list[int]) -> None:
-        """Append manifest rows — the atomic last step per chunk: data
-        files land first, manifest rows only after (write-then-commit
-        ordering, SURVEY.md §4.2).  Driver-side pyarrow write: no Spark
-        job in the commit path."""
-        if not buckets:
-            return
-        from datetime import datetime, timezone
-
-        now = datetime.now(timezone.utc)
-        self.manifest().append_rows(
-            [(run_id, int(b), now) for b in buckets], MANIFEST_SCHEMA
-        )
+        if not lin.exists():
+            return dict.fromkeys(keys)
+        t = pq.read_table(lin.path, columns=list(keys),
+                          filters=[("run_id", "=", run_id)])
+        return {k: pc.sum(t[k]).as_py() for k in keys}

@@ -8,12 +8,12 @@ per the north rule; this module shows the engine's operators are
 streaming-clean:
 
 * the extract stage (``operators.extract.extract_pages``) is reused
-  verbatim — ``mapInPandas`` works unchanged on streaming DataFrames;
+  verbatim — ``mapInArrow`` works unchanged on streaming DataFrames;
 * late data is handled with ``withWatermark('warc_ts', ...)`` feeding
   tumbling-window lineage counters (the streaming analogue of the
   per-bucket lineage table);
-* sink is either a parquet append stream or ``foreachBatch`` into the
-  same Catalog tables the batch job writes (micro-batch = chunk).
+* the sink is a checkpointed parquet append stream
+  (``run_stream_to_parquet``).
 
 Everything runs with ``trigger(availableNow=True)`` in tests: process
 whatever is in the source directory, then stop — the bounded-stream

@@ -2,7 +2,7 @@
 
 The Spark job's extracted text must be BYTE-identical, per url, to the
 pure-Python oracle applied row-by-row — across partitioning choices —
-and the checkpoint manifest must make reruns idempotent.
+and the per-bucket commit records must make reruns idempotent.
 """
 
 import hashlib
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from ocr_spark.data.synth import gen_pages
 from ocr_spark.extractor.core import extract_bytes
 from ocr_spark.plans.pipeline import JobConfig, prepare_pages, run_extraction_job
-from ocr_spark.sources.catalog import MANIFEST_SCHEMA, Catalog, Table
+from ocr_spark.sources.catalog import Catalog, Table
 
 
 def oracle_expected(rows):
@@ -74,9 +74,9 @@ def test_e2e_byte_equality_vs_oracle(spark, pages_parquet, tmp_path, expected):
 
 def test_fresh_single_chunk_run_job_count(spark, pages_parquet, tmp_path):
     """Pin the Spark jobs of a fresh single-chunk run.  Reading the
-    (absent) manifest and salting by the hot-host set launch none: the
-    manifest is read with pyarrow on the driver and the hot set is a
-    literal.  A row-less Python job (``createDataFrame`` of driver-held
+    (absent) commit records and salting by the hot-host set launch none:
+    the lineage table is read with pyarrow on the driver and the hot set
+    is a literal.  A row-less Python job (``createDataFrame`` of driver-held
     rows costs a Python task per core) would show up here as extra jobs."""
     sc = spark.sparkContext
     sc.setJobGroup("job_count", "fresh single-chunk run")
@@ -170,39 +170,6 @@ def test_resume_skips_committed_and_is_idempotent(spark, pages_parquet, tmp_path
     assert df.count() == df.select("url").distinct().count()
 
 
-def test_resume_after_partial_run(spark, pages_parquet, tmp_path):
-    """Simulate a kill after k buckets: pre-seed the manifest with a
-    partial commit, run, and require the union to be complete + correct."""
-    out_full = str(tmp_path / "full")
-    run_extraction_job(spark, pages_parquet, out_full,
-                       JobConfig(run_id="full", n_buckets=8))
-    full_texts = _texts(spark, out_full)
-
-    out = str(tmp_path / "partial")
-    # first: run only a subset by chunking, interrupting after chunk 1 —
-    # emulate by running with chunk_buckets=4 and a wrapped exception
-    cat = Catalog(spark, out)
-    cfg = JobConfig(run_id="partial", n_buckets=8, chunk_buckets=4)
-    # run chunk 1 manually: commit buckets 0-3 via a restricted config
-    pages = spark.read.parquet(pages_parquet)
-    sub = prepare_pages(pages, 8).filter(F.col("bucket") < 4).drop("bucket", "host")
-    run_extraction_job(spark, sub, out, JobConfig(run_id="partial", n_buckets=8))
-    committed = sorted(r.bucket for r in cat.committed_buckets("partial").collect())
-    assert committed  # some buckets landed; 4-7 are empty but may commit
-    # wipe manifest rows for buckets >= 4 to simulate the kill
-    import shutil, os
-    m = cat.manifest().read().filter("bucket < 4")
-    rows = [(r.run_id, r.bucket, r.committed_at) for r in m.collect()]
-    shutil.rmtree(os.path.join(out, "manifest"))
-    cat.manifest().append_rows(rows, MANIFEST_SCHEMA)
-
-    # resume with the full input: only buckets 4-7 re-extract
-    stats = run_extraction_job(spark, pages_parquet, out,
-                               JobConfig(run_id="partial", n_buckets=8))
-    assert stats["resumed_buckets_skipped"] == 4
-    assert _texts(spark, out) == full_texts
-
-
 _COUNTERS = ("n_docs", "n_ok", "n_err", "bytes_in", "bytes_out")
 
 
@@ -214,16 +181,14 @@ def clean_chunked(spark, pages_parquet, tmp_path_factory):
     return stats, _texts(spark, out)
 
 
-def _fail_on_second_call(monkeypatch, cls, name, before):
-    """Make ``cls.name`` raise on its second call, before or after the
-    real call does its work."""
+def _fail_after_second_call(monkeypatch, cls, name):
+    """Make ``cls.name`` raise on its second call, after the real call
+    did its work."""
     real = getattr(cls, name)
     calls = []
 
     def wrapped(*args, **kwargs):
         calls.append(1)
-        if len(calls) == 2 and before:
-            raise RuntimeError(f"injected crash in {name}")
         out = real(*args, **kwargs)
         if len(calls) == 2:
             raise RuntimeError(f"injected crash after {name}")
@@ -232,44 +197,79 @@ def _fail_on_second_call(monkeypatch, cls, name, before):
     monkeypatch.setattr(cls, name, wrapped)
 
 
-@pytest.mark.parametrize("boundary", ["after_lineage", "after_write"])
+def _tear_second_parquet_write(monkeypatch):
+    """Make the second driver-side parquet write land only the first half
+    of its bytes where it writes, then raise: a crash mid-write."""
+    import io
+
+    import pyarrow.parquet as pq
+
+    real = pq.write_table
+    calls = []
+
+    def torn(table, where, *args, **kwargs):
+        calls.append(1)
+        if len(calls) != 2:
+            return real(table, where, *args, **kwargs)
+        buf = io.BytesIO()
+        real(table, buf, *args, **kwargs)
+        with open(where, "wb") as f:
+            f.write(buf.getvalue()[:len(buf.getvalue()) // 2])
+        raise RuntimeError("injected crash mid parquet write")
+
+    monkeypatch.setattr(pq, "write_table", torn)
+
+
+# chunks (of 3 buckets each) committed before the crash in the second
+_CHUNKS_COMMITTED = {"after_write": 1, "torn_commit": 1, "after_commit": 2}
+
+
+@pytest.mark.parametrize("boundary", list(_CHUNKS_COMMITTED))
 def test_resume_after_crash_at_chunk_boundary(spark, pages_parquet, tmp_path,
                                               monkeypatch, clean_chunked, boundary):
     """Crash in the second of three chunks, then resume with the same
-    run_id.  ``after_lineage`` fails the commit after the chunk's lineage
-    rows landed, so the resumed run appends a second row for each of its
-    buckets; ``after_write`` fails after the data write, before lineage.
-    Either way the totals count exactly what landed."""
+    run_id.  ``after_write`` fails after the chunk's data write, before
+    its commit; ``torn_commit`` leaves a truncated commit file behind and
+    fails; ``after_commit`` fails just after the commit landed.  Either
+    way the resumed run re-extracts exactly the uncommitted buckets, and
+    the totals count exactly what landed."""
     clean_stats, clean_texts = clean_chunked
+    committed = list(range(3 * _CHUNKS_COMMITTED[boundary]))
     out = str(tmp_path / "crash")
     cfg = JobConfig(run_id="crash", n_buckets=8, chunk_buckets=3)
-    if boundary == "after_lineage":
-        _fail_on_second_call(monkeypatch, Catalog, "commit_buckets", before=True)
+    if boundary == "after_write":
+        _fail_after_second_call(monkeypatch, Table, "overwrite_partitions")
+    elif boundary == "torn_commit":
+        _tear_second_parquet_write(monkeypatch)
     else:
-        _fail_on_second_call(monkeypatch, Table, "overwrite_partitions", before=False)
+        _fail_after_second_call(monkeypatch, Table, "append_rows")
     with pytest.raises(RuntimeError, match="injected crash"):
         run_extraction_job(spark, pages_parquet, out, cfg)
     monkeypatch.undo()
-    assert Catalog(spark, out).committed_bucket_ids("crash") == [0, 1, 2]
+    assert Catalog(spark, out).committed_bucket_ids("crash") == committed
 
     stats = run_extraction_job(spark, pages_parquet, out, cfg)
-    assert stats["resumed_buckets_skipped"] == 3 and stats["n_chunks"] == 2
+    assert stats["resumed_buckets_skipped"] == len(committed)
+    assert stats["n_chunks"] == 3 - _CHUNKS_COMMITTED[boundary]
     landed = spark.read.parquet(out + "/pages_extracted").count()
     assert stats["n_docs"] == landed == clean_stats["n_docs"]
     assert stats["n_ok"] + stats["n_err"] == stats["n_docs"]
     assert {k: stats[k] for k in _COUNTERS} == {k: clean_stats[k] for k in _COUNTERS}
     assert _texts(spark, out) == clean_texts
+    keys = spark.read.parquet(out + "/lineage").select("run_id", "bucket").collect()
+    assert sorted(map(tuple, keys)) == [("crash", b) for b in range(8)]
 
 
 def test_lineage_matches_spark_groupby(spark, pages_parquet, tmp_path):
     """The driver-side lineage rows equal a Spark ``groupBy("bucket")``
     over the landed table, on a multi-chunk run where half the buckets
-    receive no rows (those get no lineage row)."""
+    receive no rows: those commit a row of zeros, so a rerun skips them
+    like the others."""
     out = str(tmp_path / "lin")
     sub = (prepare_pages(spark.read.parquet(pages_parquet), 8)
            .filter(F.col("bucket") < 4).drop("bucket", "host"))
-    stats = run_extraction_job(spark, sub, out, JobConfig(
-        run_id="lin", n_buckets=8, chunk_buckets=3))
+    cfg = JobConfig(run_id="lin", n_buckets=8, chunk_buckets=3)
+    stats = run_extraction_job(spark, sub, out, cfg)
     assert stats["n_chunks"] == 3
     landed = spark.read.parquet(out + "/pages_extracted")
     oracle = {tuple(r) for r in landed.groupBy("bucket").agg(
@@ -277,10 +277,16 @@ def test_lineage_matches_spark_groupby(spark, pages_parquet, tmp_path):
         F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)),
         F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)),
         F.sum("bytes_in"), F.sum("bytes_out")).collect()}
-    lineage = {tuple(r) for r in spark.read.parquet(out + "/lineage")
+    lineage = [tuple(r) for r in spark.read.parquet(out + "/lineage")
                .filter(F.col("run_id") == "lin")
-               .select("bucket", *_COUNTERS).collect()}
-    assert lineage == oracle
-    assert {r[0] for r in lineage} == {0, 1, 2, 3}
+               .select("bucket", *_COUNTERS).collect()]
+    assert sorted(r[0] for r in lineage) == list(range(8))
+    assert {r for r in lineage if r[1]} == oracle
+    assert {r[0] for r in oracle} == {0, 1, 2, 3}
+    assert {r for r in lineage if not r[1]} == {(b, 0, 0, 0, 0, 0) for b in range(4, 8)}
     assert sum(r[3] for r in lineage) > 0  # the corpus has error genres
     assert stats["n_docs"] == sum(r[1] for r in lineage) == landed.count()
+
+    again = run_extraction_job(spark, sub, out, cfg)
+    assert again["resumed_buckets_skipped"] == 8 and again["n_chunks"] == 0
+    assert {k: again[k] for k in _COUNTERS} == {k: stats[k] for k in _COUNTERS}
