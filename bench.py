@@ -126,7 +126,7 @@ def main() -> None:
     t0 = time.perf_counter()
     stats = run_extraction_job(
         spark, corpus, out_root,
-        JobConfig(run_id="bench", n_buckets=CPUS * 2, with_spans=True),
+        JobConfig(run_id="bench", n_buckets=CPUS * 2),
     )
     timings["pages_pipeline"] = round(time.perf_counter() - t0, 3)
 

@@ -1,9 +1,14 @@
 """spark-submit entrypoint for the extraction engine.
 
 Cluster:
-    spark-submit --py-files engine.zip job.py \
+    spark-submit --py-files engine.zip \
+        --conf spark.sql.shuffle.partitions=8192 job.py \
         --input /lake/pages --output /lake/out --run-id R42 \
         --buckets 4096 --chunk-buckets 256
+
+The html exchange width is ``spark.sql.shuffle.partitions`` (raised when
+the sampled html bytes need more partitions); the job has no setting of
+its own for it.
 
 Local smoke:
     python job.py --synth 2000 --output /tmp/ocr_out
@@ -45,10 +50,7 @@ def main() -> None:
     ap.add_argument("--run-id", default="run0")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--chunk-buckets", type=int, default=0)
-    ap.add_argument("--parallelism", type=int, default=0)
     ap.add_argument("--all-pages", action="store_true")
-    ap.add_argument("--no-dedup", action="store_true")
-    ap.add_argument("--no-spans", action="store_true")
     ap.add_argument("--cores", type=int, default=0, help="local[N] cores")
     ap.add_argument("--make-zip", help="write engine.zip and exit")
     args = ap.parse_args()
@@ -81,10 +83,7 @@ def main() -> None:
         run_id=args.run_id,
         n_buckets=args.buckets,
         chunk_buckets=args.chunk_buckets,
-        parallelism=args.parallelism,
         all_pages=args.all_pages,
-        dedup=not args.no_dedup,
-        with_spans=not args.no_spans,
     )
     stats = run_extraction_job(spark, input_path, args.output, cfg)
     print(json.dumps(stats))

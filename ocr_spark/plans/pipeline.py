@@ -25,8 +25,11 @@ Scale design notes (the parts the north rule grades):
   4k buckets = 40M files per run).
 * **bucket = pmod(xxhash64(url), B)** is the resume / layout unit: the
   output is ``partitionBy(bucket)`` and the commit record (a lineage
-  row) is keyed ``(run_id, bucket)``.  B is a deploy-time knob (64 here; O(4k)
-  at 10^12 docs so a bucket stays ~25M docs).
+  row) is keyed ``(run_id, bucket)``.  B is ``JobConfig.n_buckets``
+  (``job.py --buckets``; 64 by default, O(4k) at 10^12 docs so a bucket
+  stays ~25M docs).  The exchange width P is not a job setting: it is
+  ``spark.sql.shuffle.partitions`` (``--conf spark.sql.shuffle.partitions=N``),
+  raised when the sampled html bytes need more partitions.
 * **salt** spreads compute inside a bucket: an independent second hash
   of the url, with a larger fan-out for documents from *hot hosts*
   (detected from a cheap sampled count/bytes aggregate — at 100 TB you
@@ -47,7 +50,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.extract import extract_pages
@@ -59,57 +62,36 @@ __all__ = ["JobConfig", "prepare_pages", "probe_skew", "with_salt",
 _HOST_RE = r"^[a-z][a-z0-9+.\-]*://([^/]+)"
 
 
+# salt fan-out per bucket: BASE_SALTS for every host, HOT_SALTS for hot ones
+BASE_SALTS = 4
+HOT_SALTS = 32
+# a host is hot at this many (sampled, scaled) docs or html bytes.  Weighing
+# by bytes as well as counts catches the giant-page-on-one-host skew pattern
+# (few huge docs, far below HOT_COUNT_THRESHOLD); the cost is that the
+# probe's sample scan reads the html column (parquet can't sample below the
+# scan).
+HOT_COUNT_THRESHOLD = 1000
+HOT_BYTES_THRESHOLD = 64 << 20
+SAMPLE_FRACTION = 0.05   # skew detection reads a sample only
+# target RAW html bytes per exchange partition.  The html exchange
+# must be sized by DATA, not by core count: partitions follow
+# max(configured parallelism, est_bytes / this target), so a task's
+# sortWithinPartitions working set is bounded (~256MB raw) at ANY
+# cluster size.  Sizing by 2x cores alone made the LOW-parallelism
+# side of the N-vs-4N scaling pair sort ~630MB per task (spill —
+# an extra full write+read of the html) while the 4N side sorted
+# ~160MB in memory, overstating measured efficiency; on a real
+# cluster the same bug appears as "the job got slower when we
+# removed executors" for reasons that are spill, not compute.
+EXCHANGE_PARTITION_BYTES = 256 << 20
+
+
 @dataclass
 class JobConfig:
     run_id: str = "run0"
     n_buckets: int = 64
     chunk_buckets: int = 0          # 0 = single chunk (one commit)
-    parallelism: int = 0            # 0 = spark.sql.shuffle.partitions
-    base_salts: int = 4
-    hot_salts: int = 32
-    hot_count_threshold: int = 1000
-    hot_bytes_threshold: int = 64 << 20
-    sample_fraction: float = 0.05   # skew detection reads a sample only
-    # weigh hosts by sampled html bytes as well as doc counts.  Without
-    # this the giant-page-on-one-host skew pattern (few huge docs, far
-    # below hot_count_threshold) never triggers the wide salt fan-out
-    # and hot_bytes_threshold is inert.  Cost: the probe's sample scan
-    # reads the html column (parquet can't sample below the scan), so
-    # at extreme scale where that is unaffordable set sample_bytes=False
-    # and rely on count-based detection only.
-    sample_bytes: bool = True
-    # target RAW html bytes per exchange partition.  The html exchange
-    # must be sized by DATA, not by core count: partitions follow
-    # max(configured parallelism, est_bytes / this target), so a task's
-    # sortWithinPartitions working set is bounded (~256MB raw) at ANY
-    # cluster size.  Sizing by 2x cores alone made the LOW-parallelism
-    # side of the N-vs-4N scaling pair sort ~630MB per task (spill —
-    # an extra full write+read of the html) while the 4N side sorted
-    # ~160MB in memory, overstating measured efficiency; on a real
-    # cluster the same bug appears as "the job got slower when we
-    # removed executors" for reasons that are spill, not compute.
-    exchange_partition_bytes: int = 256 << 20
-    dedup: bool = True
     all_pages: bool = False
-    with_spans: bool = True
-    # write-stage task count; 0 = min(parallelism, |buckets|).  Buckets
-    # are the LAYOUT unit (dirs, resume grain); write tasks are the
-    # PARALLELISM unit — decoupled on purpose.  bucket is a function of
-    # the hash-partition key, so each bucket's rows land wholly in one
-    # task and the one-file-per-bucket-dir layout is preserved; a task
-    # owning several buckets writes them as dynamic partitions.  Tying
-    # tasks to |buckets| (the old form) made write tasks tiny and
-    # task-FIXED costs dominant: at local[16] the 64-task write stage
-    # measured 143 JVM-CPU-s + 78 GC-s vs 12 CPU-s at 16 tasks for the
-    # same 64 files (closure deserialization + lambda-form spinning +
-    # allocation storms under concurrent cold starts).  On a real
-    # cluster the same rule holds: tasks ~ total cores, buckets ~
-    # layout (O(4k) at 10^12 docs), never forced equal.
-    write_tasks: int = 0
-    # per-lang extraction profiles (O7/O8): dict keyed by lang (plus
-    # 'default'), normalized per config.py:31-42 rules; None = engine
-    # defaults.  Resolved per row inside the Arrow kernel.
-    profiles: dict | None = None
 
 
 def prepare_pages(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -119,88 +101,49 @@ def prepare_pages(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def _skew_agg(df: DataFrame, cfg: JobConfig) -> DataFrame:
+def _skew_agg(df: DataFrame) -> DataFrame:
     """Sampled per-host aggregate, as a ``rollup`` so the grand-total
     row (host NULL — a real host can never be NULL, regexp_extract
     yields '') rides the same map-side partial agg: corpus totals cost
     nothing beyond the probe scan.  Hot-host filtering stays IN the
     query so only (hot hosts + 1 total) rows ever reach the driver —
     host cardinality is unbounded at 10^12 docs."""
-    sample = df.sample(fraction=cfg.sample_fraction, seed=42)
-    scale = 1.0 / cfg.sample_fraction
-    aggs = [(F.count("*") * scale).cast("long").alias("est_docs")]
-    cond = F.col("est_docs") >= cfg.hot_count_threshold
-    if cfg.sample_bytes:
-        aggs.append(
-            (F.sum(F.octet_length("html")) * scale).cast("long").alias("est_bytes")
-        )
-        cond = cond | (F.col("est_bytes") >= cfg.hot_bytes_threshold)
-    agged = sample.rollup("host").agg(*aggs)
-    return agged.filter(F.col("host").isNull() | cond)
+    sample = df.sample(fraction=SAMPLE_FRACTION, seed=42)
+    scale = 1.0 / SAMPLE_FRACTION
+    agged = sample.rollup("host").agg(
+        (F.count("*") * scale).cast("long").alias("est_docs"),
+        (F.sum(F.octet_length("html")) * scale).cast("long").alias("est_bytes"),
+    )
+    hot = ((F.col("est_docs") >= HOT_COUNT_THRESHOLD)
+           | (F.col("est_bytes") >= HOT_BYTES_THRESHOLD))
+    return agged.filter(F.col("host").isNull() | hot)
 
 
-def probe_skew(df: DataFrame, cfg: JobConfig) -> tuple[list, int, int]:
+def probe_skew(df: DataFrame) -> tuple[list, int, int]:
     """One collected probe pass -> (hot-host rows, est corpus docs, est
     corpus html bytes).  Hot hosts need a wider salt fan-out.  Sampling
     keeps this sub-linear: at 10^12 docs you cannot afford a full scan
-    just to find skew.  The probe reads ONLY the url column unless
-    ``sample_bytes`` is set (row-level sampling cannot push below the
-    scan, so weighing by bytes decompresses the html column for the
-    sampled files); see JobConfig.sample_bytes for the default-on
-    rationale and the 100-TB escape hatch.  The totals size the html
-    exchange (see ``JobConfig.exchange_partition_bytes``); est_bytes is
-    0 when ``sample_bytes`` is off."""
-    rows = _skew_agg(df, cfg).collect()
+    just to find skew.  The totals size the html exchange (see
+    ``EXCHANGE_PARTITION_BYTES``)."""
+    rows = _skew_agg(df).collect()
     hot = [(r.host, r.est_docs) for r in rows if r.host is not None]
     tot = next((r for r in rows if r.host is None), None)
-    est_docs = int(tot.est_docs) if tot is not None else 0
-    est_bytes = (int(tot.est_bytes)
-                 if tot is not None and cfg.sample_bytes else 0)
-    return hot, est_docs, est_bytes
+    if tot is None:
+        return hot, 0, 0
+    return hot, int(tot.est_docs), int(tot.est_bytes)
 
 
-def with_salt(df: DataFrame, hot_hosts: list[str], cfg: JobConfig) -> DataFrame:
+def with_salt(df: DataFrame, hot_hosts: list[str]) -> DataFrame:
     """salt = second, independent url hash; hot hosts fan out wider.
     The hot set is a literal ``isin`` (an InSet hash lookup past ten
     hosts): it is small by construction and already on the driver, so
     no dim relation is built or broadcast in every chunk."""
     salt_hash = F.xxhash64(F.col("url"), F.lit("salt"))
-    fan_out = F.lit(cfg.base_salts)
+    fan_out = F.lit(BASE_SALTS)
     if hot_hosts:
         fan_out = F.when(F.col("host").isin(hot_hosts),
-                         F.lit(cfg.hot_salts)).otherwise(fan_out)
+                         F.lit(HOT_SALTS)).otherwise(fan_out)
     return df.withColumn("salt", F.pmod(salt_hash, fan_out).cast("int"))
-
-
-def keep_latest(df: DataFrame) -> DataFrame:
-    """Standalone keep-latest-capture per url (driver-contract /
-    relational form).  The production job does NOT use this: it folds
-    dedup into the extract stage's partition-local sort (see
-    ``run_extraction_job``), which costs zero extra shuffles.  This
-    form computes the winner set on a skinny (url, warc_ts) projection,
-    then joins back; ties on (url, warc_ts) are collapsed by a
-    deterministic row_number over the raw payload bytes (same tie-break
-    contract as the in-kernel dedup: lexicographically smallest html
-    wins — reproducible in Python/SQL, unlike a JVM-only hash).  NULL
-    ``warc_ts`` sorts last under desc order in both paths — a null
-    capture never beats a dated one; a url whose captures are ALL null
-    keeps one row (max yields NULL, matched via null-safe equality —
-    a plain equi-join would drop the url entirely, diverging from the
-    in-kernel dedup path)."""
-    winners = df.groupBy("url").agg(F.max("warc_ts").alias("_max_ts"))
-    out = df.join(
-        winners,
-        (df["url"] == winners["url"])
-        & df["warc_ts"].eqNullSafe(winners["_max_ts"]),
-        how="left_semi",
-    )
-    # exact-tie safety: same url+ts captured twice -> keep lowest html bytes
-    w = Window.partitionBy("url", "warc_ts").orderBy(F.col("html").asc())
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def run_extraction_job(
@@ -236,18 +179,15 @@ def run_extraction_job(
     # its cost is visible in phases and the hot set ships as a literal
     # instead of re-running lazily under the plan
     t0 = time.perf_counter()
-    hot_rows, est_docs, est_bytes = probe_skew(df, cfg)
+    hot_rows, _, est_bytes = probe_skew(df)
     phases["probe_s"] = round(time.perf_counter() - t0, 3)
-    df = with_salt(df, [host for host, _ in hot_rows], cfg)
+    df = with_salt(df, [host for host, _ in hot_rows])
 
-    parallelism = cfg.parallelism or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    parallelism = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if est_bytes:
         # bound the per-task sort working set regardless of core count
-        # (see JobConfig.exchange_partition_bytes)
-        parallelism = max(
-            parallelism, -(-est_bytes // cfg.exchange_partition_bytes))
+        # (see EXCHANGE_PARTITION_BYTES)
+        parallelism = max(parallelism, -(-est_bytes // EXCHANGE_PARTITION_BYTES))
 
     all_buckets = sorted(set(range(cfg.n_buckets)) - set(done_ids))
     chunk = cfg.chunk_buckets or cfg.n_buckets
@@ -261,36 +201,33 @@ def run_extraction_job(
         # serialize the compute-bound extract stage (html bytes are small
         # relative to the 64MB advisory target, extraction cost is not).
         part = part.repartition(parallelism, "bucket", "salt")
-        if cfg.dedup:
-            # partition-local external sort (no shuffle): winner capture
-            # first within each url group; kernel keeps first per url.
-            # warc_ts desc places NULL warc_ts last (a null capture never
-            # beats a dated one).  Exact-ts ties break on the raw html
-            # bytes (unsigned lexicographic — identically comparable in
-            # the JVM, Python and SQL, so the oracle can reproduce the
-            # winner), then lang for a total order even on identical
-            # payloads with divergent passthrough metadata.
-            part = part.sortWithinPartitions(
-                "url", F.col("warc_ts").desc(), "html", "lang"
-            )
+        # partition-local external sort (no shuffle): winner capture
+        # first within each url group; kernel keeps first per url.
+        # warc_ts desc places NULL warc_ts last (a null capture never
+        # beats a dated one).  Exact-ts ties break on the raw html
+        # bytes (unsigned lexicographic — identically comparable in
+        # the JVM, Python and SQL, so the oracle can reproduce the
+        # winner), then lang for a total order even on identical
+        # payloads with divergent passthrough metadata.
+        part = part.sortWithinPartitions("url", F.col("warc_ts").desc(), "html", "lang")
         extracted = extract_pages(
             part,
             payload_col="html",
             passthrough=("url", "warc_ts", "lang", "bucket"),
             all_pages=cfg.all_pages,
-            with_spans=cfg.with_spans,
-            dedup_first="url" if cfg.dedup else None,
-            profiles=cfg.profiles,
-            profile_col="lang" if cfg.profiles else None,
+            dedup_first="url",
         )
         # narrow exchange of the (much smaller) extracted output,
         # hash-partitioned by bucket alone: every bucket's rows land in
         # exactly one write task, so each bucket partition dir still
         # gets exactly one file (a task owning k buckets writes k dirs
-        # as dynamic partitions) — but the task COUNT follows available
-        # parallelism, not |buckets| (see JobConfig.write_tasks).
-        n_write = cfg.write_tasks or min(parallelism, len(bucket_ids))
-        extracted = extracted.repartition(n_write, "bucket")
+        # as dynamic partitions).  Buckets are the LAYOUT unit (dirs,
+        # resume grain); write tasks are the PARALLELISM unit, decoupled
+        # on purpose.  Tying tasks to |buckets| made write tasks tiny and
+        # task-fixed costs dominant: at local[16] a 64-task write stage
+        # measured 143 JVM-CPU-s + 78 GC-s vs 12 CPU-s at 16 tasks for
+        # the same 64 files.
+        extracted = extracted.repartition(min(parallelism, len(bucket_ids)), "bucket")
         t0 = time.perf_counter()
         out_table.overwrite_partitions(extracted, partition_by=("bucket",))
         wall_ms = int((time.perf_counter() - t0) * 1000)

@@ -130,12 +130,17 @@ def get_spark(app: str = "ocr_spark", cores: int | None = None,
     if os.environ.get("SPARK_GRAFT_LOCAL_DIR"):
         builder = builder.config("spark.local.dir",
                                  os.environ["SPARK_GRAFT_LOCAL_DIR"])
-    n_shuffle = shuffle_partitions or (cores * 2 if cores else 32)
-    builder = builder.config("spark.sql.shuffle.partitions", str(n_shuffle))
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)
     for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # the job's exchange width: the argument, else what the launcher set
+    # (spark-submit --conf spark.sql.shuffle.partitions=N), else 2x cores.
+    # Set after start so that a builder default cannot mask --conf.
+    if shuffle_partitions or not spark.sparkContext.getConf().contains(
+            "spark.sql.shuffle.partitions"):
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(shuffle_partitions or (cores * 2 if cores else 32)))
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -62,10 +62,13 @@ class Table:
         (scheduling + committer temp-dir renames) to land a 1 KB file;
         writing the parquet file directly with pyarrow is milliseconds
         and reads back identically through spark.read.parquet.  The file
-        is written under a hidden temp name and renamed into place, so a
-        crash mid-write leaves only a ``.``-prefixed file that Spark,
-        pyarrow and ``exists`` all skip.  Data tables keep the
-        distributed write path."""
+        is written under a hidden temp name and renamed into place; a
+        write or rename that raises removes the temp file.  A process
+        killed between the two (SIGKILL) still leaves it behind, which
+        is harmless: Spark, pyarrow and ``exists`` all skip
+        ``.``-prefixed files.  Temp files are not swept at run start,
+        since one may belong to another writer of the same catalog.
+        Data tables keep the distributed write path."""
         import uuid
 
         import pyarrow as pa
@@ -86,8 +89,13 @@ class Table:
         os.makedirs(self.path, exist_ok=True)
         name = f"part-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(self.path, f".{name}.tmp")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(self.path, name))
+        try:
+            pq.write_table(table, tmp)
+            os.replace(tmp, os.path.join(self.path, name))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
 
     def overwrite_partitions(self, df: DataFrame,
                              partition_by: tuple[str, ...]) -> None:
@@ -110,37 +118,6 @@ class Catalog:
 
     def table(self, name: str) -> Table:
         return Table(self.spark, os.path.join(self.root, name), name)
-
-    # -- bucketed tables ------------------------------------------------
-    def save_bucketed(self, df: DataFrame, name: str, key: str,
-                      n_buckets: int, sort: bool = True) -> None:
-        """Write ``df`` as a BUCKETED (and by default bucket-sorted)
-        external parquet table: files are laid out so every row with
-        the same ``key`` hash lands in the same bucket file on both
-        writes — which lets Spark join or aggregate two tables bucketed
-        the same way with ZERO exchanges (the scan itself satisfies the
-        hash-clustering requirement; plan-asserted in test_plans).
-
-        At 100 TB this is the difference between re-shuffling the full
-        corpus on every join against a side table and never shuffling
-        it at all: bucket once at write time, every downstream
-        key-join/key-agg is co-located.  Bucket metadata lives in the
-        session catalog here (the sandbox has no metastore/Iceberg
-        jars); on a real deployment the same call becomes a bucketed /
-        ``write.distributed-by`` Iceberg table and survives sessions —
-        the swap point documented in the module header."""
-        w = (df.write.format("parquet").mode("overwrite")
-             .option("path", os.path.join(self.root, name))
-             .bucketBy(n_buckets, key))
-        if sort:
-            w = w.sortBy(key)
-        w.saveAsTable(name)
-
-    def read_bucketed(self, name: str) -> DataFrame:
-        """Read a bucketed table THROUGH the catalog (``spark.table``):
-        a plain ``read.parquet`` of the same path would lose the bucket
-        spec and re-introduce the exchange."""
-        return self.spark.table(name)
 
     # -- commit records ------------------------------------------------
     def lineage(self) -> Table:

@@ -5,13 +5,16 @@ pure-Python oracle applied row-by-row — across partitioning choices —
 and the per-bucket commit records must make reruns idempotent.
 """
 
+import datetime
 import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from ocr_spark.data.synth import gen_pages
 from ocr_spark.extractor.core import extract_bytes
+from ocr_spark.plans import pipeline
 from ocr_spark.plans.pipeline import JobConfig, prepare_pages, run_extraction_job
 from ocr_spark.sources.catalog import Catalog, Table
 
@@ -97,7 +100,7 @@ def test_fresh_manifest_reads_launch_no_python(spark, tmp_path):
     assert "ExistingRDD" not in done._jdf.queryExecution().executedPlan().toString()
 
 
-def test_partitioning_invariance(spark, pages_parquet, tmp_path, expected):
+def test_partitioning_invariance(spark, pages_parquet, tmp_path, expected, monkeypatch):
     """Same corpus, different bucket/salt/parallelism -> identical bytes
     (order-insensitive determinism, SURVEY.md §7.3.1)."""
     def digest(out):
@@ -110,11 +113,55 @@ def test_partitioning_invariance(spark, pages_parquet, tmp_path, expected):
             h.update(b"\x01")
         return h.hexdigest()
 
-    out_a, _ = _run(spark, pages_parquet, tmp_path, "pa",
-                    n_buckets=4, parallelism=3, base_salts=1)
-    out_b, _ = _run(spark, pages_parquet, tmp_path, "pb",
-                    n_buckets=32, parallelism=16, base_salts=8, hot_salts=64)
+    def run(name, n_buckets, partitions, base_salts, hot_salts):
+        monkeypatch.setattr(pipeline, "BASE_SALTS", base_salts)
+        monkeypatch.setattr(pipeline, "HOT_SALTS", hot_salts)
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        return _run(spark, pages_parquet, tmp_path, name, n_buckets=n_buckets)[0]
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        out_a = run("pa", n_buckets=4, partitions=3, base_salts=1, hot_salts=32)
+        out_b = run("pb", n_buckets=32, partitions=16, base_salts=8, hot_salts=64)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert digest(out_a) == digest(out_b)
+
+
+def _article(word):
+    """A page whose text is one distinct word plus ~40 shared ones: a
+    short ``<p>`` extracts to "" and would make every capture look alike."""
+    body = " ".join([word] + ["the quick brown fox jumps over the lazy dog"] * 5)
+    return f"<html><body><article><p>{body}</p></article></body></html>".encode()
+
+
+def test_keep_latest_null_ts_and_tie_contract(spark, tmp_path):
+    """A url whose captures ALL have NULL warc_ts keeps exactly one row,
+    the smallest html.  A NULL capture never beats a dated one, even
+    with smaller html.  An exact (url, warc_ts) tie keeps the smallest
+    html."""
+    ts = datetime.datetime
+    rows = [
+        ("http://a.example/u1", None, _article("bravo"), "en"),
+        ("http://a.example/u1", None, _article("alpha"), "en"),
+        ("http://a.example/u2", ts(2024, 1, 1), _article("oscar"), "en"),
+        ("http://a.example/u2", None, _article("november"), "en"),
+        ("http://a.example/u3", ts(2024, 1, 2), _article("xray"), "en"),
+        ("http://a.example/u3", ts(2024, 1, 2), _article("whiskey"), "en"),
+    ]
+    texts = {html: extract_bytes(html)["text"] for _, _, html, _ in rows}
+    assert len(set(texts.values())) == len(rows) and "" not in texts.values()
+    pages = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, lang string")
+    out = str(tmp_path / "nullts")
+    stats = run_extraction_job(spark, pages, out, JobConfig(run_id="nullts", n_buckets=4))
+    got = spark.read.parquet(out + "/pages_extracted").select("url", "text").collect()
+    assert stats["n_docs"] == len(got) == 3
+    assert dict(map(tuple, got)) == {
+        "http://a.example/u1": texts[_article("alpha")],
+        "http://a.example/u2": texts[_article("oscar")],
+        "http://a.example/u3": texts[_article("whiskey")],
+    }
 
 
 def test_status_taxonomy_counts(spark, pages_parquet, tmp_path):
@@ -247,6 +294,8 @@ def test_resume_after_crash_at_chunk_boundary(spark, pages_parquet, tmp_path,
         run_extraction_job(spark, pages_parquet, out, cfg)
     monkeypatch.undo()
     assert Catalog(spark, out).committed_bucket_ids("crash") == committed
+    # a commit that raised removed its hidden temp file
+    assert [f for f in os.listdir(out + "/lineage") if f.endswith(".tmp")] == []
 
     stats = run_extraction_job(spark, pages_parquet, out, cfg)
     assert stats["resumed_buckets_skipped"] == len(committed)

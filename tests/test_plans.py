@@ -58,15 +58,16 @@ def test_extraction_scan_prunes_unused_columns(spark):
     assert "BatchEvalPython" not in plan    # per-row Python = forbidden
 
 
-def test_pipeline_has_no_per_row_python(spark, pages_parquet):
+def test_pipeline_has_no_per_row_python(spark, pages_parquet, monkeypatch):
     from ocr_spark.operators.extract import extract_pages
-    from ocr_spark.plans.pipeline import JobConfig, prepare_pages, probe_skew, with_salt
+    from ocr_spark.plans import pipeline
+    from ocr_spark.plans.pipeline import prepare_pages, probe_skew, with_salt
 
     pages = prepare_pages(spark.read.parquet(pages_parquet), 16)
-    cfg = JobConfig(hot_count_threshold=1)  # every sampled host is hot
-    hot = [host for host, _ in probe_skew(pages, cfg)[0]]
+    monkeypatch.setattr(pipeline, "HOT_COUNT_THRESHOLD", 1)  # every sampled host is hot
+    hot = [host for host, _ in probe_skew(pages)[0]]
     assert hot
-    salted = with_salt(pages, hot, cfg)
+    salted = with_salt(pages, hot)
     ext = extract_pages(salted.repartition(8, "bucket", "salt"),
                         passthrough=("url", "bucket"))
     plan = plan_of(ext)
@@ -75,20 +76,6 @@ def test_pipeline_has_no_per_row_python(spark, pages_parquet):
     # the hot-host set is a literal: no dim relation is joined (or
     # broadcast again in every chunk) under the kernel
     assert "Join" not in plan and "Broadcast" not in plan
-
-
-def test_keep_latest_shuffles_skinny_projection(spark, pages_parquet):
-    """The dedup winner set must aggregate only (url, warc_ts) — html
-    must not appear below the aggregate."""
-    from ocr_spark.plans.pipeline import keep_latest
-
-    import re
-
-    df = keep_latest(spark.read.parquet(pages_parquet))
-    opt = optimized_of(df)
-    m = re.search(r"Aggregate \[url#\d+\].*?Project \[url#\d+, warc_ts#\d+\]",
-                  opt, re.DOTALL)
-    assert m, f"skinny (url, warc_ts) projection not found under Aggregate:\n{opt}"
 
 
 def test_exact_dedup_keys_only_single_exchange(spark):
@@ -101,34 +88,6 @@ def test_exact_dedup_keys_only_single_exchange(spark):
     plan = plan_of(exact_dedup(docs, "text", "doc_id", keys_only=True))
     assert plan.count("Exchange") == 1, plan
     assert "Join" not in plan, plan
-
-
-def test_keep_latest_null_ts_contract(spark):
-    """A url whose captures ALL have NULL warc_ts keeps exactly one row
-    (round-2 ADVICE: the plain equi semi-join dropped such urls, while
-    the in-kernel dedup path kept one — the two paths now share the
-    NULL contract).  NULL never beats a dated capture; exact ties
-    collapse to the lexicographically smallest html."""
-    import datetime
-
-    from ocr_spark.plans.pipeline import keep_latest
-
-    rows = [
-        ("u1", None, b"b", "en"),
-        ("u1", None, b"a", "en"),
-        ("u2", datetime.datetime(2024, 1, 1), b"old", "en"),
-        ("u2", None, b"nullts", "en"),
-        ("u3", datetime.datetime(2024, 1, 2), b"x", "en"),
-        ("u3", datetime.datetime(2024, 1, 2), b"w", "en"),
-    ]
-    df = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, lang string"
-    )
-    out = {r.url: (r.warc_ts, bytes(r.html)) for r in keep_latest(df).collect()}
-    assert len(out) == 3
-    assert out["u1"] == (None, b"a")        # all-NULL url survives
-    assert out["u2"][1] == b"old"           # NULL never beats a dated one
-    assert out["u3"][1] == b"w"             # tie -> smallest html bytes
 
 
 def test_dedup_queries_avoid_cartesian(spark):
@@ -211,15 +170,16 @@ def test_executor_jvm_flags_pin_heap_and_lambda_classes(spark):
         assert "-XX:MetaspaceSize=256m" in opts
 
 
-def test_probe_skew_totals_size_the_exchange(spark, pages_parquet):
+def test_probe_skew_totals_size_the_exchange(spark, pages_parquet, monkeypatch):
     """probe_skew's rollup grand-total must estimate corpus docs/bytes
     (within sampling error at fraction=1.0 it is exact), and the html
     exchange partition count must follow bytes, not core count alone."""
-    from ocr_spark.plans.pipeline import JobConfig, prepare_pages, probe_skew
+    from ocr_spark.plans import pipeline
+    from ocr_spark.plans.pipeline import prepare_pages, probe_skew
 
     pages = prepare_pages(spark.read.parquet(pages_parquet), 16)
-    cfg = JobConfig(sample_fraction=1.0)  # exact at full fraction
-    hot, est_docs, est_bytes = probe_skew(pages, cfg)
+    monkeypatch.setattr(pipeline, "SAMPLE_FRACTION", 1.0)  # exact at full fraction
+    hot, est_docs, est_bytes = probe_skew(pages)
     truth = pages.selectExpr(
         "count(*) n", "sum(octet_length(html)) b").collect()[0]
     assert est_docs == truth.n
@@ -228,10 +188,9 @@ def test_probe_skew_totals_size_the_exchange(spark, pages_parquet):
     assert all(h is not None for h, _ in hot)
     # sizing rule: bytes/256MB bounded below by configured parallelism
     par = 8
-    expect = max(par, -(-est_bytes // cfg.exchange_partition_bytes))
+    expect = max(par, -(-est_bytes // pipeline.EXCHANGE_PARTITION_BYTES))
     assert expect == par  # tiny corpus -> parallelism floor wins
-    big = JobConfig(exchange_partition_bytes=1 << 10)  # 1KB target
-    n = max(par, -(-est_bytes // big.exchange_partition_bytes))
+    n = max(par, -(-est_bytes // (1 << 10)))  # 1KB target
     assert n > par  # bytes rule takes over when data outgrows cores
 
 
@@ -537,45 +496,6 @@ def test_pivot_explicit_values_two_skinny_shuffles(spark):
     assert "partial_pivotfirst" in plan, plan
     assert plan.count("HashAggregate") >= 3, plan
     assert "BatchEvalPython" not in plan
-
-
-def test_bucketed_tables_join_and_agg_without_exchange(spark, tmp_path):
-    """The bucketing payoff, plan-asserted: two tables written
-    bucketed by the same key and bucket count sort-merge-join with
-    ZERO Exchange nodes (the bucketed scan satisfies the clustering
-    requirement), and a groupBy on the bucket key aggregates
-    exchange-free too.  Reading the same files WITHOUT the catalog's
-    bucket spec brings the shuffles back — the control that proves the
-    layout (not the data size) is what removed them."""
-    from ocr_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path))
-    docs = spark.range(0, 500).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 7).alias("x"))
-    scores = spark.range(0, 500).select(
-        F.col("id").alias("doc_id"), (F.col("id") * 2).alias("s"))
-    cat.save_bucketed(docs, "bkt_docs", "doc_id", 8)
-    cat.save_bucketed(scores, "bkt_scores", "doc_id", 8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = cat.read_bucketed("bkt_docs").join(
-            cat.read_bucketed("bkt_scores"), "doc_id")
-        plan = plan_of(j)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-
-        agg = cat.read_bucketed("bkt_docs").groupBy("doc_id").count()
-        assert "Exchange" not in plan_of(agg)
-
-        # control: same files, no bucket spec -> the exchanges return
-        raw = spark.read.parquet(f"{tmp_path}/bkt_docs").join(
-            spark.read.parquet(f"{tmp_path}/bkt_scores"), "doc_id")
-        assert "Exchange hashpartitioning" in plan_of(raw)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bkt_docs")
-        spark.sql("DROP TABLE IF EXISTS bkt_scores")
 
 
 def test_mine_measurements_zero_shuffle(spark):
