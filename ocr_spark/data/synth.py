@@ -20,7 +20,7 @@ from __future__ import annotations
 import datetime as dt
 import random
 
-__all__ = ["gen_pages", "write_pages_parquet", "write_pages_parquet_parallel",
+__all__ = ["gen_pages", "write_pages_parquet",
            "build_pdf", "build_pdf_from_streams", "build_pdf_two_column",
            "build_png", "GENRES"]
 
@@ -58,40 +58,35 @@ def _nav(rng: random.Random, n_links: int = 8) -> str:
     return f"<nav><ul>{items}</ul></nav>"
 
 
-def _footer(rng: random.Random, n_links: int = 5) -> str:
+def _footer(rng: random.Random) -> str:
     links = " ".join(
-        f'<a href="/f{i}">{_sent(rng, 1)}</a>' for i in range(n_links)
+        f'<a href="/f{i}">{_sent(rng, 1)}</a>' for i in range(5)
     )
     return f"<footer><p>{links}</p><p>copyright {_sent(rng, 3)}</p></footer>"
 
 
-def _sidebar(rng: random.Random, n_items: int = 6) -> str:
+def _sidebar(rng: random.Random) -> str:
     items = "".join(
-        f'<li><a href="/s/{i}">{_sent(rng, 3)}</a></li>' for i in range(n_items)
+        f'<li><a href="/s/{i}">{_sent(rng, 3)}</a></li>' for i in range(6)
     )
     return f"<aside><h3>{_sent(rng, 2)}</h3><ul>{items}</ul></aside>"
 
 
 def _article_html(rng: random.Random, n_paras: int, words_per: int,
                   charset: str = "utf-8", lang_words=_WORDS,
-                  bom: bool = False, boiler_mult: int = 1) -> bytes:
+                  bom: bool = False) -> bytes:
     paras = "".join(
         f"<p>{_sent(rng, max(2, words_per + rng.randint(-5, 5)), lang_words)}</p>"
         for _ in range(n_paras)
     )
     title = _sent(rng, 4, lang_words)
-    # extra boilerplate units interleave real-page structure: repeated
-    # nav/sidebar/ad-ish link blocks around the article raise the
-    # markup:content ratio toward real web pages (~80% boilerplate)
-    pre_boiler = "".join(_nav(rng, 8) for _ in range(max(0, boiler_mult - 1)))
-    post_boiler = "".join(_sidebar(rng, 6) for _ in range(max(0, boiler_mult - 1)))
     html = (
         f'<!DOCTYPE html><html><head><meta charset="{charset}">'
         f"<title>{title}</title>"
         f"<script>var x = {rng.randint(0, 9)};</script>"
         f"<style>body {{ margin: 0 }}</style></head><body>"
-        f"{_nav(rng)}{pre_boiler}<article><h1>{title}</h1>{paras}</article>"
-        f"{post_boiler}{_sidebar(rng)}{_footer(rng, 5 * boiler_mult)}</body></html>"
+        f"{_nav(rng)}<article><h1>{title}</h1>{paras}</article>"
+        f"{_sidebar(rng)}{_footer(rng)}</body></html>"
     )
     enc = {"utf-8": "utf-8", "euc-kr": "cp949", "iso-8859-1": "latin-1"}[charset]
     payload = html.encode(enc, "replace")
@@ -439,13 +434,11 @@ def _pdf_blocks(rng: random.Random) -> list[list[str]]:
     ]
 
 
-def _one_page(rng: random.Random, idx: int, genre: str,
-              size_mult: int = 1, boiler_mult: int = 1) -> dict:
+def _one_page(rng: random.Random, idx: int, genre: str) -> dict:
     host = f"host{rng.randint(0, 49)}.example.com"
     lang = rng.choice(["en", "en", "en", "ko", "es", "de", "zh"])
     if genre == "article":
-        html = _article_html(rng, rng.randint(3, 10) * size_mult,
-                             rng.randint(15, 40), boiler_mult=boiler_mult)
+        html = _article_html(rng, rng.randint(3, 10), rng.randint(15, 40))
     elif genre == "shortarticle":
         html = _article_html(rng, 1, rng.randint(3, 8))
     elif genre == "linkfarm":
@@ -504,27 +497,27 @@ _GENRE_WEIGHTS = [
 ]
 
 
-def gen_pages(n: int, seed: int = 42, dup_frac: float = 0.05,
-              giant_every: int = 400, size_mult: int = 1,
-              boiler_mult: int = 1, idx_start: int = 0) -> list[dict]:
-    """Generate ``n`` pages rows. ``dup_frac`` of rows are re-captures of
-    an earlier url at a later ``warc_ts`` (keep-latest dedup tests);
-    every ``giant_every``-th row is a multi-MB page on one hot host
-    (skew/salting tests).  ``size_mult`` scales article body length
-    (bench corpora use >1 to approximate real Common-Crawl page sizes
-    without changing the edge-genre mix)."""
+# share of rows that re-capture an earlier url at a later warc_ts
+# (keep-latest dedup tests), and the period of the multi-MB page on one
+# hot host (skew/salting tests)
+DUP_FRAC = 0.05
+GIANT_EVERY = 400
+
+
+def gen_pages(n: int, seed: int = 42) -> list[dict]:
+    """Generate ``n`` pages rows: the weighted genre mix, a ``giant``
+    page every ``GIANT_EVERY``-th row, and after each row a re-capture
+    of an earlier url with probability ``DUP_FRAC``."""
     rng = random.Random(seed)
     genres = [g for g, w in _GENRE_WEIGHTS for _ in range(w)]
     rows: list[dict] = []
-    for j in range(n):
-        i = idx_start + j  # global url index: parallel chunk gen stays collision-free
-        if giant_every and i and i % giant_every == 0:
+    for i in range(n):
+        if i and i % GIANT_EVERY == 0:
             row = _one_page(rng, i, "giant")
         else:
-            row = _one_page(rng, i, rng.choice(genres), size_mult=size_mult,
-                            boiler_mult=boiler_mult)
+            row = _one_page(rng, i, rng.choice(genres))
         rows.append(row)
-        if rows and rng.random() < dup_frac:
+        if rng.random() < DUP_FRAC:
             # duplicate an earlier url with a later capture and new bytes
             victim = rows[rng.randrange(len(rows))]
             dup = _one_page(rng, i, "article")
@@ -535,13 +528,13 @@ def gen_pages(n: int, seed: int = 42, dup_frac: float = 0.05,
     return rows
 
 
-def write_pages_parquet(path: str, n: int, seed: int = 42, **kw) -> int:
+def write_pages_parquet(path: str, n: int, seed: int = 42) -> int:
     """Write the synthetic pages table as parquet (pyarrow, no Spark).
     Returns row count."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    rows = gen_pages(n, seed=seed, **kw)
+    rows = gen_pages(n, seed=seed)
     table = pa.table(
         {
             "url": pa.array([r["url"] for r in rows], pa.string()),
@@ -557,34 +550,3 @@ def write_pages_parquet(path: str, n: int, seed: int = 42, **kw) -> int:
     pq.write_table(table, path)
     return len(rows)
 
-
-def _gen_chunk(args: tuple) -> int:
-    part_path, n, seed, idx_start, kw = args
-    return write_pages_parquet(part_path, n, seed=seed, idx_start=idx_start, **kw)
-
-
-def write_pages_parquet_parallel(dir_path: str, n: int, seed: int = 42,
-                                 workers: int = 16, chunk: int = 25000,
-                                 **kw) -> int:
-    """Multi-process corpus writer for large bench corpora: ``n`` pages
-    split into deterministic chunks (chunk c uses seed ``seed*10007+c``
-    and url index range ``[c*chunk, ...)`` so urls never collide across
-    chunks), written as part files under ``dir_path`` (a parquet
-    directory — Spark and DuckDB read it as one table).  Deterministic
-    for fixed (n, seed, chunk): worker scheduling cannot change file
-    contents, only their write order."""
-    import multiprocessing as mp
-    import os
-
-    os.makedirs(dir_path, exist_ok=True)
-    tasks = []
-    c = 0
-    for start in range(0, n, chunk):
-        tasks.append((
-            os.path.join(dir_path, f"part-{c:05d}.parquet"),
-            min(chunk, n - start), seed * 10007 + c, start, kw,
-        ))
-        c += 1
-    with mp.Pool(min(workers, len(tasks))) as pool:
-        counts = pool.map(_gen_chunk, tasks)
-    return sum(counts)

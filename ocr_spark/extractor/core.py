@@ -677,9 +677,9 @@ def extract_html(payload: bytes, profile: dict | None = None) -> dict:
     overrides the classifier thresholds (keys ``max_link_density``,
     ``min_words``; missing keys keep defaults).
 
-    Time is linear in the payload on any markup, hostile included
-    (tests/test_core_html.py::test_hostile_markup_is_linear); memory is
-    not bounded beyond the decoded text and its blocks.
+    Time and peak memory are linear in the payload on any markup, hostile
+    included (tests/test_core_html.py::test_hostile_markup_is_linear and
+    ::test_hostile_markup_memory_is_bounded).
     """
     try:
         decoded, codec = decode_html(payload)

@@ -177,7 +177,7 @@ def decode_glyph_text(payload: bytes, threshold: int = 128) -> dict:
         gray = pixels
     else:
         gray = bytearray(w * h)
-        use = 3 if ch == 4 else ch      # ignore alpha
+        use = ch - 1 if ch in (2, 4) else ch    # ignore alpha
         for i in range(w * h):
             base = i * ch
             gray[i] = sum(pixels[base:base + use]) // use

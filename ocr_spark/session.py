@@ -89,27 +89,24 @@ def default_driver_mem(cores: int | None = None) -> str:
     return f"{max(1024, min(mem_mb // 4, 2048 * cores, 32768))}m"
 
 
-def get_spark(app: str = "ocr_spark", cores: int | None = None,
-              shuffle_partitions: int | None = None,
-              extra: dict | None = None) -> SparkSession:
+def get_spark(app: str = "ocr_spark", cores: int | None = None) -> SparkSession:
     """Build (or reuse) a session.  ``cores=None`` -> local[*] when no
     master is configured (spark-submit on a cluster supplies its own)."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
     builder = SparkSession.builder.appName(app)
-    extra = dict(extra or {})
     if not os.environ.get("SPARK_MASTER") and "SPARK_ENV_LOADED" not in os.environ:
         builder = builder.master(f"local[{cores}]" if cores else "local[*]")
         heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(cores)
         builder = builder.config("spark.driver.memory", heap)
         # workers find ocr_spark (and so the daemon below) from any cwd
-        key = "spark.executorEnv.PYTHONPATH"
-        extra[key] = os.pathsep.join(filter(None, (PKG_ROOT, extra.get(key))))
+        builder = builder.config("spark.executorEnv.PYTHONPATH", PKG_ROOT)
         # lazy zip-archive invalidation: a task no longer pays ~0.2 s of
         # archive re-reads before its first row (see ocr_spark.pyworker).
         # On a cluster, pass it with --conf where engine.zip is on the
         # workers' PYTHONPATH.
-        extra.setdefault("spark.python.daemon.module", "ocr_spark.pyworker")
+        builder = builder.config("spark.python.daemon.module",
+                                 "ocr_spark.pyworker")
         # local mode: the driver JVM is the executor; -Xms pins the
         # heap (Spark passes only -Xmx to the driver — see GC_JVM_OPTS
         # pathology #1; executors get -Xms=-Xmx from Spark itself)
@@ -132,15 +129,12 @@ def get_spark(app: str = "ocr_spark", cores: int | None = None,
                                  os.environ["SPARK_GRAFT_LOCAL_DIR"])
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)
-    for k, v in extra.items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # the job's exchange width: the argument, else what the launcher set
-    # (spark-submit --conf spark.sql.shuffle.partitions=N), else 2x cores.
+    # the job's exchange width: what the launcher set (spark-submit
+    # --conf spark.sql.shuffle.partitions=N), else 2x cores, else 32.
     # Set after start so that a builder default cannot mask --conf.
-    if shuffle_partitions or not spark.sparkContext.getConf().contains(
-            "spark.sql.shuffle.partitions"):
+    if not spark.sparkContext.getConf().contains("spark.sql.shuffle.partitions"):
         spark.conf.set("spark.sql.shuffle.partitions",
-                       str(shuffle_partitions or (cores * 2 if cores else 32)))
+                       str(cores * 2 if cores else 32))
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -10,7 +10,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from ocr_spark.session import get_spark
 
-    s = get_spark("ocr_spark_tests", cores=8, shuffle_partitions=8)
+    s = get_spark("ocr_spark_tests", cores=8)
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s
     s.stop()
 

@@ -4,6 +4,7 @@ import hashlib
 import random
 import re
 import time
+import tracemalloc
 
 from ocr_spark.data.synth import gen_pages
 from ocr_spark.extractor import core
@@ -312,6 +313,46 @@ def test_hostile_markup_is_linear():
             took = time.process_time() - t
             assert out["status"] == "ok", (name, out["error_msg"])
             assert took < 1.0, (name, tail, took)
+
+
+def _hostile_payload(make, size):
+    k = 1
+    while len(make(k)) < size:
+        k *= 2
+    return make(k)
+
+
+def _peak_bytes(payload):
+    """tracemalloc peak of one extract_bytes call, payload excluded."""
+    tracemalloc.start()
+    try:
+        core.extract_bytes(payload)
+        return tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+def test_hostile_markup_memory_is_bounded():
+    """Peak memory stays within a constant factor of the page: at most
+    100x the payload on every hostile shape, growing linearly with it
+    (open_tags, the worst shape, at 4x the size), and at most 10x on a
+    ~4 MB article."""
+    for name, make in HOSTILE.items():
+        for tail in ("", ">"):
+            payload = (_hostile_payload(make, 64 * 1024) + tail).encode()
+            assert _peak_bytes(payload) <= 100 * len(payload), (name, tail)
+    small, big = (_hostile_payload(HOSTILE["open_tags"], size).encode()
+                  for size in (64 * 1024, 256 * 1024))
+    assert (_peak_bytes(big) / len(big)
+            <= 1.25 * _peak_bytes(small) / len(small))
+    rng = random.Random(7)
+    words = "the quick brown fox jumps over lazy dog main article".split()
+    paras = "".join(
+        "<p>" + " ".join(rng.choice(words) for _ in range(60)) + "</p>"
+        for _ in range(13000))
+    page = f"<html><body><article>{paras}</article></body></html>".encode()
+    assert len(page) > 4_000_000
+    assert _peak_bytes(page) <= 10 * len(page)
 
 
 def test_hostile_markup_matches_stdlib():

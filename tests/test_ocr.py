@@ -56,14 +56,19 @@ def test_roundtrip_across_png_filters(filter_type):
     assert decode_glyph_text(png)["text"] == text
 
 
-def test_roundtrip_rgb_luma_path():
+@pytest.mark.parametrize("color_type", [2, 4, 6])
+def test_roundtrip_rgb_luma_path(color_type):
     """Multi-channel PNGs reduce to integer-mean luma before
-    binarization; equal-channel RGB must decode identically to grey."""
+    binarization, alpha left out: equal-channel RGB, grey+alpha and
+    RGBA (opaque) must decode identically to grey.  Grey ink keeps an
+    alpha channel averaged into the luma from passing for ink."""
     from ocr_spark.data.synth import build_png
 
-    text = "RGB PATH"
-    w, h, grid = render_text_pixels(text)
-    png = build_png(w, h, color_type=2, pixel_fn=lambda i, c: grid[i])
+    text = "HELLO 42"
+    w, h, grid = render_text_pixels(text, ink=64)
+    alpha = {2: None, 4: 1, 6: 3}[color_type]
+    png = build_png(w, h, color_type=color_type,
+                    pixel_fn=lambda i, c: 255 if c == alpha else grid[i])
     assert decode_glyph_text(png)["text"] == text
 
 

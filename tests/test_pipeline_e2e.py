@@ -9,6 +9,7 @@ import datetime
 import hashlib
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -44,6 +45,25 @@ FRESH_RUN_JOBS = 6
 @pytest.fixture(scope="module")
 def expected():
     return oracle_expected(gen_pages(400, seed=42))
+
+
+def _rows_digest(rows):
+    h = hashlib.sha256()
+    for r in rows:
+        for v in (r["url"].encode(), str(r["warc_ts"]).encode(), r["html"],
+                  r["lang"].encode()):
+            h.update(len(v).to_bytes(8, "little") + v)
+    return h.hexdigest()
+
+
+def test_synth_stream_is_pinned(pages_parquet):
+    """The oracle above derives from gen_pages itself, so a change to the
+    generated stream would pass unnoticed: pin it, and the parquet
+    corpus the fixtures write, to fixed digests."""
+    assert _rows_digest(gen_pages(600, seed=321)) == (
+        "0224d87d228324edb8f9e207d654c79c1e233c8ec20498dd6d2021c9bf036086")
+    assert _rows_digest(pq.read_table(pages_parquet).to_pylist()) == (
+        "7dc9ec23997b820deda508df3ddd64910bfec0ccdabd09b734981ce1c083b80e")
 
 
 def _run(spark, pages_parquet, tmp_path, name, **cfg_kw):
