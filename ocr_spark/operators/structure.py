@@ -391,8 +391,7 @@ def html_markdown(df: DataFrame, html_col: str = "html",
                         lambda h: (None if h is None else to_markdown(h),))
 
 
-def table_records(cells, id_col: str = "doc_id",
-                  materialize: bool = True):
+def table_records(cells, id_col: str = "doc_id"):
     """Header-keyed record materialization over ``extract_tables``
     cell rows — the step that turns a scraped <table> grid into the
     (record, field, value) triples table-QA and knowledge-base
@@ -409,12 +408,10 @@ def table_records(cells, id_col: str = "doc_id",
     table never funnels through one window task."""
     from pyspark.sql import functions as F
 
-    if materialize:
-        # the cell table fans out to three consumers (header spans,
-        # field row, data side); left lazy, each consumer re-runs the
-        # upstream Arrow parse of every page (measured 2x the
-        # extract cost at sf0.1).  materialize=False for inspection.
-        cells = cells.localCheckpoint(eager=False)
+    # the cell table fans out to three consumers (header spans, field
+    # row, data side); left lazy, each consumer re-runs the upstream
+    # Arrow parse of every page (measured 2x the extract cost at sf0.1)
+    cells = cells.localCheckpoint(eager=False)
     hdr = cells.filter(F.col("is_header"))
     spans = (hdr.groupBy(id_col, "table_idx")
              .agg(F.min("row_idx").alias("h0"),
