@@ -38,6 +38,8 @@ __all__ = [
     "sniff_charset",
     "decode_html",
     "extract_html",
+    "extract_links",
+    "extract_links_texts",
     "extract_meta",
     "extract_pdf",
     "extract_bytes",
@@ -746,6 +748,94 @@ def _char_spans_to_bytes(decoded, codec, spans):
 
 
 # --------------------------------------------------------------------------
+# Outlink extraction (web-graph construction)
+# --------------------------------------------------------------------------
+# The reference has no link stage (it processes single uploaded files,
+# services/file_processor.py); a Common-Crawl-scale corpus needs the
+# page -> outlinks map for graph dedup priors, spam scoring, and
+# PageRank-family quality signals.  Same parser stack as extract_html
+# (stdlib HTMLParser over decode_html), resolution via stdlib urljoin.
+
+_SKIP_SCHEMES = ("javascript:", "mailto:", "tel:", "data:", "about:")
+
+
+class _LinkParser(HTMLParser):
+    """Collect <a href> values (with their anchor text) in document
+    order; honor <base href>.  Anchor text is the flattened text
+    content up to the matching </a> (the <a> element does not nest)."""
+
+    def __init__(self) -> None:
+        super().__init__(convert_charrefs=True)
+        self.hrefs: list[tuple[str, list[str]]] = []  # (href, text parts)
+        self.base: str | None = None
+        self._in_a = False
+
+    def handle_starttag(self, tag, attrs):
+        if tag == "a":
+            self._in_a = False
+            for k, v in attrs:
+                if k == "href" and v:
+                    self.hrefs.append((v, []))
+                    self._in_a = True
+                    break
+        elif tag == "base" and self.base is None:
+            for k, v in attrs:
+                if k == "href" and v:
+                    self.base = v
+                    break
+
+    def handle_endtag(self, tag):
+        if tag == "a":
+            self._in_a = False
+
+    def handle_data(self, data):
+        if self._in_a and self.hrefs:
+            self.hrefs[-1][1].append(data)
+
+
+def extract_links(payload: bytes, base_url: str) -> list[str]:
+    """HTML bytes -> absolute outlink urls, document order, deduped
+    (first occurrence wins).  Relative hrefs resolve against <base href>
+    if present, else ``base_url``.  Fragment-only links and
+    non-navigational schemes (javascript/mailto/tel/data/about) are
+    dropped; fragments are stripped from kept links.  Returns [] for
+    undecodable or unparsable payloads (errors are rows upstream)."""
+    return [u for u, _t in extract_links_texts(payload, base_url)]
+
+
+def extract_links_texts(payload: bytes,
+                        base_url: str) -> list[tuple[str, str]]:
+    """Like :func:`extract_links` but each link carries its anchor text
+    (flattened element text, whitespace-collapsed; the FIRST anchor's
+    text wins for duplicate targets) — the web-scale anchor-text corpus
+    shape (anchor text is a standard relevance/label signal for the
+    linked page)."""
+    from urllib.parse import urljoin
+
+    try:
+        decoded, _codec = decode_html(payload)
+        p = _LinkParser()
+        p.feed(decoded)
+        base = urljoin(base_url, p.base) if p.base else base_url
+        out: list[tuple[str, str]] = []
+        seen: set[str] = set()
+        for href, text_parts in p.hrefs:
+            h = href.strip()
+            if not h or h.startswith("#"):
+                continue
+            if h.lower().startswith(_SKIP_SCHEMES):
+                continue
+            absu = urljoin(base, h).split("#", 1)[0]
+            if not absu or absu in seen:
+                continue
+            seen.add(absu)
+            out.append((absu, _collapse("".join(text_parts))))
+        return out
+    except Exception:
+        return []
+
+
+# --------------------------------------------------------------------------
 # Page-metadata extraction (structured head/landmark fields)
 # --------------------------------------------------------------------------
 # The reference's whole purpose is document -> structured fields
@@ -1049,8 +1139,9 @@ def extract_hreflang(payload: bytes) -> list[dict]:
     dict per ``<link rel=alternate hreflang href>`` with ``link_idx``
     in document order.  These drive multilingual page-group alignment
     (each translation cluster declares its full member set, including
-    itself, per the hreflang convention).  Undecodable payloads -> no
-    rows."""
+    itself, per the hreflang convention) — the upstream kernel under
+    :func:`ocr_spark.operators.web.hreflang_groups`.  Undecodable
+    payloads -> no rows."""
     try:
         decoded, _codec = decode_html(payload)
         p = _HreflangParser()

@@ -395,7 +395,8 @@ def hreflang_pages(
     """hreflang alternate declarations per page (``<link
     rel="alternate" hreflang href>`` -> ``(link_idx, hreflang, href)``
     rows): the extraction surface under multilingual translation-group
-    alignment; extracted by ``extractor.core.extract_hreflang``.
+    alignment (:func:`ocr_spark.operators.web.hreflang_groups`);
+    extracted by ``extractor.core.extract_hreflang``.
 
     Same Arrow discipline as the rel-link kernel: one batched pass,
     passthrough repeated per emitted row, the binary payload never

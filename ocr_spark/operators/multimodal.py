@@ -278,8 +278,8 @@ def ahash_from_png(payload: bytes, grid: int = 8) -> dict:
 
     Near-identical images (small crops/overlays/banner swaps — the
     web-dedup case) differ in a handful of bits, so Hamming distance
-    over this hash is the image analogue of simhash over text:
-    candidate generation via pigeonhole chunks,
+    over this hash is the image analogue of simhash over text
+    (operators/dedup.py): candidate generation via pigeonhole chunks,
     exact verify via XOR popcount.  Reference parity: the reference's
     image intake dedups retries by byte digest only
     (/root/reference/services/file_processor.py:49-62); this is the

@@ -108,7 +108,8 @@ def wat_record(url: Column, date_iso: Column, title: Column,
 def wat_export(df: DataFrame, url_col: str = "url",
                date_col: str = "date_iso", title_col: str = "title",
                outlinks_col: str = "outlinks") -> DataFrame:
-    """Pages (with pre-extracted title and outlinks) -> ``(url, wat)``
+    """Pages (with pre-extracted title/outlinks — operators/web.py
+    outlinks + extractor extract_meta produce them) -> ``(url, wat)``
     serialized metadata records; narrow map, no shuffle."""
     return df.select(
         F.col(url_col).alias("url"),

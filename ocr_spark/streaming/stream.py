@@ -193,7 +193,8 @@ def sessionize_stream(events: DataFrame, gap_s: int = 1800,
 def dedup_stream(pages: DataFrame, keys: list[str] | None = None,
                  ts_col: str = "warc_ts",
                  watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact dedup: keep the first arrival per key
+    """Streaming exact dedup — the streaming analogue of
+    ``operators.dedup.exact_dedup``: keep the first arrival per key
     (default key: content digest of html, so byte-identical recrawls
     collapse regardless of url).
 

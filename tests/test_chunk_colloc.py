@@ -1,5 +1,142 @@
-"""Search-key folding (functions/text.py:search_key): accent, case and
-punctuation folding collapse spelling variants to one key."""
+"""Chunking (operators/chunk.py) and collocation/BPE statistics
+(functions/colloc.py): closed-form edge cases + Spark-vs-pure-Python
+BPE training parity."""
+
+import math
+
+import pytest
+from pyspark.sql import functions as F
+
+from ocr_spark.functions.colloc import (bpe_pair_counts, bpe_train,
+                                        bpe_train_local, collocations)
+from ocr_spark.operators.chunk import chunk_text, chunk_tokens
+
+
+def _rows(df, *order):
+    return [tuple(r) for r in df.orderBy(*order).collect()]
+
+
+class TestChunkText:
+    def test_exact_cover_no_overlap(self, spark):
+        df = spark.createDataFrame([(1, "abcdefghij")], "doc_id long, text string")
+        got = _rows(chunk_text(df, size=5), "doc_id", "chunk_id")
+        assert got == [(1, 0, 0, 5, "abcde"), (1, 1, 5, 10, "fghij")]
+
+    def test_overlap_and_short_tail(self, spark):
+        df = spark.createDataFrame([(1, "abcdefgh")], "doc_id long, text string")
+        # size 5, overlap 2 -> stride 3: n=8 -> 1+ceil(3/3)=2 chunks
+        got = _rows(chunk_text(df, size=5, overlap=2), "doc_id", "chunk_id")
+        assert got == [(1, 0, 0, 5, "abcde"), (1, 1, 3, 8, "defgh")]
+
+    def test_every_char_covered_and_last_chunk_nonredundant(self, spark):
+        text = "x" * 23
+        df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        rows = _rows(chunk_text(df, size=5, overlap=2), "doc_id", "chunk_id")
+        covered = set()
+        for _, _, s, e, c in rows:
+            assert c == text[s:e]
+            covered.update(range(s, e))
+        assert covered == set(range(23))
+        # final chunk starts before the end (no fully-contained chunk)
+        assert rows[-1][2] < 23
+
+    def test_empty_text_keeps_one_row(self, spark):
+        df = spark.createDataFrame([(1, ""), (2, "ab")], "doc_id long, text string")
+        got = _rows(chunk_text(df, size=5, overlap=1), "doc_id", "chunk_id")
+        assert got == [(1, 0, 0, 0, ""), (2, 0, 0, 2, "ab")]
+
+    def test_doc_shorter_than_size_single_chunk(self, spark):
+        df = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
+        assert _rows(chunk_text(df, size=10, overlap=3), "chunk_id") == [
+            (1, 0, 0, 3, "abc")]
+
+    def test_bad_overlap_rejected(self, spark):
+        df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+        with pytest.raises(ValueError):
+            chunk_text(df, size=5, overlap=5)
+        with pytest.raises(ValueError):
+            chunk_text(df, size=5, overlap=-1)
+
+
+class TestChunkTokens:
+    def test_windows_and_offsets(self, spark):
+        df = spark.createDataFrame(
+            [(1, "a b c d e f g")], "doc_id long, text string")
+        got = _rows(chunk_tokens(df, size=4, overlap=1), "doc_id", "chunk_id")
+        assert got == [(1, 0, 0, 4, "a b c d"), (1, 1, 3, 7, "d e f g")]
+
+    def test_blank_text_one_empty_chunk(self, spark):
+        df = spark.createDataFrame([(1, "   ")], "doc_id long, text string")
+        assert _rows(chunk_tokens(df, size=4), "chunk_id") == [(1, 0, 0, 0, "")]
+
+    def test_whitespace_runs_normalized(self, spark):
+        df = spark.createDataFrame([(1, "  a\t\tb \n c ")],
+                                   "doc_id long, text string")
+        assert _rows(chunk_tokens(df, size=8), "chunk_id") == [
+            (1, 0, 0, 3, "a b c")]
+
+
+class TestCollocations:
+    def test_pmi_value_closed_form(self, spark):
+        # corpus: "a b" x4 and "c d" x2 -> n_tok=12, n_pairs=6
+        df = spark.createDataFrame(
+            [("a b",)] * 4 + [("c d",)] * 2, "text string")
+        got = {(r["w1"], r["w2"]): (r["pair_count"], r["pmi"])
+               for r in collocations(df, k=10, min_count=2).collect()}
+        # pmi(a,b) = ln((4/6) / ((4/12)*(4/12)))
+        assert got[("a", "b")][0] == 4
+        assert got[("a", "b")][1] == round(
+            math.log((4 / 6) / ((4 / 12) * (4 / 12))), 6)
+        assert got[("c", "d")][0] == 2
+
+    def test_min_count_gate_and_k_limit(self, spark):
+        df = spark.createDataFrame(
+            [("p q",)] * 5 + [("r s",)], "text string")
+        rows = collocations(df, k=10, min_count=2).collect()
+        assert [(r["w1"], r["w2"]) for r in rows] == [("p", "q")]
+        assert len(collocations(df, k=1, min_count=1).collect()) == 1
+
+
+class TestBpe:
+    def test_pair_counts_weighted_by_word_freq(self, spark):
+        df = spark.createDataFrame([("ab ab cd",), ("ab x",)], "text string")
+        got = {(r["lhs"], r["rhs"]): r["pair_count"]
+               for r in bpe_pair_counts(df, k=10).collect()}
+        # 'ab' occurs 3x, 'cd' 1x; 1-char 'x' contributes nothing
+        assert got == {("a", "b"): 3, ("c", "d"): 1}
+
+    def test_single_char_words_no_self_pairs(self, spark):
+        df = spark.createDataFrame([("x x x y",)], "text string")
+        assert bpe_pair_counts(df, k=10).collect() == []
+
+    def test_train_matches_pure_python(self, spark):
+        texts = (["the quick brown fox jumps over the lazy dog"] * 3
+                 + ["banana bandana banner the the the"] * 2)
+        df = spark.createDataFrame([(t,) for t in texts], "text string")
+        assert bpe_train(df, 6) == bpe_train_local(texts, 6)
+
+    def test_train_nonoverlapping_merge(self, spark):
+        # (a,a) on 'aaaa' must merge to [aa, aa], not [aa, aa, aa]
+        df = spark.createDataFrame([("aaaa aaaa",)], "text string")
+        merges = bpe_train(df, 2)
+        assert merges == bpe_train_local(["aaaa aaaa"], 2)
+        assert merges[0] == ("a", "a")
+        assert merges[1] == ("aa", "aa")
+
+
+class TestPlanShape:
+    def test_chunking_is_shuffle_free(self, spark):
+        df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+        for op in (chunk_text(df, 5, 1), chunk_tokens(df, 4, 1)):
+            plan = op._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan
+
+    def test_colloc_unigram_join_broadcasts(self, spark):
+        df = spark.createDataFrame([("a b c",)] * 8, "text string")
+        plan = (collocations(df, k=5, min_count=1)
+                ._jdf.queryExecution().executedPlan().toString())
+        assert "BroadcastHashJoin" in plan
+        assert "CartesianProduct" not in plan
 
 
 def test_search_key_folding_and_collapse(spark):
@@ -16,3 +153,59 @@ def test_search_key_folding_and_collapse(spark):
     assert got[4] == "senor 123"
     assert got[5] == ""
     assert got[6] == "only"                       # non-Latin collapses
+
+
+def test_split_sections_preamble_order_and_empty_sections(spark):
+    from ocr_spark.operators.chunk import split_sections
+
+    md = ("pre line one\npre two\n"
+          "# Title\nbody a\nbody b\n"
+          "## Sub\n"                       # heading with EMPTY body
+          "### Deep\nlast")
+    df = spark.createDataFrame([(1, md), (2, "no headings at all"),
+                                (3, "")],
+                               "doc_id long, text string")
+    rows = {(r.doc_id, r.section_idx): r for r in
+            split_sections(df).collect()}
+    assert rows[(1, 0)].heading is None
+    assert rows[(1, 0)].body == "pre line one\npre two"
+    assert rows[(1, 1)].heading == "# Title"
+    assert rows[(1, 1)].body == "body a\nbody b"
+    assert rows[(1, 2)].heading == "## Sub"
+    assert rows[(1, 2)].body == ""          # kept: heading present
+    assert rows[(1, 3)].body == "last"
+    assert rows[(2, 0)].heading is None     # headingless doc: one section
+    assert rows[(2, 0)].n_tokens == 4
+    assert (3, 0) not in rows               # empty doc emits nothing
+
+
+def test_bpe_encode_matches_pure_python(spark):
+    from ocr_spark.functions.colloc import bpe_encode
+
+    merges = [("t", "h"), ("th", "e"), ("a", "n")]
+
+    def py_encode(word):
+        syms = list(word)
+        for l, r in merges:
+            out, i = [], 0
+            while i < len(syms):
+                if (out and out[-1] == l and syms[i] == r):
+                    out[-1] = l + r
+                else:
+                    out.append(syms[i])
+                i += 1
+            syms = out
+        return len(syms)
+
+    rows = [(0, "the man with the plan"), (1, "thethe ant"),
+            (2, ""), (3, "   "), (4, "a")]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    got = {r["doc_id"]: r for r in bpe_encode(df, merges).collect()}
+    for doc_id, text in rows:
+        words = text.split()
+        assert got[doc_id]["n_words"] == len(words)
+        assert got[doc_id]["n_bpe_tokens"] == sum(
+            py_encode(w) for w in words), (doc_id, text)
+    # blank docs encode to zero tokens, zero words
+    assert got[2]["n_words"] == 0 and got[2]["n_bpe_tokens"] == 0
+    assert got[3]["n_words"] == 0 and got[3]["n_bpe_tokens"] == 0

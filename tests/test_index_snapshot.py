@@ -1,4 +1,118 @@
-"""Sentence segmentation (functions/text.py:sentences)."""
+"""Inverted index / corpus stats (operators/index.py) and snapshot
+diffing (operators/snapshot.py)."""
+
+from pyspark.sql import functions as F
+
+from ocr_spark.operators.index import corpus_stats, inverted_index
+from ocr_spark.operators.snapshot import snapshot_delta
+
+
+class TestInvertedIndex:
+    def test_positions_tf_and_min_df(self, spark):
+        df = spark.createDataFrame(
+            [(1, "a b a"), (2, "a c"), (3, "")], "doc_id long, text string")
+        got = {(r["term"], r["doc_id"]): (r["tf"], r["positions"])
+               for r in inverted_index(df, min_df=2).collect()}
+        # only 'a' appears in >= 2 docs
+        assert set(t for t, _ in got) == {"a"}
+        assert got[("a", 1)] == (2, [0, 2])
+        assert got[("a", 2)] == (1, [0])
+
+    def test_min_df_1_keeps_all_terms(self, spark):
+        df = spark.createDataFrame([(1, "x y")], "doc_id long, text string")
+        assert inverted_index(df, min_df=1).count() == 2
+
+    def test_pruning_join_broadcasts(self, spark):
+        df = spark.createDataFrame([(1, "a b a")] * 3,
+                                   "doc_id long, text string")
+        plan = (inverted_index(df, min_df=2)
+                ._jdf.queryExecution().executedPlan().toString())
+        assert "BroadcastHashJoin" in plan
+
+
+class TestCorpusStats:
+    def test_closed_form(self, spark):
+        df = spark.createDataFrame(
+            [("en", "s0", "a b c"), ("en", "s0", "a"),
+             ("ko", "s1", "")],
+            "lang string, source string, text string")
+        got = {(r["lang"], r["source"]): r
+               for r in corpus_stats(df).collect()}
+        en = got[("en", "s0")]
+        assert (en["n_docs"], en["n_tokens"]) == (2, 4)
+        assert en["avg_tokens"] == 2.0
+        assert en["p50_tokens"] == 2.0  # interpolated median of {1, 3}
+        assert (en["min_tokens"], en["max_tokens"]) == (1, 3)
+        assert got[("ko", "s1")]["n_tokens"] == 0
+
+
+class TestSnapshotDelta:
+    def _frames(self, spark):
+        old = spark.createDataFrame(
+            [("u1", "same"), ("u2", "before"), ("u3", "gone"),
+             ("u5", None)],
+            "url string, text string")
+        new = spark.createDataFrame(
+            [("u1", "same"), ("u2", "after"), ("u4", "fresh"),
+             ("u5", None)],
+            "url string, text string")
+        return old, new
+
+    def test_statuses(self, spark):
+        old, new = self._frames(spark)
+        got = {r["key"]: r["status"]
+               for r in snapshot_delta(old, new).collect()}
+        assert got == {"u1": "unchanged", "u2": "changed",
+                       "u3": "removed", "u4": "added",
+                       "u5": "unchanged"}
+
+    def test_null_vs_text_is_changed(self, spark):
+        old = spark.createDataFrame([("u1", None)], "url string, text string")
+        new = spark.createDataFrame([("u1", "now")], "url string, text string")
+        assert snapshot_delta(old, new).collect()[0]["status"] == "changed"
+
+    def test_text_never_in_join_projection(self, spark):
+        old, new = self._frames(spark)
+        plan = (snapshot_delta(old, new)
+                ._jdf.queryExecution().optimizedPlan().toString())
+        # the full-outer join sees only (key, digest): the raw text
+        # column is consumed inside the md5 projections BELOW the
+        # join — the join line itself must not reference it
+        join_lines = [ln for ln in plan.split("\n") if "Join FullOuter" in ln]
+        assert join_lines, plan
+        assert all("text" not in ln for ln in join_lines)
+
+
+class TestBm25:
+    def test_closed_form_and_ordering(self, spark):
+        import math
+
+        from ocr_spark.operators.index import bm25_topk
+        df = spark.createDataFrame(
+            [(1, "cat cat dog"), (2, "cat"), (3, "bird bird bird")],
+            "doc_id long, text string")
+        rows = bm25_topk(df, ("cat",), k=10).collect()
+        # doc 3 has no query term -> dropped; doc 2 (dl=1, far below
+        # avgdl) outranks doc 1 (tf=2 but dl=3) — BM25's length
+        # normalization working as specified
+        assert [r["doc_id"] for r in rows] == [2, 1]
+        n, df_t, avgdl = 3, 2, 7 / 3
+        idf = math.log((n - df_t + 0.5) / (df_t + 0.5) + 1)
+
+        def s(tf, dl):
+            return round(idf * (tf * 2.2 / (
+                tf + 1.2 * (0.25 + 0.75 * dl / avgdl))), 6)
+
+        assert rows[0]["score"] == s(1.0, 1)
+        assert rows[1]["score"] == s(2.0, 3)
+
+    def test_empty_query_rejected(self, spark):
+        import pytest as _pt
+
+        from ocr_spark.operators.index import bm25_topk
+        df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+        with _pt.raises(ValueError):
+            bm25_topk(df, ())
 
 
 class TestSentencesAndDomainQuality:
@@ -20,3 +134,359 @@ class TestSentencesAndDomainQuality:
                                    "doc_id long, text string")
         assert df.select(sentences("text").alias("ss")).collect()[0][
             "ss"] == ["End note!", "Done?"]
+
+    def test_domain_quality_closed_form(self, spark):
+        from ocr_spark.operators.web import domain_quality
+        long_ok = " ".join(f"word{i}" for i in range(30))
+        df = spark.createDataFrame(
+            [("https://a.example.com/1", long_ok),
+             ("https://b.example.com/2", "too short"),
+             ("https://sub.example.org/", long_ok)],
+            "url string, text string")
+        got = {r["domain"]: (r["n_pages"], r["keep_rate"])
+               for r in domain_quality(df).collect()}
+        assert got["example.com"] == (2, 0.5)
+        assert got["example.org"] == (1, 1.0)
+
+
+class TestSitemap:
+    def test_loc_extraction_entities_whitespace_empty(self, spark):
+        from ocr_spark.operators.web import sitemap_urls
+        df = spark.createDataFrame(
+            [("https://h/s.xml",
+              "<urlset><url><loc>https://h/a</loc></url>"
+              "<url><loc> https://h/b?x=1&amp;y=2 </loc></url>"
+              "<url><loc></loc></url></urlset>")],
+            "sitemap_url string, xml string")
+        rows = [tuple(r) for r in sitemap_urls(df).orderBy("seq").collect()]
+        assert rows == [("https://h/s.xml", 0, "https://h/a"),
+                        ("https://h/s.xml", 1, "https://h/b?x=1&y=2")]
+
+    def test_no_locs_no_rows(self, spark):
+        from ocr_spark.operators.web import sitemap_urls
+        df = spark.createDataFrame([("s", "<urlset></urlset>")],
+                                   "sitemap_url string, xml string")
+        assert sitemap_urls(df).count() == 0
+
+
+class TestCanonicalCollapse:
+    def test_grouping_null_and_normalization(self, spark):
+        from ocr_spark.operators.web import canonical_collapse
+        df = spark.createDataFrame(
+            [("https://m.ex.com/amp/1", "https://ex.com/article"),
+             ("https://ex.com/article?utm_source=x", "https://ex.com/article"),
+             # canonical spelled differently -> same group after normalize
+             ("https://ex.com/mirror", "HTTPS://EX.COM:443/article"),
+             ("https://solo.ex.com/p", None)],
+            "url string, canonical string")
+        got = {r["canonical_url"]: (r["n_pages"], r["representative"])
+               for r in canonical_collapse(df).collect()}
+        assert got["https://ex.com/article"] == (
+            3, "https://ex.com/article?utm_source=x")
+        assert got["https://solo.ex.com/p"] == (1, "https://solo.ex.com/p")
+
+    def test_no_normalize_keeps_spellings_apart(self, spark):
+        from ocr_spark.operators.web import canonical_collapse
+        df = spark.createDataFrame(
+            [("u1", "https://ex.com/a"), ("u2", "HTTPS://EX.COM/a")],
+            "url string, canonical string")
+        assert canonical_collapse(df, normalize=False).count() == 2
+
+
+def test_capture_history_scd2_intervals(spark):
+    """Versions are 1..n per key in ts order, intervals chain
+    (valid_to == next valid_from), exactly one current row per key,
+    tie_col breaks equal timestamps deterministically."""
+    from datetime import datetime
+
+    from ocr_spark.operators.snapshot import capture_history
+
+    t = lambda s: datetime(2024, 1, s)
+    df = spark.createDataFrame(
+        [(1, "u", t(1)), (2, "u", t(5)), (3, "u", t(3)),
+         (4, "v", t(2)), (6, "w", t(4)), (5, "w", t(4))],  # w: equal ts
+        "cap_id long, url string, ts timestamp")
+    rows = capture_history(df, key_col="url", ts_col="ts",
+                           tie_col="cap_id").collect()
+    by_key = {}
+    for r in rows:
+        by_key.setdefault(r.url, []).append(r)
+    for key, rs in by_key.items():
+        rs.sort(key=lambda r: r.version)
+        assert [r.version for r in rs] == list(range(1, len(rs) + 1))
+        for a, b in zip(rs, rs[1:]):
+            assert a.valid_to == b.valid_from
+        assert [r.is_current for r in rs] == [False] * (len(rs) - 1) + [True]
+    w = by_key["w"]
+    assert (w[0].cap_id, w[1].cap_id) == (5, 6)   # tie broken by cap_id
+
+
+class TestPostingDeltas:
+    def test_sharded_equals_naive_with_boundary_gaps(self, spark):
+        """Doc ids chosen so shard_bits=2 (4-id shards) produces BOTH
+        intra-shard gaps and cross-shard boundary gaps; the closed-form
+        expectations are the naive lag()-window numbers — equality
+        proves the boundary accounting counts every gap exactly once."""
+        from ocr_spark.operators.index import posting_deltas
+
+        ids = [0, 1, 3, 4, 8, 130, 16600]
+        rows = [(i, f"shared only{i}") for i in ids]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        out = posting_deltas(df, min_df=2, shard_bits=2).collect()
+        assert [r.term for r in out] == ["shared"]  # only{i} pruned (df=1)
+        r = out[0]
+        assert (r.df_t, r.first_doc) == (7, 0)
+        # gaps: 1,2,1,4,122,16470 -> min 1, max 16470, sum = 16600 - 0
+        assert (r.min_gap, r.max_gap, r.gap_sum) == (1, 16470, 16600)
+        # varint: first(0)=1B; gaps 1,2,1,4,122 -> 1B each; 16470 -> 3B
+        assert r.varint_bytes == 1 + 5 * 1 + 3
+
+    def test_shard_width_invariance(self, spark):
+        """The same corpus through one-giant-shard (pure window path)
+        and tiny-shard (boundary-dominated path) plans yields identical
+        rows — the sharding is a physical choice, not a semantic one."""
+        from ocr_spark.operators.index import posting_deltas
+
+        rows = [(i * 3 + (i % 2), "tok alpha" if i % 2 else "tok beta")
+                for i in range(40)]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+
+        def rows_of(sb):
+            return sorted(
+                tuple(r) for r in
+                posting_deltas(df, min_df=2, shard_bits=sb).collect())
+
+        assert rows_of(30) == rows_of(1)
+
+    def test_varint_boundaries_exact(self, spark):
+        """Gaps at the 7-bit varint boundaries: 127 -> 1 byte,
+        128 -> 2; 16383 -> 2, 16384 -> 3 (integer CASE, no float log)."""
+        from ocr_spark.operators.index import posting_deltas
+
+        # one term per boundary pair: docs at (0, gap)
+        rows = []
+        for t, gap in [("a", 127), ("b", 128), ("c", 16383), ("d", 16384)]:
+            rows += [(0, t), (gap, t)]
+        df = (spark.createDataFrame(rows, "doc_id long, text string")
+              .groupBy("doc_id")
+              .agg(F.concat_ws(" ", F.collect_list("text")).alias("text")))
+        got = {r.term: r.varint_bytes
+               for r in posting_deltas(df, min_df=2, shard_bits=3).collect()}
+        assert got == {"a": 1 + 1, "b": 1 + 2, "c": 1 + 2, "d": 1 + 3}
+
+
+class TestTfidfCosinePairs:
+    def test_identical_docs_and_idf_weighting(self, spark):
+        """Identical docs score 1.0; sharing a RARE term outranks
+        sharing a common one (the idf point: Jaccard would tie them)."""
+        from ocr_spark.operators.index import tfidf_cosine_pairs
+
+        rows = [
+            (1, "rare alpha beta"),
+            (2, "rare gamma delta"),       # shares ONE rare term (df=2)
+            (3, "comm epsilon zeta"),
+            (4, "comm eta theta"),         # shares ONE common term (df=4)
+            (5, "comm iota kappa"),
+            (6, "comm lamda mu"),
+            (7, "same same text here"),
+            (8, "same same text here"),    # identical to 7
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        out = {(r.id_a, r.id_b): r.cosine for r in
+               tfidf_cosine_pairs(df, threshold=0.0).collect()}
+        assert out[(7, 8)] == 1.0
+        # both pairs share exactly one term; 'rare' (df=2) outweighs
+        # 'comm' (df=4) — the idf point Jaccard cannot express
+        assert out[(1, 2)] > out[(3, 4)]
+
+    def test_max_df_prunes_vocabulary_and_bounds_join(self, spark):
+        from ocr_spark.operators.index import tfidf_cosine_pairs
+
+        rows = [(i, f"stop stop unique{i}") for i in range(1, 7)]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        # every pair related only through 'stop' (df=6)
+        assert tfidf_cosine_pairs(df, threshold=0.01).count() == 15
+        assert tfidf_cosine_pairs(df, threshold=0.01, max_df=5).count() == 0
+
+
+class TestIndexDelta:
+    def test_ops_per_status_and_unchanged_short_circuit(self, spark):
+        from ocr_spark.operators.index import index_delta
+
+        old = spark.createDataFrame(
+            [("a", "x y z"),          # unchanged
+             ("b", "p q"),            # changed: q -> r
+             ("c", "gone words")],    # removed
+            "url string, text string")
+        new = spark.createDataFrame(
+            [("a", "x y z"),
+             ("b", "p r"),
+             ("d", "fresh page")],    # added
+            "url string, text string")
+        ops = {(r.key, r.term, r.op) for r in index_delta(old, new).collect()}
+        assert ops == {
+            ("b", "q", "del"), ("b", "r", "add"),
+            ("c", "gone", "del"), ("c", "words", "del"),
+            ("d", "fresh", "add"), ("d", "page", "add"),
+        }
+        # the unchanged doc contributes nothing, and the plan prunes it
+        # BEFORE tokenization (semi-join under the explode)
+        plan = index_delta(old, new)._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert "LeftSemi" in plan
+
+
+class TestKwicSnippets:
+    def test_occurrences_edges_and_absence(self, spark):
+        from ocr_spark.operators.index import kwic_snippets
+
+        df = spark.createDataFrame(
+            [(1, "hit a b c hit d"),      # at position 0 and 4
+             (2, "no match here"),
+             (3, "hit"),                  # single-token doc
+             (4, "")],
+            "doc_id long, text string")
+        rows = {(r.doc_id, r.pos): r.snippet
+                for r in kwic_snippets(df, "hit", window=2).collect()}
+        assert rows == {
+            (1, 0): "hit a b",            # left edge clamps
+            (1, 4): "b c hit d",          # right edge clamps
+            (3, 0): "hit",
+        }
+
+
+class TestMineIdentifiers:
+    def test_kinds_order_and_boundaries(self, spark):
+        from ocr_spark.operators.index import mine_identifiers
+
+        df = spark.createDataFrame(
+            [(1, "see DOI:10.1000/ABC.def then 10.99999/x-y_z(1):a end"),
+             (2, "preprint arXiv:2301.00042 and arxiv:9912.1234."),
+             (3, "x10.1234/notadoi and arxiv:123.4567 miss"),
+             (4, "no identifiers at all"),
+             (5, "")],
+            "doc_id long, text string")
+        rows = {(r.doc_id, r.kind, r.match_idx): r.ident
+                for r in mine_identifiers(df).collect()}
+        assert rows == {
+            # case-folded before matching; two DOIs keep scan order
+            (1, "doi", 0): "10.1000/abc.def",
+            (1, "doi", 1): "10.99999/x-y_z(1):a",
+            (2, "arxiv", 0): "arxiv:2301.00042",
+            (2, "arxiv", 1): "arxiv:9912.1234",
+            # \b blocks x10.…; arxiv needs a 4-digit YYMM block
+            # (123.4567 has only 3 before the dot)
+        }
+
+    def test_custom_pattern_table(self, spark):
+        from ocr_spark.operators.index import mine_identifiers
+
+        df = spark.createDataFrame(
+            [(1, "ISBN 978-0306406157 ok")], "doc_id long, text string")
+        out = mine_identifiers(
+            df, patterns={"isbn": r"\b97[89]-\d{10}\b"}).collect()
+        assert [(r.kind, r.ident) for r in out] == \
+            [("isbn", "978-0306406157")]
+
+
+class TestIdentifierLinkage:
+    def test_pairs_min_shared_and_hot_guard(self, spark):
+        from ocr_spark.operators.index import identifier_linkage
+
+        # docs 1,2 share x+y (n_shared=2); 3 shares only x with them;
+        # 'hot' is held by everyone and must fall to the max_df guard
+        # (df=4 > 3); kinds must NOT cross-match (doi:z vs arxiv:z)
+        rows = [(d, k, i) for d, k, i in [
+            (1, "doi", "x"), (1, "doi", "y"), (1, "doi", "z"),
+            (2, "doi", "x"), (2, "doi", "y"), (2, "arxiv", "z"),
+            (3, "doi", "x"),
+            (4, "doi", "w")]] + [(d, "doi", "hot") for d in (1, 2, 3, 4)]
+        ids = spark.createDataFrame(
+            rows, "doc_id long, kind string, ident string")
+        got = {(r.doc_a, r.doc_b): r.n_shared
+               for r in identifier_linkage(ids, max_df=3).collect()}
+        assert got == {(1, 2): 2, (1, 3): 1, (2, 3): 1}
+        got2 = {(r.doc_a, r.doc_b): r.n_shared
+                for r in identifier_linkage(
+                    ids, min_shared=2, max_df=3).collect()}
+        assert got2 == {(1, 2): 2}
+
+    def test_duplicate_mentions_count_once(self, spark):
+        from ocr_spark.operators.index import identifier_linkage
+
+        ids = spark.createDataFrame(
+            [(1, "doi", "x"), (1, "doi", "x"), (2, "doi", "x")],
+            "doc_id long, kind string, ident string")
+        out = identifier_linkage(ids).collect()
+        assert [(r.doc_a, r.doc_b, r.n_shared) for r in out] == [(1, 2, 1)]
+
+
+class TestMineMeasurements:
+    def test_units_values_and_normalization(self, spark):
+        from ocr_spark.operators.index import mine_measurements
+
+        df = spark.createDataFrame(
+            [(1, "hike 12 km then a 3.5 m drop, a 500mb file, 2 h"),
+             (2, "Mass 0.5 KG and 750 mg"),      # case-folded
+             (3, "1234567 km is too many digits"),  # skipped, not cut
+             (4, "no numbers here"), (5, "")],
+            "doc_id long, text string")
+        rows = {(r.doc_id, r.match_idx):
+                (r.unit, r.value_milli, r.dimension, r.norm_milli)
+                for r in mine_measurements(df).collect()}
+        assert rows == {
+            (1, 0): ("km", 12000, "length", 12_000_000_000),
+            (1, 1): ("m", 3500, "length", 3_500_000),
+            (1, 2): ("mb", 500000, "data", 500_000_000_000),
+            (1, 3): ("h", 2000, "time", 7_200_000_000),
+            (2, 0): ("kg", 500, "mass", 500_000_000),
+            (2, 1): ("mg", 750000, "mass", 750_000),
+        }
+
+    def test_compound_units_beat_prefixes(self, spark):
+        from ocr_spark.operators.index import mine_measurements
+
+        # "10 ms" must parse as ms (time), never m + stray "s"
+        df = spark.createDataFrame(
+            [(1, "latency 10 ms, size 3 gb")],
+            "doc_id long, text string")
+        out = {r.unit: (r.dimension, r.norm_milli)
+               for r in mine_measurements(df).collect()}
+        assert out == {"ms": ("time", 10000),
+                       "gb": ("data", 3_000_000_000_000)}
+
+
+class TestHybridRerank:
+    def test_candidates_then_cosine_order(self, spark):
+        from ocr_spark.operators.index import hybrid_rerank
+
+        docs = spark.createDataFrame(
+            [(1, "ocr spark engine"), (2, "spark pipeline"),
+             (3, "spark notes extra"), (4, "nothing relevant")],
+            "doc_id long, text string")
+        emb = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0]),
+             (4, [1.0, 0.0])],
+            "vec_id long, embedding array<double>")
+        out = hybrid_rerank(docs, emb, ("spark",), [1.0, 0.0],
+                            k_candidates=3, k=2).collect()
+        # doc 4 never enters (no lexical hit); rerank is by cosine
+        assert [(r.doc_id, r.cos_sim, r.rank) for r in out] == [
+            (1, 1.0, 1), (3, 0.707107, 2)]
+        assert all(r.bm25_score > 0 for r in out)
+
+    def test_k_candidates_bounds_recall(self, spark):
+        from ocr_spark.operators.index import hybrid_rerank
+
+        # doc 2 has the best cosine but the WORST bm25 of the three
+        # hits; with k_candidates=2 it must never reach the reranker
+        docs = spark.createDataFrame(
+            [(1, "q q q"), (2, "q filler filler filler filler"),
+             (3, "q q filler")],
+            "doc_id long, text string")
+        emb = spark.createDataFrame(
+            [(1, [0.0, 1.0]), (2, [1.0, 0.0]), (3, [1.0, 1.0])],
+            "vec_id long, embedding array<double>")
+        out = hybrid_rerank(docs, emb, ("q",), [1.0, 0.0],
+                            k_candidates=2, k=2).collect()
+        assert [r.doc_id for r in out] == [3, 1]

@@ -1,8 +1,74 @@
-"""Unicode normalization and PDF text repair (operators/normalize.py)."""
+"""Bigram LM, Flesch readability (functions/quality.py) and Unicode
+normalization (operators/normalize.py)."""
+
+import math
 
 from pyspark.sql import functions as F
 
+from ocr_spark.functions.quality import bigram_logprob, readability
 from ocr_spark.operators.normalize import nfc_clean, normalize_text
+
+
+class TestBigramLm:
+    def test_closed_form_single_doc_corpus(self, spark):
+        # corpus "a b a b": bigrams (a,b)x2, (b,a)x1; V=2;
+        # c(a)=2, c(b)=2
+        df = spark.createDataFrame([(1, "a b a b")], "doc_id long, text string")
+        row = bigram_logprob(df).collect()[0]
+        lp_ab = math.log((2 + 1) / (2 + 2))
+        lp_ba = math.log((1 + 1) / (2 + 2))
+        mean = (2 * lp_ab + lp_ba) / 3
+        assert row["n_bigrams"] == 3
+        assert row["avg_logprob"] == round(mean, 6)
+        assert row["ppl"] == round(math.exp(-mean), 6)
+
+    def test_short_docs_null_scores(self, spark):
+        df = spark.createDataFrame(
+            [(1, "solo"), (2, ""), (3, "a b")], "doc_id long, text string")
+        got = {r["doc_id"]: (r["n_bigrams"], r["avg_logprob"])
+               for r in bigram_logprob(df).collect()}
+        assert got[1] == (0, None)
+        assert got[2] == (0, None)
+        assert got[3][0] == 1 and got[3][1] is not None
+
+    def test_gibberish_scores_worse_than_fluent(self, spark):
+        fluent = "the quick brown fox jumps over the lazy dog"
+        rows = [(i, fluent) for i in range(20)]
+        rows.append((99, "dog the over fox quick jumps lazy brown the"))
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {r["doc_id"]: r["ppl"] for r in bigram_logprob(df).collect()}
+        assert got[99] > got[0]
+
+    def test_model_joins_broadcast(self, spark):
+        df = spark.createDataFrame([(1, "a b c")] * 4,
+                                   "doc_id long, text string")
+        plan = (bigram_logprob(df)
+                ._jdf.queryExecution().executedPlan().toString())
+        assert "BroadcastHashJoin" in plan
+        assert "CartesianProduct" not in plan
+
+
+class TestReadability:
+    def test_closed_form(self, spark):
+        # "See the cat. It sat!" -> 5 words, 2 sentences,
+        # vowel groups: see(e) the(e) cat(a) it(i) sat(a) = 5, no
+        # vowel-less words -> syllables 5
+        df = spark.createDataFrame([(1, "See the cat. It sat!")],
+                                   "doc_id long, text string")
+        got = df.select(readability("text").alias("f")).collect()[0]["f"]
+        assert got == round(206.835 - 1.015 * (5 / 2) - 84.6 * (5 / 5), 6)
+
+    def test_vowelless_words_count_one_syllable(self, spark):
+        # "tv hmm" -> 2 words, 1 sentence, 0 vowel groups + 2
+        # vowel-less floors = 2 syllables
+        df = spark.createDataFrame([(1, "tv hmm")], "doc_id long, text string")
+        got = df.select(readability("text").alias("f")).collect()[0]["f"]
+        assert got == round(206.835 - 1.015 * 2 - 84.6 * 1.0, 6)
+
+    def test_empty_text_null(self, spark):
+        df = spark.createDataFrame([(1, "  ")], "doc_id long, text string")
+        assert df.select(readability("text").alias("f")
+                         ).collect()[0]["f"] is None
 
 
 class TestNormalize:
@@ -42,6 +108,8 @@ class TestNormalize:
 
 
 def test_fix_pdf_text_dehyphenation_and_ligatures(spark):
+    from pyspark.sql import functions as F
+
     from ocr_spark.operators.normalize import fix_pdf_text
 
     rows = [

@@ -13,7 +13,8 @@ import __spark_entry__ as entry_mod
 
 SF_DIR = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.01")
 
-TABLES = ["events", "documents"]
+TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")

@@ -1,6 +1,239 @@
-"""Per-sentence code switching (functions/text.py:code_switch) against
-hand-computed values.  Cross-engine value parity at sf0.01 is covered
-by tests/test_oracle_parity.py (code_switch)."""
+"""Unit tests for the repetition/quality-filter family
+(ocr_spark.functions.quality) against hand-computed values.
+
+Cross-engine value parity at sf0.01 is covered by
+tests/test_oracle_parity.py, which auto-parametrizes over every
+oracle_sql() entry (repetition_stats, quality_filter included).
+"""
+
+import pytest
+from pyspark.sql import functions as F
+
+from ocr_spark.functions.quality import (QUALITY_THRESHOLDS, max_sorted_run,
+                                         with_quality_filter,
+                                         with_repetition_stats)
+
+
+def _rep(spark, text):
+    df = spark.createDataFrame([(text,)], "text string")
+    return with_repetition_stats(df).select(
+        "dup_token_ratio", "top_bigram_ratio", "dup_line_ratio"
+    ).first()
+
+
+def test_repetition_hand_computed(spark):
+    r = _rep(spark, "a b a b a b")
+    # 6 tokens, 2 distinct -> 1 - 2/6; bigrams: ab,ba,ab,ba,ab -> 3/5
+    assert r.dup_token_ratio == pytest.approx(0.6667)
+    assert r.top_bigram_ratio == pytest.approx(0.6)
+    assert r.dup_line_ratio == 0.0
+
+
+def test_repetition_lines_raw_not_trimmed(spark):
+    # 4 non-blank lines, ' x ' != 'x' (raw line identity), 3 distinct
+    r = _rep(spark, "x\ny\nx\n\n x ")
+    assert r.dup_line_ratio == pytest.approx(0.25)
+
+
+@pytest.mark.parametrize("text", ["", "   ", "word"])
+def test_repetition_degenerate_inputs(spark, text):
+    r = _rep(spark, text)
+    assert (r.dup_token_ratio, r.top_bigram_ratio, r.dup_line_ratio) == (
+        0.0, 0.0, 0.0)
+
+
+def test_max_sorted_run(spark):
+    df = spark.range(1).select(
+        max_sorted_run(F.array(*[F.lit(x) for x in
+                                 ["a", "a", "b", "c", "c", "c"]])).alias("m"),
+        max_sorted_run(F.array().cast("array<string>")).alias("empty"),
+        max_sorted_run(F.array(F.lit("z"))).alias("one"),
+    ).first()
+    assert (df.m, df.empty, df.one) == (3, 0, 1)
+
+
+def _reason(spark, text):
+    df = spark.createDataFrame([(text,)], "text string")
+    row = with_quality_filter(df).select("keep", "drop_reason").first()
+    return row.keep, row.drop_reason
+
+
+def test_quality_filter_reasons(spark):
+    t = QUALITY_THRESHOLDS
+    assert _reason(spark, "only five short words here") == (0, "too_short")
+    long_word = "pneumonoultramicroscopicsilicovolcanoconiosis"
+    assert _reason(spark, (long_word + " ") * 25) == (0, "token_len")
+    assert _reason(spark, "$$$ %%% ^^^ &&& ((( " * 5) == (0, "symbol_noise")
+    # 30x the same 2-char token: avg_token_len = 2.0 passes, dup fires
+    assert _reason(spark, "ab " * 30) == (0, "repetitive_tokens")
+    # distinct-enough tokens but one hot bigram: 30 unique + 6x "zz yy"
+    uniq = " ".join(f"w{i:02d}" for i in range(30))
+    keep, reason = _reason(spark, uniq + " zz yy" * 6)
+    assert (keep, reason) == (0, "repetitive_bigrams")
+    # repeated LINE but low token/bigram repetition: L1 L2 L1
+    l1 = " ".join(f"aa{i}" for i in range(8))
+    l2 = " ".join(f"bb{i}" for i in range(8))
+    keep, reason = _reason(spark, f"{l1}\n{l2}\n{l1}")
+    assert (keep, reason) == (0, "repetitive_lines")
+    good = " ".join(f"tok{i:03d}" for i in range(t["min_tokens"] + 5))
+    assert _reason(spark, good) == (1, "ok")
+
+
+def test_pii_scrub(spark):
+    from ocr_spark.functions.scrub import with_pii_scrub
+
+    text = ("mail bob@example.com or b.c-d+x@sub.domain.org, "
+            "host 10.0.255.1, call +49 (30) 1234-567 soon")
+    df = spark.createDataFrame([(text,)], "text string")
+    r = with_pii_scrub(df).first()
+    assert (r.n_email, r.n_ip, r.n_phone) == (2, 1, 1)
+    assert r.scrubbed == ("mail <EMAIL> or <EMAIL>, "
+                          "host <IP>, call <PHONE> soon")
+
+
+def test_pii_scrub_order_protects_emails_and_ips(spark):
+    from ocr_spark.functions.scrub import with_pii_scrub
+
+    # the email's domain digits and the IP's dotted quad must not be
+    # half-eaten by the phone pattern (redaction order contract)
+    df = spark.createDataFrame(
+        [("a1.2.3.4b no-match 192.168.0.1 x9@42.co",)], "text string")
+    r = with_pii_scrub(df).first()
+    assert r.n_ip == 1  # a1.2.3.4b has no word boundary match
+    assert "<IP>" in r.scrubbed and "<EMAIL>" in r.scrubbed
+    assert "<PHONE>" not in r.scrubbed
+
+
+def test_pii_counts_are_sequential_not_raw(spark):
+    """Each kind is counted AFTER the previous kinds were redacted, so
+    a phone-looking digit run inside an email local part is counted
+    once (as the email it is), never double-counted as a phone."""
+    from ocr_spark.functions.scrub import count_pii, with_pii_scrub
+
+    df = spark.createDataFrame([("reach a+14155550123@x.com today",)],
+                               "text string")
+    r = with_pii_scrub(df).first()
+    assert (r.n_email, r.n_ip, r.n_phone) == (1, 0, 0)
+    assert r.scrubbed == "reach <EMAIL> today"
+    # the raw-text counter (documented overlap) still sees both
+    raw = df.select(*[c.alias(k) for k, c in count_pii("text").items()]).first()
+    assert (raw.email, raw.phone) == (1, 1)
+
+
+def test_quality_filter_splits_documents_table(spark):
+    """On the sf0.001 documents table the filter must be non-trivial:
+    both classes present (a filter that keeps or drops everything
+    proves nothing)."""
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    counts = dict(
+        with_quality_filter(docs).groupBy("keep").count().collect()
+    )
+    assert set(counts) == {0, 1}
+
+
+def test_unigram_logprob_hand_computed(spark):
+    """4-doc corpus small enough to hand-check: p(tok) = (c+1)/(N+V)."""
+    import math
+
+    from ocr_spark.functions.quality import unigram_logprob
+
+    docs = [(1, "a a b"), (2, "a c"), (3, ""), (4, "b")]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {r["doc_id"]: r for r in unigram_logprob(df).collect()}
+    # counts: a=3, b=2, c=1; N=6, V=3 -> denom 9
+    p = {"a": 4 / 9, "b": 3 / 9, "c": 2 / 9}
+    exp1 = (2 * math.log(p["a"]) + math.log(p["b"])) / 3
+    exp2 = (math.log(p["a"]) + math.log(p["c"])) / 2
+    exp4 = math.log(p["b"])
+    assert got[1]["n_tokens"] == 3
+    assert abs(got[1]["avg_logprob"] - exp1) < 1e-12
+    assert abs(got[2]["avg_logprob"] - exp2) < 1e-12
+    assert abs(got[4]["avg_logprob"] - exp4) < 1e-12
+    assert abs(got[1]["ppl"] - math.exp(-exp1)) < 1e-9
+    # empty doc: no evidence -> NULL score, zero tokens, still a row
+    assert got[3]["n_tokens"] == 0
+    assert got[3]["avg_logprob"] is None and got[3]["ppl"] is None
+    # broadcast and shuffle-join paths agree
+    got2 = {r["doc_id"]: r for r in
+            unigram_logprob(df, broadcast_vocab=False).collect()}
+    for k in got:
+        a, b = got[k]["avg_logprob"], got2[k]["avg_logprob"]
+        assert (a is None and b is None) or abs(a - b) < 1e-12
+
+
+def test_ccnet_buckets_tertiles(spark):
+    """Bucket thresholds fit on the hash sample split the scored docs
+    into roughly balanced head/middle/tail per language; token-less
+    docs keep a NULL bucket; assignment is partitioning-invariant."""
+    import __spark_entry__ as entry_mod
+
+    out = entry_mod.q_ccnet_buckets(spark, "/root/testdata/sf0.001").collect()
+    from collections import Counter
+
+    c = Counter(r.bucket for r in out if r.bucket is not None)
+    n = sum(c.values())
+    assert set(c) <= {"head", "middle", "tail"}
+    assert n > 0
+    for b in ("head", "middle", "tail"):
+        assert c[b] / n < 0.6        # no degenerate single-bucket fit
+    assert all((r.ppl is None) == (r.bucket is None) or r.bucket is not None
+               for r in out)
+
+
+def test_format_signals_bullets_ellipsis_stopwords(spark):
+    from ocr_spark.functions.quality import with_format_signals
+
+    rows = [
+        (0, "- a\n* b\n1. c\nplain\n\n  "),       # 3 of 4 non-blank lines
+        (1, "teaser one...\nand more…\nplain"),   # 2 of 3 ellipsis
+        (2, "the cat sat with the dog and that"), # stop words: the/with/and/that
+        (3, "keyword spam keyword spam"),         # zero stop words
+        (4, ""),                                  # blank -> all zeros
+    ]
+    df = spark.createDataFrame(rows, ["i", "text"])
+    out = {r["i"]: r for r in with_format_signals(df).collect()}
+    assert out[0]["bullet_line_ratio"] == 0.75
+    assert out[1]["ellipsis_line_ratio"] == round(2 / 3, 4)
+    assert out[2]["stopword_hits"] == 4 and out[2]["has_stop_words"] == 1
+    assert out[3]["stopword_hits"] == 0 and out[3]["has_stop_words"] == 0
+    assert out[4]["bullet_line_ratio"] == 0.0
+    assert out[4]["ellipsis_line_ratio"] == 0.0
+
+
+# -- k-anonymity --------------------------------------------------------------
+
+def test_k_anonymity_classes_and_flags(spark):
+    from ocr_spark.functions.scrub import k_anonymity
+
+    rows = [("en", 1), ("en", 1), ("en", 1),          # safe at k=3
+            ("de", 2), ("de", 2),                       # unsafe
+            (None, 3), (None, 3), (None, 3), (None, 3)]  # NULL class, safe
+    df = spark.createDataFrame(rows, "lang string, b int")
+    got = {(r["lang"], r["b"]): (r["class_size"], r["is_safe"])
+           for r in k_anonymity(df, ["lang", "b"], k=3).collect()}
+    assert got == {("en", 1): (3, True), ("de", 2): (2, False),
+                   (None, 3): (4, True)}
+
+
+def test_suppress_below_k_drops_unsafe_and_null_classes(spark):
+    from ocr_spark.functions.scrub import suppress_below_k
+
+    rows = [("en", 1, 10), ("en", 1, 11), ("en", 1, 12),
+            ("de", 2, 20), ("de", 2, 21),
+            (None, 3, 30), (None, 3, 31)]
+    df = spark.createDataFrame(rows, "lang string, b int, doc_id int")
+    kept = suppress_below_k(df, ["lang", "b"], k=3).collect()
+    # the de class AND the NULL-lang class are both sub-k -> dropped
+    assert sorted(r["doc_id"] for r in kept) == [10, 11, 12]
+    # column contract unchanged
+    assert sorted(kept[0].asDict()) == ["b", "doc_id", "lang"]
+
+
+def test_suppress_below_k_keeps_everything_at_k1(spark):
+    from ocr_spark.functions.scrub import suppress_below_k
+
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "lang string, d int")
+    assert suppress_below_k(df, ["lang"], k=1).count() == 2
 
 
 class TestCodeSwitch:
@@ -20,4 +253,84 @@ class TestCodeSwitch:
             1: (3, 3, "en", 2),          # en -> es -> en
             2: (2, 0, "und", 0),         # no marker evidence at all
             3: (2, 2, "de", 1),          # 1-1 tie falls alphabetically
+        }
+
+
+class TestSubword:
+    def test_vocab_ordering_and_singles_retained(self, spark):
+        from ocr_spark.functions.subword import subword_vocab
+
+        df = spark.createDataFrame([(1, "aa aa b")],
+                                   "doc_id long, text string")
+        got = [tuple(r) for r in
+               subword_vocab(df, vocab_size=10, max_piece_len=2)
+               .orderBy("rank").collect()]
+        # count desc, piece asc, is_cont asc; singles always kept
+        assert got == [(1, "a", False, 2), (2, "a", True, 2),
+                       (3, "aa", False, 2), (4, "b", False, 1)]
+
+    def test_vocab_size_truncates_multis_only(self, spark):
+        from ocr_spark.functions.subword import subword_vocab
+
+        df = spark.createDataFrame([(1, "abc abd")],
+                                   "doc_id long, text string")
+        v = subword_vocab(df, vocab_size=1, max_piece_len=3).collect()
+        multis = [r.piece for r in v if len(r.piece) >= 2]
+        singles = {r.piece for r in v if len(r.piece) == 1}
+        assert multis == ["ab"]          # the single best multi piece
+        assert singles == {"a", "b", "c", "d"}
+
+    def test_greedy_longest_match_and_unk(self, spark):
+        from ocr_spark.functions.subword import wordpiece_segment_stats
+
+        vocab = spark.createDataFrame(
+            [("spa", False), ("rk", True), ("s", False), ("p", True),
+             ("a", True), ("r", True), ("k", True)],
+            "piece string, is_cont boolean")
+        docs = spark.createDataFrame(
+            [(1, "Spark zz spark")], "doc_id long, text string")
+        r = wordpiece_segment_stats(docs, vocab).collect()[0]
+        # spark -> spa+rk (case-folded), zz -> two UNK single-char
+        # advances
+        assert (r.n_words, r.n_pieces, r.n_unk) == (3, 6, 2)
+
+
+class TestLicenseDetect:
+    def test_precedence_and_ambiguity_count(self, spark):
+        from ocr_spark.functions.quality import license_detect
+
+        df = spark.createDataFrame(
+            [(1, "see creativecommons.org/licenses/by-nc/4.0/ terms "
+                 "but also all rights reserved"),
+             (2, "released under the MIT License"),
+             (3, "this is in the Public Domain"),
+             (4, "covered by the GNU General Public License v3"),
+             (5, "plain page, no licensing text"),
+             (6, "Apache License 2.0 applies; all rights reserved")],
+            "doc_id long, text string")
+        got = {r.doc_id: (r.license, r.n_signals)
+               for r in license_detect(df).collect()}
+        assert got == {
+            1: ("cc-by-nc", 2),        # CC grant beats the footer
+            2: ("mit", 1),             # case-folded
+            3: ("public-domain", 1),
+            4: ("gpl", 1),
+            5: ("none", 0),
+            6: ("apache", 2),          # apache beats all-rights
+        }
+
+
+class TestCompressibility:
+    def test_counts_and_short_doc(self, spark):
+        from ocr_spark.functions.quality import compressibility
+
+        df = spark.createDataFrame(
+            [(1, "ababab"), (2, "abc")], "doc_id long, text string")
+        got = {(r.doc_id, r.k): (r.n_chars, r.n_grams, r.n_distinct)
+               for r in compressibility(df, ks=(2, 4)).collect()}
+        # 'ababab': 2-grams ab,ba,ab,ba,ab -> 5 total, 2 distinct;
+        # 4-grams abab,baba,abab -> 3 total, 2 distinct
+        assert got == {
+            (1, 2): (6, 5, 2), (1, 4): (6, 3, 2),
+            (2, 2): (3, 2, 2), (2, 4): (3, 0, 0),
         }

@@ -1,8 +1,188 @@
-"""Charset sniffing (extractor/core.py:sniff_charset): the BOM, meta
-and byte-validity ladder."""
+"""Unit tests for the HLL cardinality sketch (functions/sketch.py) and
+the site-level boilerplate operators (operators/template.py) against
+hand-computed / pure-Python references.
+
+Cross-engine value parity at sf0.01 is covered by
+tests/test_oracle_parity.py (hll_count, template_strip, para_dedup).
+"""
+
+import hashlib
+import math
 
 import pytest
+from pyspark.sql import functions as F
 
+from ocr_spark.functions.sketch import HLL_M, hll_cardinality
+from ocr_spark.operators.template import dedup_paragraphs, strip_templates
+
+
+# ---------------------------------------------------------------- HLL
+
+def _py_hll(values):
+    """Pure-Python twin of the spec in functions/sketch.py."""
+    regs = {}
+    for v in values:
+        h = int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16)
+        bucket, rest = h >> 54, h & ((1 << 54) - 1)
+        rho = 55 - rest.bit_length()
+        regs[bucket] = max(regs.get(bucket, 0), rho)
+    nb = len(regs)
+    s_scaled = sum(1 << (55 - r) for r in regs.values())
+    denom = s_scaled + (HLL_M - nb) * (1 << 55)
+    raw = 0.709 * HLL_M * HLL_M * float(1 << 55) / float(denom)
+    v_empty = HLL_M - nb
+    if raw <= 2.5 * HLL_M and v_empty > 0:
+        return round(HLL_M * math.log(HLL_M / float(v_empty)), 4)
+    return round(raw, 4)
+
+
+def test_hll_matches_python_reference(spark):
+    vals = [f"value-{i % 37}" for i in range(200)]  # 37 distinct
+    df = spark.createDataFrame([(v, "g") for v in vals], "v string, g string")
+    got = hll_cardinality(df, "v", ["g"]).first()
+    assert got.hll_estimate == _py_hll(set(vals))
+
+
+def test_hll_duplicates_do_not_move_registers(spark):
+    base = [f"k{i}" for i in range(50)]
+    df1 = spark.createDataFrame([(v, "g") for v in base],
+                                "v string, g string")
+    df2 = spark.createDataFrame([(v, "g") for v in base * 5],
+                                "v string, g string")
+    e1 = hll_cardinality(df1, "v", ["g"]).first().hll_estimate
+    e2 = hll_cardinality(df2, "v", ["g"]).first().hll_estimate
+    assert e1 == e2
+
+
+def test_hll_error_within_bound(spark):
+    # standard error ~ 1.04/sqrt(64) = 13%; allow 3 sigma
+    n = 2000
+    df = spark.createDataFrame([(f"item-{i}", "g") for i in range(n)],
+                               "v string, g string")
+    est = hll_cardinality(df, "v", ["g"]).first().hll_estimate
+    assert abs(est - n) / n < 3 * 1.04 / math.sqrt(HLL_M)
+
+
+# ---------------------------------------- template strip / para dedup
+
+def _tpl_df(spark):
+    rows = []
+    for d in range(6):
+        body = f"unique body line {d}\nsecond unique {d}"
+        rows.append((d, "siteA", f"MENU home about\n{body}\nCopyright siteA"))
+    # small group: below min_group_docs, must be untouched
+    rows.append((100, "siteB", "MENU home about\nbody b0\nCopyright siteB"))
+    rows.append((101, "siteB", "MENU home about\nbody b1\nCopyright siteB"))
+    return spark.createDataFrame(rows, "doc_id long, source string, text string")
+
+
+def test_strip_templates_removes_site_nav(spark):
+    out = {r.doc_id: r for r in strip_templates(_tpl_df(spark)).collect()}
+    r0 = out[0]
+    assert r0.text_clean == "unique body line 0\nsecond unique 0"
+    assert r0.n_lines_in == 4 and r0.n_lines_kept == 2
+
+
+def test_strip_templates_small_group_untouched(spark):
+    out = {r.doc_id: r for r in strip_templates(_tpl_df(spark)).collect()}
+    assert out[100].n_lines_kept == 3  # siteB has 2 docs < min_group_docs
+    assert "MENU home about" in out[100].text_clean
+
+
+def test_strip_templates_all_template_doc_survives_empty(spark):
+    rows = [(i, "s", "same line") for i in range(4)]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    out = strip_templates(df).collect()
+    assert len(out) == 4
+    assert all(r.text_clean == "" and r.n_lines_kept == 0 for r in out)
+
+
+def test_dedup_paragraphs_first_occurrence_trim_keyed(spark):
+    text = "alpha\n\nbeta\n\nalpha  \n\ngamma\n\nbeta"
+    df = spark.createDataFrame([(text,)], "t string")
+    cols = dedup_paragraphs("t")
+    r = df.select(cols["text_dedup"].alias("td"),
+                  cols["n_paras_in"].alias("i"),
+                  cols["n_paras_out"].alias("o")).first()
+    # 'alpha  ' collapses onto 'alpha' (trim key); first spelling kept
+    assert r.td == "alpha\n\nbeta\n\ngamma"
+    assert (r.i, r.o) == (5, 3)
+
+
+def test_dedup_paragraphs_no_dups_is_identity(spark):
+    text = "one\n\ntwo\n\nthree"
+    df = spark.createDataFrame([(text,)], "t string")
+    r = df.select(dedup_paragraphs("t")["text_dedup"].alias("td")).first()
+    assert r.td == text
+
+
+def test_strip_templates_plan_broadcasts_template_table(spark):
+    plan = strip_templates(_tpl_df(spark))._jdf.queryExecution() \
+        .executedPlan().toString()
+    # the template anti-join and the group-size join ride broadcasts;
+    # no shuffled join of the full-width line table
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
+
+
+# ------------------------------------------------------------- CMS
+
+def _py_cms(tokens, probes, d=4, w=1024):
+    counts = {}
+    for t in tokens:
+        for j in range(d):
+            b = int(hashlib.md5(f"{j}|{t}".encode()).hexdigest()[:15],
+                    16) % w
+            counts[(j, b)] = counts.get((j, b), 0) + 1
+    out = {}
+    for p in probes:
+        out[p] = min(
+            counts.get((j, int(hashlib.md5(f"{j}|{p}".encode())
+                               .hexdigest()[:15], 16) % w), 0)
+            for j in range(4))
+    return out
+
+
+def test_cms_matches_python_and_never_undercounts(spark):
+    from ocr_spark.functions.sketch import cms_estimate, cms_sketch
+
+    toks = [f"w{i % 23}" for i in range(300)] + ["hot"] * 40
+    df = spark.createDataFrame([(t,) for t in toks], "tok string")
+    sketch = cms_sketch(df)
+    probes = ["hot", "w0", "w22"]
+    pdf = spark.createDataFrame([(p,) for p in probes], "tok string")
+    got = {r.tok: r.cms_est for r in cms_estimate(pdf, sketch).collect()}
+    ref = _py_cms(toks, probes)
+    assert got == ref
+    from collections import Counter
+
+    exact = Counter(toks)
+    for p in probes:
+        assert got[p] >= exact[p]  # one-sided error
+
+
+# ------------------------------------------------------- revisit
+
+def test_revisit_schedule_hand_computed(spark):
+    from ocr_spark.operators.snapshot import revisit_schedule
+
+    rows = [
+        # url 'a': changes every snapshot (3 changes / 3 intervals)
+        ("a", 0, "d0"), ("a", 1, "d1"), ("a", 2, "d2"), ("a", 3, "d3"),
+        # url 'b': never changes
+        ("b", 0, "x"), ("b", 1, "x"), ("b", 2, "x"), ("b", 3, "x"),
+        # url 'c': one change in 3 intervals
+        ("c", 0, "p"), ("c", 1, "p"), ("c", 2, "q"), ("c", 3, "q"),
+    ]
+    df = spark.createDataFrame(rows, "url string, snap_k int, digest string")
+    got = {r.url: r for r in revisit_schedule(df).collect()}
+    assert got["a"].n_changes == 3 and got["a"].revisit_days == 1
+    assert got["b"].n_changes == 0 and got["b"].revisit_days == 30
+    assert got["c"].n_changes == 1 and got["c"].revisit_days == 3
+    assert got["c"].change_rate == pytest.approx(0.333333)
+
+
+# ------------------------------------------------------- charset
 
 @pytest.mark.parametrize("payload,codec", [
     (b"\xef\xbb\xbfhello", "utf-8-sig"),
@@ -18,3 +198,49 @@ def test_sniff_charset_ladder(payload, codec):
     from ocr_spark.extractor.core import sniff_charset
 
     assert sniff_charset(payload) == codec
+
+
+# --------------------------------------------------- linear model
+
+def _py_model_score(text):
+    import math as _m
+
+    toks = text.split()
+    if not toks:
+        return 0, 0, 0.5
+    s = 0
+    for t in toks:
+        b = int(hashlib.md5(f"b|{t}".encode()).hexdigest()[:15], 16) % 64
+        s += int(hashlib.md5(f"w|{b}".encode()).hexdigest()[:15],
+                 16) % 2001 - 1000
+    logit = s / (1000.0 * len(toks))
+    return len(toks), s, round(1 / (1 + _m.exp(-logit)), 6)
+
+
+@pytest.mark.parametrize("text", [
+    "the quick brown fox jumps over the lazy dog",
+    "single",
+    "",
+    "repeated repeated repeated repeated",
+])
+def test_linear_text_score_matches_python(spark, text):
+    from ocr_spark.functions.model import linear_text_score
+
+    df = spark.createDataFrame([(text,)], "t string")
+    cols = linear_text_score("t")
+    r = df.select(cols["n_toks"].alias("n"), cols["dot_int"].alias("d"),
+                  cols["score"].alias("s"), cols["keep"].alias("k")).first()
+    n, dot, score = _py_model_score(text)
+    assert (r.n, r.d, r.s) == (n, dot, score)
+    assert r.k == (score >= 0.5)
+
+
+def test_linear_text_score_zero_shuffle_plan(spark):
+    from ocr_spark.functions.model import linear_text_score
+
+    df = spark.createDataFrame([("a b c",)], "t string")
+    cols = linear_text_score("t")
+    plan = df.select(cols["score"])._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "BatchEvalPython" not in plan

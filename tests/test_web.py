@@ -1,5 +1,597 @@
-"""rel-link extraction (extractor/core.py:extract_rel_links): one row
-per rel token, in document order."""
+"""Web url operators: normalization rules, host/registered-domain
+extraction, and the two-phase per-domain top-k (hot-domain safe)."""
+
+from pyspark.sql import functions as F
+
+from ocr_spark.operators.web import (domain_topk, registered_domain,
+                                     url_host, url_normalize)
+
+
+def _norm(spark, url):
+    df = spark.createDataFrame([(url,)], "url string")
+    return df.select(url_normalize("url").alias("n")).first()["n"]
+
+
+def test_url_normalize_rules(spark):
+    cases = {
+        # scheme+host lowercase, path case preserved
+        "HTTP://WWW.Ex.COM/Path": "http://www.ex.com/Path",
+        # default ports stripped (scheme-matched only)
+        "http://a.com:80/x": "http://a.com/x",
+        "https://a.com:443/x": "https://a.com/x",
+        "http://a.com:8080/x": "http://a.com:8080/x",
+        "https://a.com:80/x": "https://a.com:80/x",  # not https default
+        # fragment dropped
+        "https://a.com/x#frag": "https://a.com/x",
+        # tracking params dropped, survivors sorted, empty query gone
+        "https://a.com/x?utm_source=f&b=2&a=1": "https://a.com/x?a=1&b=2",
+        "https://a.com/x?fbclid=1&gclid=2": "https://a.com/x",
+        "https://a.com/x?": "https://a.com/x",
+        # trailing slash trimmed on non-root path, kept on root
+        "https://a.com/x/": "https://a.com/x",
+        "https://a.com/": "https://a.com/",
+        # scheme-less input survives
+        "a.com/x/": "a.com/x",
+    }
+    for url, want in cases.items():
+        assert _norm(spark, url) == want, url
+
+
+def test_url_normalize_idempotent(spark):
+    urls = ["HTTP://WWW.Ex.COM:80/A/?utm_source=x&b=2&a=1#f",
+            "https://news.b.co.uk/s/1/", "host.com/plain"]
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    once = [r["n"] for r in df.select(url_normalize("url").alias("n")).collect()]
+    df2 = spark.createDataFrame([(u,) for u in once], "url string")
+    twice = [r["n"] for r in df2.select(url_normalize("url").alias("n")).collect()]
+    assert once == twice
+
+
+def test_host_and_registered_domain(spark):
+    cases = [
+        ("https://user:pw@Sub.Ex.COM:8443/p?q#f", "sub.ex.com", "ex.com"),
+        ("http://news.bbc.co.uk/x", "news.bbc.co.uk", "bbc.co.uk"),
+        ("https://a.b.c.deep.org/", "a.b.c.deep.org", "deep.org"),
+        ("localhost/x", "localhost", "localhost"),
+        ("https://ex.com", "ex.com", "ex.com"),
+    ]
+    df = spark.createDataFrame([(u,) for u, _, _ in cases], "url string")
+    got = df.select(
+        "url", url_host("url").alias("h"), registered_domain("url").alias("d")
+    ).collect()
+    want = {u: (h, d) for u, h, d in cases}
+    for r in got:
+        assert (r["h"], r["d"]) == want[r["url"]], r["url"]
+
+
+def _topk_reference(rows, k):
+    """Naive per-domain top-k: score desc, url asc."""
+    from collections import defaultdict
+    by_dom = defaultdict(list)
+    for url, dom, score in rows:
+        by_dom[dom].append((url, score))
+    keep = set()
+    for dom, members in by_dom.items():
+        members.sort(key=lambda m: (-m[1], m[0]))
+        keep.update(u for u, _ in members[:k])
+    return keep
+
+
+def test_domain_topk_matches_naive_on_skewed_domains(spark):
+    # one spam domain with 400 pages, a co.uk domain with 10, singletons
+    rows = []
+    for i in range(400):
+        rows.append((f"https://spam.farm.com/p{i:04d}", i % 37))
+    for i in range(10):
+        rows.append((f"https://news.bbc.co.uk/s{i}", 100 - i))
+    for i in range(5):
+        rows.append((f"https://solo{i}.org/x", 1))
+    df = spark.createDataFrame(rows, "url string, score long")
+    dom_of = {r["url"]: r["d"] for r in df.select(
+        "url", registered_domain("url").alias("d")).collect()}
+    ref_rows = [(u, dom_of[u], s) for u, s in rows]
+    for n_salts in (1, 4, 16):
+        out = domain_topk(df, k=3, score_col="score", n_salts=n_salts)
+        got = {r["url"] for r in out.collect()}
+        assert got == _topk_reference(ref_rows, 3), f"n_salts={n_salts}"
+    # the hot domain is actually capped
+    out3 = domain_topk(df, k=3, score_col="score").collect()
+    per_dom = {}
+    for r in out3:
+        per_dom[r["domain"]] = per_dom.get(r["domain"], 0) + 1
+    assert per_dom["farm.com"] == 3
+    assert per_dom["bbc.co.uk"] == 3
+    assert all(v <= 3 for v in per_dom.values())
+
+
+# -- web graph: outlinks + pagerank ------------------------------------------
+
+def test_outlinks_parse_resolve_normalize(spark):
+    from ocr_spark.operators.web import outlinks
+
+    html = (b'<html><head><base href="https://base.ex.com/sub/"></head><body>'
+            b'<a href="https://Abs.Ex.org:443/P?utm_source=x&amp;b=2&amp;a=1#f">a</a>'
+            b'<a href="rel/p.html">r</a>'
+            b'<a href="/rooted/">q</a>'
+            b'<a href="#top">s</a>'
+            b'<a href="javascript:void(0)">s</a>'
+            b'<a href="mailto:x@y.z">s</a>'
+            b'<a href="https://Abs.Ex.org:443/P?utm_source=x&amp;b=2&amp;a=1#g">dup</a>'
+            b'</body></html>')
+    df = spark.createDataFrame(
+        [("https://page.ex.com/dir/index.html", html, 7)],
+        "url string, html binary, doc_id long")
+    got = sorted(r["dst"] for r in
+                 outlinks(df, passthrough=("doc_id",)).collect())
+    assert got == [
+        "https://abs.ex.org/P?a=1&b=2",      # port+tracking+frag+sort
+        "https://base.ex.com/rooted",         # <base> + trailing slash
+        "https://base.ex.com/sub/rel/p.html",  # <base>-relative
+    ]
+
+
+def test_outlinks_no_base_uses_page_url(spark):
+    from ocr_spark.operators.web import outlinks
+
+    df = spark.createDataFrame(
+        [("https://p.ex.com/a/b.html",
+          b'<html><body><a href="x.html">x</a></body></html>')],
+        "url string, html binary")
+    rows = outlinks(df).collect()
+    assert [(r["url"], r["dst"]) for r in rows] == [
+        ("https://p.ex.com/a/b.html", "https://p.ex.com/a/x.html")]
+
+
+def test_outlinks_null_and_broken_rows(spark):
+    from ocr_spark.operators.web import outlinks
+
+    df = spark.createDataFrame(
+        [("https://a.com/", None),
+         (None, b"<a href='https://x.com/'>x</a>"),
+         ("https://b.com/", b"\xff\xfenot html at all"),
+         ("https://c.com/", b"<html><body><a href='ok.html'>k</a>")],
+        "url string, html binary")
+    rows = outlinks(df).collect()
+    assert [(r["url"], r["dst"]) for r in rows] == [
+        ("https://c.com/", "https://c.com/ok.html")]
+
+
+def _pagerank_reference(edges, n_iter=3, d=0.85):
+    nodes = sorted({u for e in edges for u in e})
+    out_deg = {}
+    for s, _ in edges:
+        out_deg[s] = out_deg.get(s, 0) + 1
+    rank = {n: 1.0 for n in nodes}
+    for _ in range(n_iter):
+        sums = {n: 0.0 for n in nodes}
+        for s, t in edges:
+            sums[t] += rank[s] / out_deg[s]
+        rank = {n: (1 - d) + d * sums[n] for n in nodes}
+    return rank
+
+
+def test_pagerank_matches_reference_loop(spark):
+    from ocr_spark.operators.web import pagerank
+
+    # irregular digraph: hub, cycle, sources, a dangling sink (6),
+    # and a duplicate edge the operator must collapse
+    edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (5, 3), (1, 2), (2, 6)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r["node"]: r["rank"] for r in pagerank(df, n_iter=3).collect()}
+    ref = _pagerank_reference(sorted(set(edges)))
+    assert set(got) == set(ref)
+    for n in ref:
+        assert abs(got[n] - ref[n]) < 1e-9, (n, got[n], ref[n])
+    # nodes nothing links to sit at (1-d); the sink's mass is not
+    # redistributed (documented un-normalized convention)
+    assert abs(got[4] - 0.15) < 1e-12
+    assert abs(got[5] - 0.15) < 1e-12
+
+
+def test_outlinks_to_pagerank_composition(spark):
+    """End-to-end web-graph build: pages -> outlinks -> host graph ->
+    pagerank runs in one plan and the heaviest-linked host wins."""
+    from ocr_spark.operators.web import outlinks, pagerank, url_host
+
+    pages = []
+    for i in range(6):
+        links = b'<a href="https://hub.ex.com/">h</a>' + \
+            (f'<a href="https://spoke{i}.ex.com/">s</a>'.encode())
+        pages.append((f"https://spoke{i}.ex.com/index.html",
+                      b"<html><body>" + links + b"</body></html>"))
+    df = spark.createDataFrame(pages, "url string, html binary")
+    edges = (outlinks(df)
+             .select(url_host("url").alias("src"), url_host("dst").alias("dst"))
+             .filter(F.col("src") != F.col("dst")).distinct())
+    ranks = pagerank(edges, n_iter=3)
+    rows = {r["node"]: r["rank"] for r in ranks.collect()}
+    # hub: 0.15 + 0.85 * 6 * r_spoke; spokes settle at 0.15 (no in-links)
+    assert max(rows, key=rows.get) == "hub.ex.com"
+    assert abs(rows["hub.ex.com"] - (0.15 + 0.85 * 6 * 0.15)) < 1e-9
+    for n, r in rows.items():
+        if n != "hub.ex.com":
+            assert abs(r - 0.15) < 1e-12
+
+
+# -- robots.txt (RFC 9309) ----------------------------------------------------
+
+def test_parse_robots_groups_and_semantics():
+    from ocr_spark.operators.web import parse_robots, robots_allowed
+
+    txt = ("# crawler policy\n"
+           "User-agent: googlebot\nDisallow: /nogoogle/\n\n"
+           "User-agent: *\nDisallow: /private/\nAllow: /private/ok/\n"
+           "Disallow: /tmp/\nDisallow:\nCrawl-delay: 10\n\n"
+           "User-agent: evilbot\nDisallow: /\n")
+    star = parse_robots(txt)
+    assert star == [("/private/", False), ("/private/ok/", True),
+                    ("/tmp/", False)]      # empty Disallow = no-op
+    assert robots_allowed(star, "/public/x")
+    assert not robots_allowed(star, "/private/x")
+    assert robots_allowed(star, "/private/ok/x")   # longest match wins
+    # named group replaces *, case-insensitive
+    goog = parse_robots(txt, "GoogleBot")
+    assert not robots_allowed(goog, "/nogoogle/a")
+    assert robots_allowed(goog, "/private/x")
+    assert not robots_allowed(parse_robots(txt, "evilbot"), "/anything")
+    # multi-agent group header; absent agent with no * group -> allow all
+    txt2 = "User-agent: a\nUser-agent: b\nDisallow: /x/"
+    assert not robots_allowed(parse_robots(txt2, "b"), "/x/1")
+    assert robots_allowed(parse_robots(txt2, "c"), "/x/1")
+
+
+def test_robots_wildcards_and_anchors():
+    from ocr_spark.operators.web import _robots_rule_matches as m
+    from ocr_spark.operators.web import robots_allowed
+
+    assert m("/*.pdf$", "/docs/file.pdf")
+    assert not m("/*.pdf$", "/docs/file.pdfx")
+    assert m("/a*b", "/aXXb") and not m("/a*b", "/aXX")
+    assert m("/a*$", "/abc")
+    assert m("/a$", "/a") and not m("/a$", "/ab")
+    assert m("*private*", "/x/private/y")
+    assert m("/a**b", "/a-b")                      # consecutive * collapse
+    # allow/disallow tie at equal specificity -> allow (RFC 9309)
+    assert robots_allowed([("/p/", False), ("/p/", True)], "/p/x")
+
+
+def test_robots_filter_operator(spark):
+    from ocr_spark.operators.web import robots_filter
+
+    pages = spark.createDataFrame(
+        [(1, "https://a.ex.com/private/1"),
+         (2, "https://a.ex.com/private/ok/2"),
+         (3, "https://a.ex.com/pub?fetch=1"),
+         (4, "https://norobots.ex.com/private/4"),   # host absent -> allow
+         (5, "https://a.ex.com/q.pdf"),
+         (6, "https://a.ex.com/")],
+        "doc_id long, url string")
+    robots = spark.createDataFrame(
+        [("a.ex.com",
+          "User-agent: *\nDisallow: /private/\nAllow: /private/ok/\n"
+          "Disallow: /*.pdf$\nDisallow: /pub?fetch*")],
+        "host string, robots_txt string")
+    got = {r["doc_id"]: r["allowed"]
+           for r in robots_filter(pages, robots).collect()}
+    # query string participates in matching; wildcard + anchor rules work
+    assert got == {1: 0, 2: 1, 3: 0, 4: 1, 5: 0, 6: 1}
+
+
+def test_outlinks_anchor_text(spark):
+    from ocr_spark.operators.web import outlinks
+
+    html = (b'<html><body>'
+            b'<a href="https://t.ex.com/a">Read <b>more</b> here</a>'
+            b'<a href="https://t.ex.com/a">decoy dup</a>'
+            b'<a href="https://t.ex.com/b"></a>'
+            b'</body></html>')
+    df = spark.createDataFrame([("https://p.ex.com/", html)],
+                               "url string, html binary")
+    got = {r["dst"]: r["anchor"]
+           for r in outlinks(df, with_anchor_text=True).collect()}
+    # first anchor's text wins; inline children flattened; empty -> ""
+    assert got == {"https://t.ex.com/a": "Read more here",
+                   "https://t.ex.com/b": ""}
+
+
+def test_surt_key_forms(spark):
+    from ocr_spark.operators.web import surt_key
+
+    rows = [
+        (1, "https://www.example.com/a/b?q=1"),
+        (2, "https://news.site.co.uk/story/7"),
+        (3, "http://host.org:8080/x"),
+        (4, "example.com"),          # scheme-less, no path
+    ]
+    df = spark.createDataFrame(rows, "i int, u string")
+    got = {r.i: r.s
+           for r in df.select("i", surt_key("u").alias("s")).collect()}
+    assert got[1] == "com,example)/a/b?q=1"
+    assert got[2] == "uk,co,site,news)/story/7"
+    assert got[3] == "org,host:8080)/x"
+    assert got[4] == "com,example)/"
+    # lexicographic sort clusters a domain's pages together
+    assert got[1].split(")")[0] == got[4].split(")")[0]
+
+
+def test_anchor_text_agg(spark):
+    from ocr_spark.operators.web import anchor_text_agg
+
+    edges = spark.createDataFrame(
+        [(1, "t1", "click here"), (2, "t1", "click here"),
+         (3, "t1", "docs"), (4, "t2", "b"), (5, "t2", "a"),
+         (6, "t3", "only")],
+        "doc_id long, dst string, anchor string")
+    got = {r.dst: r for r in anchor_text_agg(edges).collect()}
+    assert got["t1"].n_inlinks == 3
+    assert got["t1"].n_distinct_anchors == 2
+    assert got["t1"].top_anchor == "click here"
+    assert got["t1"].top_anchor_count == 2
+    # tie -> lexicographically last
+    assert got["t2"].top_anchor == "b" and got["t2"].n_inlinks == 2
+    assert got["t3"].top_anchor == "only"
+
+
+def test_url_path_extraction(spark):
+    from ocr_spark.operators.web import url_path
+
+    cases = [
+        (1, "https://a.example.com:443/x/y?q=1#frag", "/x/y"),
+        (2, "HTTP://HOST.COM", "/"),
+        (3, "host.com/plain/", "/plain/"),
+        (4, "https://h.io/?a=1", "/"),
+        (5, "h.io?a=1", "/"),
+    ]
+    df = spark.createDataFrame([(i, u) for i, u, _ in cases],
+                               "id long, url string")
+    got = {r.id: r.p
+           for r in df.select("id", url_path("url").alias("p")).collect()}
+    assert got == {i: want for i, _, want in cases}
+
+
+def test_url_blocklist_domain_and_prefix_semantics(spark):
+    from ocr_spark.operators.web import url_blocklist_filter
+
+    pages = spark.createDataFrame(
+        [(1, "https://sub.bad.com/anything"),      # subdomain of blocked
+         (2, "https://good.com/casino/x"),          # prefix hit
+         (3, "https://good.com/news/x"),            # prefix miss
+         (4, "https://Bad.COM/"),                   # case-folded domain
+         (5, "https://other.org/casino/x")],        # unlisted domain
+        "doc_id long, url string")
+    bl = spark.createDataFrame(
+        [("bad.com", None), ("good.com", "/casino"), ("good.com", "/shop")],
+        "domain string, path_prefix string")
+    out = {r.doc_id: r.blocked
+           for r in url_blocklist_filter(pages, bl).collect()}
+    assert out == {1: True, 2: True, 3: False, 4: True, 5: False}
+    # multi-entry domains must not fan out rows
+    assert url_blocklist_filter(pages, bl).count() == 5
+
+
+def test_crawl_schedule_politeness_invariants(spark):
+    """Per host: slots within a round never exceed per_round, ranks
+    are the exact host-local permutation, and the schedule is
+    invariant to partitioning."""
+    from ocr_spark.operators.web import crawl_schedule
+
+    rows = [(i, f"https://h{i % 3}.com/p{i}") for i in range(90)]
+    df = spark.createDataFrame(rows, "doc_id long, url string")
+    out = crawl_schedule(df, per_round=4).collect()
+    by_host = {}
+    for r in out:
+        by_host.setdefault(r.host, []).append(r)
+    for host, rs in by_host.items():
+        ranks = sorted(r.fetch_round * 4 + r.fetch_slot for r in rs)
+        assert ranks == list(range(len(rs)))     # exact 0..n-1 per host
+        from collections import Counter
+        per = Counter(r.fetch_round for r in rs)
+        assert max(per.values()) <= 4
+    re_out = {(r.doc_id, r.fetch_round, r.fetch_slot)
+              for r in crawl_schedule(df.repartition(13),
+                                      per_round=4).collect()}
+    assert re_out == {(r.doc_id, r.fetch_round, r.fetch_slot) for r in out}
+
+
+def test_parse_http_headers_fields(spark):
+    from ocr_spark.operators.web import parse_http_headers
+    from pyspark.sql import functions as F
+
+    rows = [
+        ("HTTP/1.1 200 OK\r\nContent-Type: text/HTML; charset=UTF-8\r\n"
+         "Content-Length: 123\r\n\r\n",),
+        ("HTTP/1.1 301 Moved Permanently\r\nLocation: /x\r\n\r\n",),
+        ("HTTP/1.1 503 Service Unavailable\r\n\r\n",),
+    ]
+    df = spark.createDataFrame(rows, "hdr string")
+    cols = parse_http_headers("hdr")
+    got = df.select(
+        cols["status"].alias("st"), cols["content_type"].alias("ct"),
+        cols["charset"].alias("cs"),
+        cols["content_length"].alias("cl"),
+        cols["is_redirect"].alias("rd")).collect()
+    assert (got[0].st, got[0].ct, got[0].cs, got[0].cl, got[0].rd) == \
+        (200, "text/html", "utf-8", 123, False)
+    assert (got[1].st, got[1].ct, got[1].cs, got[1].cl, got[1].rd) == \
+        (301, None, None, None, True)
+    assert (got[2].st, got[2].ct, got[2].cl) == (503, None, None)
+
+
+def test_robots_sitemaps_global_scope(spark):
+    """Sitemap lines are extracted regardless of agent-group position,
+    mixed case, and one-per-line; hosts without any drop out."""
+    from ocr_spark.operators.web import robots_sitemaps
+
+    rows = [
+        ("a.com", "User-agent: bot\nDisallow: /\n"
+                  "SiteMap: https://a.com/s1.xml\n"
+                  "sitemap: https://a.com/s2.xml"),
+        ("b.com", "User-agent: *\nDisallow: /tmp/"),
+    ]
+    df = spark.createDataFrame(rows, "host string, robots_txt string")
+    got = sorted((r.host, r.sitemap_url)
+                 for r in robots_sitemaps(df).collect())
+    assert got == [("a.com", "https://a.com/s1.xml"),
+                   ("a.com", "https://a.com/s2.xml")]
+
+
+def test_hits_matches_reference_loop(spark):
+    """Un-normalized 2-round HITS equals the hand-rolled power
+    iteration (integer path counts); duplicate edges collapse; a node
+    nothing links to has auth 0, a node linking nowhere has hub 0."""
+    from ocr_spark.operators.web import hits
+
+    edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (1, 2)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r.node: (r.hub, r.auth) for r in hits(df, n_iter=2).collect()}
+
+    E = sorted(set(edges))
+    nodes = {u for e in E for u in e}
+    hub = {n: 1 for n in nodes}
+    for _ in range(2):
+        auth = {n: sum(hub[u] for (u, v) in E if v == n) for n in nodes}
+        hub = {n: sum(auth[v] for (u, v) in E if u == n) for n in nodes}
+    assert got == {n: (hub[n], auth[n]) for n in nodes}
+    assert got[4][1] == 0          # no in-links -> zero authority
+    assert all(isinstance(v, int) for pair in got.values() for v in pair)
+
+
+def test_hits_rejects_zero_iterations(spark):
+    from ocr_spark.operators.web import hits
+
+    df = spark.createDataFrame([(1, 2)], "src long, dst long")
+    try:
+        hits(df, n_iter=0)
+        assert False, "expected ValueError"
+    except ValueError:
+        pass
+
+
+def test_feed_entries_rss_atom_and_edge_cases(spark):
+    """RSS item fields, Atom href links, entity decode, absent-field
+    NULLs, and an itemless shell yielding zero rows."""
+    from ocr_spark.operators.web import feed_entries
+
+    rss = ('<rss><channel><title>chan</title>'
+           '<item><title>A &amp; B</title><link>http://x/1</link>'
+           '<guid isPermaLink="true">G1</guid>'
+           '<pubDate>Mon, 01 Jan 2024 00:00:00 GMT</pubDate></item>'
+           '<item><title>no link or guid</title></item>'
+           '</channel></rss>')
+    atom = ('<feed xmlns="http://www.w3.org/2005/Atom"><title>f</title>'
+            '<entry><title>E1</title>'
+            '<link rel="alternate" href="http://y/1"/>'
+            '<id>tag:y,1</id><updated>2024-01-01T00:00:00Z</updated>'
+            '</entry></feed>')
+    empty = '<rss><channel><title>empty</title></channel></rss>'
+    df = spark.createDataFrame(
+        [("u1", rss), ("u2", atom), ("u3", empty)],
+        "feed_url string, xml string")
+    rows = {(r.feed_url, r.kind, r.seq): r
+            for r in feed_entries(df).collect()}
+    assert len(rows) == 3                       # u3 contributes nothing
+    r0 = rows[("u1", "rss", 0)]
+    assert (r0.title, r0.link, r0.entry_id) == ("A & B", "http://x/1", "G1")
+    r1 = rows[("u1", "rss", 1)]
+    assert r1.title == "no link or guid"
+    assert r1.link is None and r1.entry_id is None and r1.published is None
+    a0 = rows[("u2", "atom", 0)]
+    assert (a0.link, a0.entry_id) == ("http://y/1", "tag:y,1")
+    assert a0.published == "2024-01-01T00:00:00Z"
+
+
+def test_parse_crawl_delay_group_semantics():
+    from ocr_spark.operators.web import parse_crawl_delay
+
+    txt = ("User-agent: mybot\nDisallow: /x\nCrawl-delay: 0.5\n\n"
+           "User-agent: *\nCrawl-delay: 5\n")
+    assert parse_crawl_delay(txt, "MyBot") == 0.5   # own group, case-insens
+    assert parse_crawl_delay(txt, "other") == 5.0   # falls to *
+    assert parse_crawl_delay("User-agent: *\nCrawl-delay: nope\n") is None
+    assert parse_crawl_delay("User-agent: *\nCrawl-delay: -2\n") is None
+    assert parse_crawl_delay("", "x") is None
+    # shared block: consecutive User-agent lines get the same delay
+    txt2 = "User-agent: a\nUser-agent: b\nCrawl-delay: 3\n"
+    assert parse_crawl_delay(txt2, "b") == 3.0
+    # first value in a group wins
+    txt3 = "User-agent: *\nCrawl-delay: 2\nCrawl-delay: 9\n"
+    assert parse_crawl_delay(txt3) == 2.0
+
+
+def test_url_templates_flags_mass_produced_families(spark):
+    from ocr_spark.operators.web import url_templates
+
+    rows = ([(f"https://spam.example.com/tag/{i}",) for i in range(50)]
+            + [(f"https://spam.example.com/page/{i}/comments",)
+               for i in range(10)]
+            + [("https://spam.example.com/about",)]
+            + [("https://ok.example.org/article/7",)])
+    df = spark.createDataFrame(rows, "url string")
+    out = {(r.domain, r.path_template): (r.n_pages, r.mass_produced)
+           for r in url_templates(df, min_pages=5).collect()}
+    assert out[("example.com", "/tag/N")] == (50, True)
+    assert out[("example.com", "/page/N/comments")] == (10, True)
+    assert out[("example.com", "/about")] == (1, False)
+    assert out[("example.org", "/article/N")] == (1, False)
+
+
+def test_resolve_redirects_chain_cycle_and_terminal(spark):
+    from ocr_spark.operators.web import resolve_redirects
+
+    edges = spark.createDataFrame(
+        [
+            # 3-hop chain: a -> b -> c -> d (d terminal)
+            ("a", "b"), ("b", "c"), ("c", "d"),
+            # 2-cycle: x <-> y
+            ("x", "y"), ("y", "x"),
+            # single hop straight to a terminal
+            ("p", "q"),
+        ],
+        ["src", "dst"],
+    )
+    out = {r["src"]: r for r in resolve_redirects(edges).collect()}
+    assert out["a"]["final_url"] == "d" and out["a"]["hops"] == 3
+    assert out["b"]["final_url"] == "d" and out["b"]["hops"] == 2
+    assert out["c"]["final_url"] == "d" and out["c"]["hops"] == 1
+    assert out["p"]["final_url"] == "q" and out["p"]["hops"] == 1
+    for u in ("a", "b", "c", "p"):
+        assert out[u]["resolved"] is True
+    for u in ("x", "y"):
+        assert out[u]["resolved"] is False
+        assert out[u]["final_url"] is None and out[u]["hops"] is None
+
+
+def test_resolve_redirects_hop_cap_and_doubling_reach(spark):
+    from ocr_spark.operators.web import resolve_redirects
+
+    # linear chain n0 -> n1 -> ... -> n20 (length 20)
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i+1}") for i in range(20)], ["src", "dst"])
+    # max_hops=16: n0 needs 20 hops -> unresolved; n4 needs 16 -> resolved
+    out = {r["src"]: r
+           for r in resolve_redirects(edges, max_hops=16).collect()}
+    assert out["n0"]["resolved"] is False and out["n0"]["final_url"] is None
+    assert out["n4"]["resolved"] is True
+    assert out["n4"]["final_url"] == "n20" and out["n4"]["hops"] == 16
+    # max_hops=32 resolves everything
+    out32 = {r["src"]: r
+             for r in resolve_redirects(edges, max_hops=32).collect()}
+    assert out32["n0"]["resolved"] is True
+    assert out32["n0"]["final_url"] == "n20" and out32["n0"]["hops"] == 20
+
+
+def test_resolve_redirects_functional_dedup_and_validation(spark):
+    import pytest as _pytest
+
+    from ocr_spark.operators.web import resolve_redirects
+
+    # conflicting recorded redirects for 'a': min(dst) wins -> 'b'
+    edges = spark.createDataFrame(
+        [("a", "c"), ("a", "b")], ["src", "dst"])
+    out = {r["src"]: r for r in resolve_redirects(edges).collect()}
+    assert out["a"]["final_url"] == "b" and out["a"]["hops"] == 1
+    with _pytest.raises(ValueError):
+        resolve_redirects(edges, max_hops=10)  # not a power of two
 
 
 def test_extract_rel_links_tokens_and_order():
@@ -23,3 +615,201 @@ def test_extract_rel_links_tokens_and_order():
         (4, "nofollow", "https://spam.x"),
     ]
     assert extract_rel_links(b"") == []
+
+
+def test_stitch_series_chains_singletons_and_loops(spark):
+    from ocr_spark.operators.web import stitch_series
+
+    pages = spark.createDataFrame(
+        [("a1", "one"), ("a2", "two"), ("a3", "three"),
+         ("solo", "alone"), ("l1", "loopA"), ("l2", "loopB")],
+        ["url", "text"])
+    edges = spark.createDataFrame(
+        [("a1", "a2"), ("a2", "a3"),      # 3-page article
+         ("l1", "l2"), ("l2", "l1")],     # malformed rel=next loop
+        ["src", "dst"])
+    out = {r["series_id"]: r
+           for r in stitch_series(pages, edges, sep=" ").collect()}
+    # the chain collapses to ONE row keyed by its last page, in order
+    assert out["a3"]["n_pages"] == 3
+    assert out["a3"]["text"] == "one two three"
+    # standalone page passes through
+    assert out["solo"]["n_pages"] == 1 and out["solo"]["text"] == "alone"
+    # loop members fall back to 1-page series of themselves
+    assert out["l1"]["text"] == "loopA" and out["l2"]["text"] == "loopB"
+    assert set(out) == {"a3", "solo", "l1", "l2"}
+
+
+def test_host_lang_profile_entropy_and_shares(spark):
+    import math
+
+    from ocr_spark.operators.web import host_lang_profile
+
+    rows = (
+        [(f"https://mono.com/p{i}", "en") for i in range(4)]
+        + [("https://spam.com/1", "en"), ("https://spam.com/2", "fr"),
+           ("https://spam.com/3", "de"), ("https://spam.com/4", "fr")]
+    )
+    df = spark.createDataFrame(rows, ["url", "lang"])
+    out = {r["domain"]: r for r in host_lang_profile(df).collect()}
+    assert out["mono.com"]["n_docs"] == 4
+    assert out["mono.com"]["n_langs"] == 1
+    assert out["mono.com"]["top_share"] == 1.0
+    assert out["mono.com"]["lang_entropy"] == 0.0
+    s = out["spam.com"]
+    assert s["n_docs"] == 4 and s["n_langs"] == 3
+    assert s["top_share"] == 0.5  # fr 2/4
+    expect = -(0.25 * math.log(0.25) * 2 + 0.5 * math.log(0.5))
+    assert abs(s["lang_entropy"] - round(expect, 6)) < 1e-9
+
+
+def test_reciprocal_links_ring_vs_organic(spark):
+    from ocr_spark.operators.web import reciprocal_links
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "a"),            # exchange pair
+         ("a", "c"), ("c", "d"),            # organic
+         ("x", "x"),                        # self-loop dropped
+         ("a", "b")],                       # duplicate edge deduped
+        ["src", "dst"])
+    out = {r["node"]: r for r in reciprocal_links(edges).collect()}
+    assert out["a"]["out_degree"] == 2 and out["a"]["n_mutual"] == 1
+    assert out["a"]["reciprocity"] == 0.5
+    assert out["b"]["out_degree"] == 1 and out["b"]["reciprocity"] == 1.0
+    assert out["c"]["n_mutual"] == 0 and out["c"]["reciprocity"] == 0.0
+    # dangling target d and pure-self-loop x never appear
+    assert set(out) == {"a", "b", "c"}
+
+
+def test_shard_manifest_digests_match_plan(spark):
+    import hashlib
+
+    from ocr_spark.operators.corpus import shard_manifest, shard_plan
+
+    rows = [(i, "y" * (23 * (i % 7) + 5)) for i in range(60)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    plan = shard_plan(df, shard_bytes=300, n_buckets=8).collect()
+    man = {r["shard_id"]: r
+           for r in shard_manifest(df, shard_bytes=300,
+                                   n_buckets=8).collect()}
+    texts = dict(rows)
+    by_shard: dict[int, list] = {}
+    for p in plan:
+        by_shard.setdefault(p["shard_id"], []).append(p)
+    assert set(man) == set(by_shard)
+    for sid, docs in by_shard.items():
+        docs.sort(key=lambda p: p["start_off"])
+        blob = "".join(texts[p["doc_id"]] for p in docs).encode()
+        assert man[sid]["content_digest"] == hashlib.md5(blob).hexdigest()
+        assert man[sid]["n_docs"] == len(docs)
+        assert man[sid]["n_bytes"] == sum(p["n_bytes"] for p in docs)
+
+
+# -- triangle counting --------------------------------------------------------
+
+def _triangles_reference(edges):
+    """Brute-force per-node triangle counts over an undirected edge
+    list (itertools over the adjacency sets — fine at test scale)."""
+    adj = {}
+    for a, b in edges:
+        if a == b:
+            continue
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    tri = {n: 0 for n in adj}
+    for n, nbrs in adj.items():
+        lst = sorted(nbrs)
+        for i in range(len(lst)):
+            for j in range(i + 1, len(lst)):
+                if lst[j] in adj[lst[i]]:
+                    tri[n] += 1
+    return {n: (len(adj[n]), tri[n]) for n in adj}
+
+
+def test_triangle_count_matches_bruteforce(spark):
+    from ocr_spark.operators.web import triangle_count
+
+    # K4 on 0-3 (4 triangles, each node in 3), a pendant (3-4), a
+    # disjoint triangle (5,6,7), an isolated path (8-9), duplicate and
+    # reversed edges, and a self-loop to be dropped
+    edges = [(0, 1), (1, 0), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3),
+             (3, 4), (5, 6), (6, 7), (7, 5), (8, 9), (9, 9), (0, 1)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r["node"]: r for r in triangle_count(df).collect()}
+    ref = _triangles_reference(edges)
+    assert set(got) == set(ref)
+    for n, (deg, t) in ref.items():
+        r = got[n]
+        assert (r["degree"], r["triangles"]) == (deg, t), n
+        assert r["coef_num"] == 2 * t
+        assert r["coef_den"] == deg * (deg - 1)
+
+
+def test_triangle_count_hub_and_triangle_free(spark):
+    from ocr_spark.operators.web import triangle_count
+
+    # star K1,20: a hub with 20 leaves — zero triangles anywhere, and
+    # the degree-ordered orientation must point every edge leaf->hub
+    # (no wedge blowup at the hub)
+    edges = [(100, i) for i in range(20)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    rows = triangle_count(df).collect()
+    assert all(r["triangles"] == 0 for r in rows)
+    hub = next(r for r in rows if r["node"] == 100)
+    assert hub["degree"] == 20 and hub["coef_den"] == 20 * 19
+
+
+class TestKCore:
+    def test_peel_cascade_and_core_degree(self, spark):
+        from ocr_spark.operators.web import kcore
+
+        # triangle {1,2,3} fully connected plus a pendant path
+        # 3-4-5: k=2 peels 5 then 4, leaving the triangle (deg 2)
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)],
+            "src long, dst long")
+        got = {r.node: r.degree
+               for r in kcore(edges, k=2, max_rounds=8).collect()}
+        assert got == {1: 2, 2: 2, 3: 2}
+
+    def test_self_loops_dropped_and_direction_ignored(self, spark):
+        from ocr_spark.operators.web import kcore
+
+        # 4's self-loop must not save it; reverse-direction duplicate
+        # edges must not double-count degree
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 1), (2, 3), (3, 1), (4, 4), (4, 1)],
+            "src long, dst long")
+        got = {r.node: r.degree
+               for r in kcore(edges, k=2, max_rounds=8).collect()}
+        assert got == {1: 2, 2: 2, 3: 2}
+
+
+class TestAnchorClassify:
+    def test_votes_ties_and_silence(self, spark):
+        from ocr_spark.operators.web import anchor_classify
+
+        edges = spark.createDataFrame(
+            [(1, "T", "fast JOIN engine"), (2, "T", "join scan"),
+             (3, "T", "data table"), (4, "U", "table data"),
+             (5, "V", "nothing relevant")],
+            "src long, dst string, anchor string")
+        cats = {"compute": ("join", "scan"),
+                "storage": ("table", "data")}
+        got = {r.dst: (r.category, r.n_votes, r.n_votes_total)
+               for r in anchor_classify(edges, cats).collect()}
+        assert got == {
+            "T": ("compute", 3, 5),   # 3 compute vs 2 storage
+            "U": ("storage", 2, 2),
+            # V never matched -> absent
+        }
+
+    def test_exact_tie_is_alphabetical(self, spark):
+        from ocr_spark.operators.web import anchor_classify
+
+        edges = spark.createDataFrame(
+            [(1, "X", "join table")], "src long, dst string, anchor string")
+        cats = {"compute": ("join",), "storage": ("table",)}
+        out = anchor_classify(edges, cats).collect()
+        assert [(r.dst, r.category, r.n_votes) for r in out] == \
+            [("X", "compute", 1)]

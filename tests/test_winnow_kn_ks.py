@@ -1,7 +1,13 @@
-"""Property tests for winnowing fingerprints (Schleimer SIGMOD'03,
-functions/text.py:with_winnow_fingerprints).  Value parity vs DuckDB
-is covered by test_oracle_parity; these assert the algorithmic
-guarantees the oracle can't express."""
+"""Property tests for the round-4 closing batch: true winnowing
+fingerprints (Schleimer SIGMOD'03), interpolated Kneser-Ney bigram LM,
+and the exact two-sample KS drift statistic.  Value parity vs DuckDB is
+covered by test_oracle_parity; these assert the algorithmic guarantees
+the oracles can't express."""
+
+import math
+
+import pytest
+from pyspark.sql import functions as F
 
 
 def _fps(spark, texts, k=3, w=4):
@@ -52,3 +58,135 @@ class TestWinnowing:
         assert len(fps[0]) == 1          # whole-doc shingle, one window
         assert fps[1] == []              # blank -> empty
         assert len(fps[2]) == 1          # 2 grams < w -> one window
+
+
+class TestKneserNey:
+    def test_matches_hand_computation(self, spark):
+        from ocr_spark.functions.quality import kneser_ney_logprob
+
+        texts = ["a b a c", "b a b"]
+        df = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
+        got = {r["doc_id"]: r for r in kneser_ney_logprob(df).collect()}
+
+        # training pairs: d0 -> (a,b) (b,a) (a,c); d1 -> (b,a) (a,b)
+        from collections import Counter
+        pairs = [("a", "b"), ("b", "a"), ("a", "c"), ("b", "a"), ("a", "b")]
+        c = Counter(pairs)
+        cx = Counter(w1 for w1, _ in pairs)
+        nfw = Counter(w1 for w1, _ in set(pairs))
+        nbw = Counter(w2 for _, w2 in set(pairs))
+        np_ = len(set(pairs))
+        d = 0.75
+
+        def p(w1, w2):
+            return (max(c[(w1, w2)] - d, 0.0) / cx[w1]
+                    + d * nfw[w1] / cx[w1] * (nbw[w2] / np_))
+
+        doc_pairs = {0: [("a", "b"), ("b", "a"), ("a", "c")],
+                     1: [("b", "a"), ("a", "b")]}
+        for doc, prs in doc_pairs.items():
+            want = sum(math.log(p(*pr)) for pr in prs) / len(prs)
+            assert got[doc]["avg_logprob"] == pytest.approx(want, abs=2e-6)
+            assert got[doc]["n_bigrams"] == len(prs)
+            assert got[doc]["ppl"] == pytest.approx(math.exp(-want), rel=1e-5)
+
+    def test_short_docs_get_null(self, spark):
+        from ocr_spark.functions.quality import kneser_ney_logprob
+
+        df = spark.createDataFrame(
+            [(0, "solo"), (1, ""), (2, "two tokens twice two tokens")],
+            "doc_id long, text string")
+        got = {r["doc_id"]: r for r in kneser_ney_logprob(df).collect()}
+        assert got[0]["avg_logprob"] is None and got[0]["n_bigrams"] == 0
+        assert got[1]["avg_logprob"] is None
+        assert got[2]["avg_logprob"] is not None
+
+    def test_kn_penalizes_one_context_words(self, spark):
+        # "francisco"-style: seen often but after ONE context only ->
+        # continuation prob lower than a word seen after many contexts
+        # with the same raw frequency
+        from ocr_spark.functions.quality import kneser_ney_logprob
+
+        corpus = ["san francisco san francisco san francisco",
+                  "red house blue house green house",
+                  "probe francisco", "probe house"]
+        df = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(corpus)], "doc_id long, text string")
+        got = {r["doc_id"]: r["avg_logprob"]
+               for r in kneser_ney_logprob(df).collect()}
+        # (probe, francisco) backs off to N1+(*,francisco)=2 contexts;
+        # (probe, house) has N1+(*,house)=4 contexts -> higher prob
+        assert got[3] > got[2]
+
+
+class TestKsDrift:
+    def _ks(self, spark, a_vals, b_vals, **kw):
+        from ocr_spark.operators.snapshot import ks_drift
+
+        a = spark.createDataFrame([(v,) for v in a_vals], "v long")
+        b = spark.createDataFrame([(v,) for v in b_vals], "v long")
+        return ks_drift(a, b, "v", **kw).collect()
+
+    def test_identical_distributions_zero(self, spark):
+        vals = [10, 20, 20, 30, 40] * 3
+        rows = self._ks(spark, vals, list(vals))
+        assert all(r["ks"] == 0.0 for r in rows)
+
+    def test_disjoint_distributions_one(self, spark):
+        rows = self._ks(spark, [1, 2, 3, 4], [100, 200, 300])
+        assert rows[0]["ks"] == 1.0
+
+    def test_matches_naive_ecdf_across_buckets(self, spark):
+        # values straddle many range buckets (width=10) so the
+        # two-pass offsets are actually exercised
+        import random
+        rnd = random.Random(7)
+        a = [rnd.randrange(0, 200) for _ in range(300)]
+        b = [rnd.randrange(50, 250) for _ in range(200)]
+        rows = self._ks(spark, a, b, bucket_width=10, top=1)
+        sa, sb = sorted(a), sorted(b)
+        import bisect
+        want = max(
+            abs(bisect.bisect_right(sa, v) / len(a)
+                - bisect.bisect_right(sb, v) / len(b))
+            for v in set(a) | set(b))
+        assert rows[0]["ks"] == pytest.approx(want, abs=1e-6)
+
+
+class TestWinnowPairs:
+    def _pairs(self, spark, texts, **kw):
+        from ocr_spark.operators.dedup import winnow_pairs
+
+        df = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(texts)],
+            "doc_id long, text string")
+        return winnow_pairs(df, **kw).collect()
+
+    def test_shared_run_detected(self, spark):
+        shared = " ".join(f"s{i}" for i in range(12))
+        texts = ["pre amble words " + shared,
+                 shared + " totally different tail here",
+                 "unrelated third document about nothing shared"]
+        rows = self._pairs(spark, texts, min_shared=1)
+        assert {(r["doc_a"], r["doc_b"]) for r in rows} == {(0, 1)}
+
+    def test_hot_hash_cap_drops_universal_chrome(self, spark):
+        # identical boilerplate-only docs: every selected fingerprint
+        # has df = n_docs > max_df, so the cap removes them all and no
+        # pair survives (the undercount direction the docstring states)
+        chrome = "copyright footer nav menu home about contact terms"
+        texts = [chrome] * 6
+        rows = self._pairs(spark, texts, min_shared=1, max_df=3)
+        assert rows == []
+        # and with the cap relaxed the same corpus is all-pairs
+        rows = self._pairs(spark, texts, min_shared=1, max_df=10)
+        assert len(rows) == 15
+
+    def test_min_shared_threshold(self, spark):
+        shared = " ".join(f"s{i}" for i in range(30))
+        texts = ["a1 a2 a3 " + shared, "b1 b2 b3 " + shared]
+        many = self._pairs(spark, texts, min_shared=2)
+        assert many and many[0]["shared"] >= 2
+        none = self._pairs(spark, texts, min_shared=10_000)
+        assert none == []
