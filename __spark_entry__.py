@@ -58,8 +58,7 @@ def q_flagship_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.extract import extract_pages
 
     pages = _wrapped_pages(spark, sf_dir)
-    out = extract_pages(pages, payload_col="html", passthrough=("doc_id",),
-                        with_spans=False)
+    out = extract_pages(pages, payload_col="html", passthrough=("doc_id",))
     return out.select("doc_id", "text").orderBy("doc_id")
 
 
@@ -83,7 +82,6 @@ def q_profile_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = extract_pages(
         pages, payload_col="html", passthrough=("doc_id", "lang"),
-        with_spans=False,
         profiles={"es": {"min_words": 3}}, profile_col="lang",
     )
     return out.select("doc_id", "lang", "text").orderBy("doc_id")
@@ -133,8 +131,7 @@ def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 "payload": payloads})
 
     pdfs = docs.mapInPandas(build, schema="doc_id long, payload binary")
-    out = extract_pages(pdfs, payload_col="payload",
-                        passthrough=("doc_id",), with_spans=False)
+    out = extract_pages(pdfs, payload_col="payload", passthrough=("doc_id",))
     return out.select("doc_id", "text", "status", "n_blocks").orderBy("doc_id")
 
 
@@ -224,8 +221,7 @@ def q_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 "payload": payloads})
 
     pdfs = docs.mapInPandas(build, schema="doc_id long, payload binary")
-    out = extract_pages(pdfs, payload_col="payload",
-                        passthrough=("doc_id",), with_spans=False)
+    out = extract_pages(pdfs, payload_col="payload", passthrough=("doc_id",))
     return out.select("doc_id", "text", "status", "n_blocks").orderBy("doc_id")
 
 
@@ -333,7 +329,7 @@ def q_extract_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = _wrapped_pages(spark, sf_dir)
     out = extract_pages(pages, payload_col="html",
-                        passthrough=("doc_id", "lang"), with_spans=False)
+                        passthrough=("doc_id", "lang"))
     return (
         out.groupBy("lang")
         .agg(
@@ -813,8 +809,7 @@ def q_span_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.operators.extract import extract_pages
 
     pages = _wrapped_pages(spark, sf_dir)
-    out = extract_pages(pages, payload_col="html", passthrough=("doc_id",),
-                        with_spans=True)
+    out = extract_pages(pages, payload_col="html", passthrough=("doc_id",))
     return (
         out.select(F.explode("spans").alias("s"))
         .groupBy(F.col("s.kind").alias("kind"))
@@ -2249,8 +2244,7 @@ def q_incremental_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.lit(_WRAP_SUFFIX)), "utf-8").alias("html"),
     )
     out = extract_pages(pages, payload_col="html",
-                        passthrough=("key", "change_status"),
-                        with_spans=False)
+                        passthrough=("key", "change_status"))
     return out.select(
         "key", F.col("change_status").alias("status"), "text"
     ).orderBy("key")
@@ -2675,7 +2669,7 @@ def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack, schema="path string, content binary")
     parsed = warc_pages_from_binary(files).filter(F.col("status") == "ok")
     out = extract_pages(parsed, payload_col="html",
-                        passthrough=("url", "warc_ts"), with_spans=False)
+                        passthrough=("url", "warc_ts"))
     return out.select(
         F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("long").alias("doc_id"),
         "url", "warc_ts", "text",
@@ -3345,8 +3339,8 @@ def q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("html"),
     )
     ext = extract_pages(pages, payload_col="html",
-                        passthrough=("doc_id", "source"),
-                        with_spans=False).select("doc_id", "source", "text")
+                        passthrough=("doc_id", "source"))
+    ext = ext.select("doc_id", "source", "text")
     qual = (
         with_quality_filter(ext)
         .filter(F.col("keep") == 1)
@@ -4476,7 +4470,7 @@ def q_stream_extract_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         pages.write.mode("overwrite").parquet(src)
         q = run_stream_to_parquet(read_pages_stream(spark, src), out, ckpt,
-                                  available_now=True, with_spans=False)
+                                  available_now=True)
         q.awaitTermination()
         return spark.read.parquet(out).select(
             F.regexp_extract("url", r"/doc/(\d+)$", 1)

@@ -71,7 +71,7 @@ EXTRACT_RESULT_FIELDS = [
     T.StructField("doc_kind", T.StringType(), True),
     T.StructField("bytes_in", T.LongType(), True),
     T.StructField("bytes_out", T.LongType(), True),
-    T.StructField("extract_ms", T.LongType(), True),
+    T.StructField("extract_ms", T.DoubleType(), True),
 ]
 
 
@@ -80,7 +80,6 @@ def extract_pages(
     payload_col: str = "html",
     passthrough: tuple[str, ...] = ("url",),
     all_pages: bool = False,
-    with_spans: bool = True,
     dedup_first: str | None = None,
     profiles: dict | None = None,
     profile_col: str | None = None,
@@ -109,9 +108,11 @@ def extract_pages(
     ``profiles['default']`` then engine defaults; the resolved dict
     tunes the HTML classifier thresholds (core._classify).
 
-    ``extract_ms`` is wall-clock metadata (the analogue of the
-    reference's declared-but-unused processing_duration_ms,
-    models.py:15-18) and is excluded from determinism contracts.
+    ``extract_ms`` is the row's wall-clock kernel time in float
+    milliseconds, so a sub-millisecond document does not read 0.  It is
+    metadata (the analogue of the reference's declared-but-unused
+    processing_duration_ms, models.py:15-18) and is excluded from
+    determinism contracts.
     """
     if dedup_first is not None and dedup_first not in passthrough:
         raise ValueError(f"dedup_first={dedup_first!r} must be in passthrough")
@@ -123,12 +124,10 @@ def extract_pages(
         default_profile = norm_profiles.get("default")
     else:
         norm_profiles, default_profile = {}, None
-    in_fields = [df.schema[c] for c in passthrough]
-    result_fields = list(EXTRACT_RESULT_FIELDS)
-    if not with_spans:
-        result_fields = [f for f in result_fields if f.name != "spans"]
-    out_schema = T.StructType(in_fields + result_fields)
-    arrow_types = {f.name: to_arrow_type(f.dataType) for f in result_fields}
+    out_schema = T.StructType([df.schema[c] for c in passthrough]
+                              + EXTRACT_RESULT_FIELDS)
+    arrow_types = {f.name: to_arrow_type(f.dataType)
+                   for f in EXTRACT_RESULT_FIELDS}
     cols = list(passthrough) + [payload_col]
 
     # Arrow-native kernel (mapInArrow, not mapInPandas): passthrough
@@ -170,14 +169,13 @@ def extract_pages(
                 t0 = time.perf_counter()
                 r = extract_bytes(payload if payload is not None else b"",
                                   all_pages=all_pages, profile=prof)
-                dt_ms = int((time.perf_counter() - t0) * 1000)
+                dt_ms = (time.perf_counter() - t0) * 1000
                 texts.append(r["text"])
-                if with_spans:
-                    for s, e, k in r["spans"]:
-                        s_start.append(s)
-                        s_end.append(e)
-                        s_kind.append(k)
-                    s_offsets.append(len(s_start))
+                for s, e, k in r["spans"]:
+                    s_start.append(s)
+                    s_end.append(e)
+                    s_kind.append(k)
+                s_offsets.append(len(s_start))
                 n_blocks.append(r["n_blocks"])
                 status.append(r["status"])
                 error_msg.append(r["error_msg"])
@@ -189,17 +187,16 @@ def extract_pages(
             names = list(passthrough)
             arrays.append(pa.array(texts, arrow_types["text"]))
             names.append("text")
-            if with_spans:
-                arrays.append(pa.ListArray.from_arrays(
-                    pa.array(s_offsets, pa.int32()),
-                    pa.StructArray.from_arrays(
-                        [pa.array(s_start, pa.int64()),
-                         pa.array(s_end, pa.int64()),
-                         pa.array(s_kind, pa.string())],
-                        ["start", "end", "kind"],
-                    ),
-                ))
-                names.append("spans")
+            arrays.append(pa.ListArray.from_arrays(
+                pa.array(s_offsets, pa.int32()),
+                pa.StructArray.from_arrays(
+                    [pa.array(s_start, pa.int64()),
+                     pa.array(s_end, pa.int64()),
+                     pa.array(s_kind, pa.string())],
+                    ["start", "end", "kind"],
+                ),
+            ))
+            names.append("spans")
             for nm, vals in (
                 ("n_blocks", n_blocks),
                 ("status", status),

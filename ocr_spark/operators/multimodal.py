@@ -1,7 +1,8 @@
 """Multimodal column plumbing: image/audio/video as opaque binary.
 
 The engine treats media exactly like html: an opaque BinaryType column
-plus typed metadata, processed in Arrow batches via ``mapInPandas``.
+plus typed metadata.  Each operator is one :func:`media_rows` call: an
+Arrow-batched ``mapInArrow`` pass in which a failing payload is a row.
 
 What is REAL without any codec: magic-byte validity classification and
 header-derived dimensions for PNG/JPEG/GIF/TIFF (O4 semantics — the
@@ -13,9 +14,9 @@ classification is the default path.
 
 What is stubbed (no Pillow/ffmpeg in this container — SURVEY.md §7.0):
 *compressed codecs* (JPEG pixels, MP3/AAC, video).  Such payloads yield
-``processing_error`` rows unless ``fake=True`` (deterministic fake
-seeded from the payload digest, for plumbing tests) or a real
-``decode_fn`` (payload: bytes -> dict) is supplied — the Spark plan is
+``processing_error`` rows unless a ``decode_fn`` (payload: bytes ->
+dict) is supplied — a real codec, or ``_fake_decode`` (deterministic,
+seeded from the payload digest, for plumbing tests); the Spark plan is
 unchanged either way.
 """
 
@@ -24,11 +25,14 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
+from functools import partial
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ocr_spark.extractor.core import parse_image_header
+from ocr_spark.operators.extract import map_payloads
 
 __all__ = ["MEDIA_SCHEMA", "EXIF_SCHEMA", "AHASH_SCHEMA", "decode_media",
            "decode_png_pixels", "decode_wav_samples", "parse_exif",
@@ -54,6 +58,39 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("error_msg", T.StringType(), True),
     ]
 )
+
+
+def media_rows(df: DataFrame, payload_col: str, id_col: str,
+               schema: T.StructType, fn,
+               err_status: str = "processing_error",
+               many: bool = False) -> DataFrame:
+    """The media/OCR scaffold: ``schema`` rows from one ``map_payloads``
+    pass, ``id_col`` cast to string as ``media_id``.  ``fn(bytes(payload))``
+    returns a dict keyed by field names (with ``many``, a list of them);
+    an omitted key reads NULL, an omitted ``status`` reads ``ok``.  If
+    ``fn`` raises, NULL payload included, the payload is ONE row with
+    status ``err_status``, error text ``"Type: message"`` and NULL (-1 in
+    a non-nullable field, like ``frame_idx``) elsewhere — O16."""
+    fields = [f for f in schema.fields if f.name != "media_id"]
+    blank = {f.name: None if f.nullable else -1 for f in fields}
+
+    def row(out: dict) -> tuple:
+        d = {**blank, "status": "ok", **out}
+        return tuple(d[f] for f in blank)
+
+    def row_fn(payload):
+        try:
+            out = fn(bytes(payload))
+            return [row(r) for r in out] if many else row(out)
+        except Exception as exc:  # error rows, not exceptions
+            err = row({"status": err_status,
+                       "error_msg": f"{type(exc).__name__}: {exc}"})
+            return [err] if many else err
+
+    ids = df.select(F.col(id_col).cast("string").alias("media_id"),
+                    payload_col)
+    return map_payloads(ids, payload_col, ("media_id",), fields, row_fn,
+                        many)
 
 
 # PNG color type -> samples per pixel (8-bit depth only).  Type 3
@@ -262,6 +299,28 @@ AHASH_SCHEMA = T.StructType(
 )
 
 
+def _luma_plane(payload: bytes):
+    """Decode a PNG to its ``(h, w)`` int64 luma plane: the integer
+    BT.601 weights ``(299r + 587g + 114b) // 1000``, channel 0 for
+    gray/GA — exact, so a SQL oracle recomputes it bit-for-bit."""
+    import numpy as np
+
+    w, h, ch, pixels = _decode_png_raw(payload)
+    a = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, ch)
+    a = a.astype(np.int64)
+    if ch >= 3:
+        return (299 * a[:, :, 0] + 587 * a[:, :, 1]
+                + 114 * a[:, :, 2]) // 1000
+    return a[:, :, 0]
+
+
+def _hash_row(w: int, h: int, bits) -> dict:
+    """An image-hash row: the bits row-major as '0'/'1' text and hex."""
+    bit_str = "".join("1" if b else "0" for b in bits)
+    return {"width": w, "height": h, "ahash_bits": bit_str,
+            "ahash_hex": f"{int(bit_str, 2):016x}"}
+
+
 def ahash_from_png(payload: bytes, grid: int = 8) -> dict:
     """Perceptual average-hash (aHash) over REAL decoded PNG pixels:
     luma plane -> ``grid x grid`` block means -> one bit per block
@@ -284,33 +343,18 @@ def ahash_from_png(payload: bytes, grid: int = 8) -> dict:
     image intake dedups retries by byte digest only
     (/root/reference/services/file_processor.py:49-62); this is the
     content-level upgrade of that capability."""
-    w, h, ch, pixels = _decode_png_raw(payload)
+    luma = _luma_plane(payload)
+    h, w = luma.shape
     if w % grid or h % grid:
         raise ValueError(
             f"aHash needs dimensions divisible by {grid}, got {w}x{h} "
             "(resample upstream)")
-    import numpy as np
-
-    a = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, ch)
-    a = a.astype(np.int64)
-    if ch >= 3:
-        luma = (299 * a[:, :, 0] + 587 * a[:, :, 1]
-                + 114 * a[:, :, 2]) // 1000
-    else:
-        luma = a[:, :, 0]
     bh, bw = h // grid, w // grid
     # block sums: exact ints; (grid, bh, grid, bw) pooling
     blocks = luma.reshape(grid, bh, grid, bw).sum(axis=(1, 3))
     total = int(blocks.sum())
-    bits = (grid * grid * blocks.reshape(-1) > total).astype(np.int64)
-    bit_str = "".join("1" if b else "0" for b in bits)
-    val = int("".join(bit_str), 2)
-    return {
-        "width": w,
-        "height": h,
-        "ahash_bits": bit_str,
-        "ahash_hex": f"{val:016x}",
-    }
+    bits = grid * grid * blocks.reshape(-1) > total
+    return _hash_row(w, h, bits)
 
 
 def dhash_from_png(payload: bytes, grid: int = 8) -> dict:
@@ -328,32 +372,17 @@ def dhash_from_png(payload: bytes, grid: int = 8) -> dict:
     and the bit test compares raw integer block sums (equal blocks, so
     no division).  The output hex key feeds the same
     :func:`ahash_near_dup` pigeonhole blocking."""
-    w, h, ch, pixels = _decode_png_raw(payload)
+    luma = _luma_plane(payload)
+    h, w = luma.shape
     cols = grid + 1
     if w % cols or h % grid:
         raise ValueError(
             f"dHash needs width divisible by {cols} and height by "
             f"{grid}, got {w}x{h} (resample upstream)")
-    import numpy as np
-
-    a = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, ch)
-    a = a.astype(np.int64)
-    if ch >= 3:
-        luma = (299 * a[:, :, 0] + 587 * a[:, :, 1]
-                + 114 * a[:, :, 2]) // 1000
-    else:
-        luma = a[:, :, 0]
     bh, bw = h // grid, w // cols
     blocks = luma.reshape(grid, bh, cols, bw).sum(axis=(1, 3))
-    bits = (blocks[:, :-1] < blocks[:, 1:]).astype(np.int64).reshape(-1)
-    bit_str = "".join("1" if b else "0" for b in bits)
-    val = int(bit_str, 2)
-    return {
-        "width": w,
-        "height": h,
-        "ahash_bits": bit_str,
-        "ahash_hex": f"{val:016x}",
-    }
+    bits = (blocks[:, :-1] < blocks[:, 1:]).reshape(-1)
+    return _hash_row(w, h, bits)
 
 
 def image_dhash(df: DataFrame, payload_col: str = "payload",
@@ -361,25 +390,8 @@ def image_dhash(df: DataFrame, payload_col: str = "payload",
     """Per-image difference-hash rows — same schema, batching, and
     error taxonomy as :func:`image_ahash` (the two hashes are drop-in
     alternatives feeding the same near-dup blocking)."""
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {"media_id": str(mid), "width": None, "height": None,
-                        "ahash_bits": None, "ahash_hex": None,
-                        "status": "ok", "error_msg": None}
-                try:
-                    base.update(dhash_from_png(bytes(payload), grid=grid))
-                except Exception as exc:
-                    base["status"] = "processing_error"
-                    base["error_msg"] = f"{type(exc).__name__}: {exc}"
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, AHASH_SCHEMA)
+    return media_rows(df, payload_col, id_col, AHASH_SCHEMA,
+                      partial(dhash_from_png, grid=grid))
 
 
 def image_ahash(df: DataFrame, payload_col: str = "payload",
@@ -389,25 +401,8 @@ def image_ahash(df: DataFrame, payload_col: str = "payload",
     ``processing_error`` ROWS).  The binary column never shuffles —
     the hash is computed where the bytes already live, and only the
     80-byte hash row moves downstream."""
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {"media_id": str(mid), "width": None, "height": None,
-                        "ahash_bits": None, "ahash_hex": None,
-                        "status": "ok", "error_msg": None}
-                try:
-                    base.update(ahash_from_png(bytes(payload), grid=grid))
-                except Exception as exc:
-                    base["status"] = "processing_error"
-                    base["error_msg"] = f"{type(exc).__name__}: {exc}"
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, AHASH_SCHEMA)
+    return media_rows(df, payload_col, id_col, AHASH_SCHEMA,
+                      partial(ahash_from_png, grid=grid))
 
 
 def ahash_near_dup(hashes: DataFrame, max_hamming: int = 3,
@@ -425,8 +420,6 @@ def ahash_near_dup(hashes: DataFrame, max_hamming: int = 3,
     all-pairs — and the exact Hamming verify is four JVM-side
     ``bit_count(a XOR b)`` terms over ints carried with the candidate
     row, so no join-back touches the hash table again."""
-    from pyspark.sql import functions as F
-
     if max_hamming > 3:
         raise ValueError(
             "pigeonhole with 4x16-bit chunks is exact only for "
@@ -585,26 +578,8 @@ def gif_structure(df: DataFrame, payload_col: str = "payload",
                   id_col: str = "media_id") -> DataFrame:
     """Animated-GIF structure rows per binary — same Arrow-batched
     shape and error taxonomy as :func:`decode_media`."""
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {"media_id": str(mid), "width": None, "height": None,
-                        "n_frames": None, "total_ms": None,
-                        "loop_count": None, "has_gct": None,
-                        "status": "ok", "error_msg": None}
-                try:
-                    base.update(parse_gif_structure(bytes(payload)))
-                except Exception as exc:
-                    base["status"] = "parse_error"
-                    base["error_msg"] = f"{type(exc).__name__}: {exc}"
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, GIF_SCHEMA)
+    return media_rows(df, payload_col, id_col, GIF_SCHEMA,
+                      parse_gif_structure, "parse_error")
 
 
 SEGMENT_SCHEMA = T.StructType(
@@ -645,62 +620,36 @@ def audio_segments(df: DataFrame, frame_samples: int = 200,
     seg_idx NULL), never exceptions; the binary column never
     shuffles."""
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
+    def segments(payload: bytes) -> list[dict]:
+        n_ch, rate, s = _decode_wav_raw(payload)
+        n_fr = int(s.size) // n_ch          # per-channel frames
+        sq = s[:n_fr * n_ch] ** 2
+        step = frame_samples * n_ch
+        n_frames = (n_fr + frame_samples - 1) // frame_samples
+        rows = []
+        seg_start = seg_energy = None
+        for f in range(n_frames):
+            chunk = sq[f * step:(f + 1) * step]
+            e = int(chunk.sum())
+            loud = e > threshold * int(chunk.size)
+            if loud and seg_start is None:
+                seg_start, seg_energy = f, e
+            elif loud:
+                seg_energy += e
+            if seg_start is not None and (not loud or f == n_frames - 1):
+                end_f = f if not loud else f + 1
+                rows.append({
+                    "seg_idx": len(rows), "start_frame": seg_start,
+                    "n_frames": end_f - seg_start,
+                    "start_ms": seg_start * frame_samples * 1000 // rate,
+                    "end_ms": min(end_f * frame_samples, n_fr)
+                    * 1000 // rate,
+                    "energy": seg_energy})
+                seg_start = None
+        return rows or [{"status": "silent"}]
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    n_ch, rate, s = _decode_wav_raw(bytes(payload))
-                    n_fr = int(s.size) // n_ch          # per-channel frames
-                    s = s[:n_fr * n_ch]
-                    sq = s * s
-                    step = frame_samples * n_ch
-                    n_frames = (n_fr + frame_samples - 1) // frame_samples
-                    seg_start = seg_energy = None
-                    seg_idx = 0
-                    emitted = False
-                    for f in range(n_frames):
-                        chunk = sq[f * step:(f + 1) * step]
-                        e = int(chunk.sum())
-                        loud = e > threshold * int(chunk.size)
-                        if loud and seg_start is None:
-                            seg_start, seg_energy = f, e
-                        elif loud:
-                            seg_energy += e
-                        if seg_start is not None and (
-                                not loud or f == n_frames - 1):
-                            end_f = f if not loud else f + 1
-                            rows.append({
-                                "media_id": str(mid), "seg_idx": seg_idx,
-                                "start_frame": seg_start,
-                                "n_frames": end_f - seg_start,
-                                "start_ms": seg_start * frame_samples
-                                * 1000 // rate,
-                                "end_ms": min(end_f * frame_samples, n_fr)
-                                * 1000 // rate,
-                                "energy": seg_energy,
-                                "status": "ok", "error_msg": None})
-                            seg_idx += 1
-                            seg_start = None
-                            emitted = True
-                    if not emitted:
-                        rows.append({"media_id": str(mid), "seg_idx": None,
-                                     "start_frame": None, "n_frames": None,
-                                     "start_ms": None, "end_ms": None,
-                                     "energy": None, "status": "silent",
-                                     "error_msg": None})
-                except Exception as exc:
-                    rows.append({"media_id": str(mid), "seg_idx": None,
-                                 "start_frame": None, "n_frames": None,
-                                 "start_ms": None, "end_ms": None,
-                                 "energy": None, "status": "processing_error",
-                                 "error_msg": f"{type(exc).__name__}: {exc}"})
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, SEGMENT_SCHEMA)
+    return media_rows(df, payload_col, id_col, SEGMENT_SCHEMA, segments,
+                      many=True)
 
 
 def _fake_decode(payload: bytes) -> dict:
@@ -718,49 +667,29 @@ def _fake_decode(payload: bytes) -> dict:
     }
 
 
+def _image_header(payload: bytes) -> dict:
+    """:func:`decode_media`'s codec-free default: kind/width/height
+    from a PNG/JPEG/GIF/TIFF header; anything else needs a codec."""
+    hdr = parse_image_header(payload)
+    if hdr is None:
+        raise NotImplementedError(
+            "not an image header and no media codec in this environment; "
+            "pass decode_fn")
+    return {"kind": "image", "width": hdr["width"],
+            "height": hdr["height"], "n_frames": 1}
+
+
 def decode_media(df: DataFrame, payload_col: str = "payload",
-                 id_col: str = "media_id", fake: bool = False,
-                 decode_fn=None) -> DataFrame:
+                 id_col: str = "media_id", decode_fn=None) -> DataFrame:
     """Decode / feature-extract media binaries in Arrow batches.
 
     Default path: header-based image classification (real, codec-free
     — kind/width/height from PNG/JPEG/GIF/TIFF headers, n_frames=1).
     Non-image payloads: ``processing_error`` rows (pixel/sample decode
-    needs a codec) unless ``fake=True`` or a real ``decode_fn`` (e.g.
-    PIL/torchvision decode + resize + embed) is supplied."""
-    fn = decode_fn or (_fake_decode if fake else None)
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {"media_id": str(mid), "kind": None, "width": None,
-                        "height": None, "duration_ms": None, "n_frames": None,
-                        "feature": None, "status": "ok", "error_msg": None}
-                if fn is None:
-                    hdr = parse_image_header(bytes(payload))
-                    if hdr is not None:
-                        base.update({"kind": "image", "width": hdr["width"],
-                                     "height": hdr["height"], "n_frames": 1})
-                    else:
-                        base["status"] = "processing_error"
-                        base["error_msg"] = (
-                            "NotImplementedError: not an image header and no "
-                            "media codec in this environment; pass decode_fn "
-                            "or fake=True"
-                        )
-                else:
-                    try:
-                        base.update(fn(bytes(payload)))
-                    except Exception as exc:  # error rows, not exceptions
-                        base["status"] = "processing_error"
-                        base["error_msg"] = f"{type(exc).__name__}: {exc}"
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, MEDIA_SCHEMA)
+    needs a codec) unless a real ``decode_fn`` (e.g. PIL/torchvision
+    decode + resize + embed) is supplied."""
+    return media_rows(df, payload_col, id_col, MEDIA_SCHEMA,
+                      decode_fn or _image_header)
 
 
 EXIF_SCHEMA = T.StructType(
@@ -857,33 +786,16 @@ def exif_extract(df: DataFrame, payload_col: str = "payload",
     and error taxonomy as :func:`decode_media` (malformed payloads are
     ``parse_error`` ROWS, never exceptions; the binary column never
     shuffles)."""
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {"media_id": str(mid), "byte_order": None,
-                        "orientation": None, "datetime": None,
-                        "has_gps": None, "n_ifd0_entries": None,
-                        "status": "ok", "error_msg": None}
-                try:
-                    base.update(parse_exif(bytes(payload)))
-                except Exception as exc:
-                    base["status"] = "parse_error"
-                    base["error_msg"] = f"{type(exc).__name__}: {exc}"
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, EXIF_SCHEMA)
+    return media_rows(df, payload_col, id_col, EXIF_SCHEMA, parse_exif,
+                      "parse_error")
 
 
 def sample_frames(df: DataFrame, every_n: int = 10,
                   payload_col: str = "payload",
                   id_col: str = "media_id", fake: bool = False) -> DataFrame:
     """Frame-sampling plumbing: one output row per sampled frame index.
-    Frame decode itself is stubbed like decode_media."""
+    Frame decode itself is stubbed like decode_media: without ``fake``
+    each payload is one ``processing_error`` row with frame_idx -1."""
     schema = T.StructType(
         [
             T.StructField("media_id", T.StringType(), False),
@@ -893,27 +805,16 @@ def sample_frames(df: DataFrame, every_n: int = 10,
         ]
     )
 
-    def kernel(batches):
-        import pandas as pd
+    def frames(payload: bytes) -> list[dict]:
+        if not fake:
+            raise NotImplementedError("no video codec in this environment")
+        # payload:index digest — ':'+decimal keeps the frame key
+        # VARCHAR-expressible so the SQL oracle can reproduce it (sha256
+        # is VARCHAR-only in DuckDB)
+        return [{"frame_idx": idx,
+                 "frame_digest": hashlib.sha256(
+                     payload + b":" + str(idx).encode()).hexdigest()[:16]}
+                for idx in range(0, _fake_decode(payload)["n_frames"],
+                                 every_n)]
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if not fake:
-                    rows.append({"media_id": str(mid), "frame_idx": -1,
-                                 "frame_digest": None,
-                                 "status": "processing_error"})
-                    continue
-                meta = _fake_decode(bytes(payload))
-                for idx in range(0, meta["n_frames"], every_n):
-                    # payload:index digest — ':'+decimal keeps the frame
-                    # key VARCHAR-expressible so the SQL oracle can
-                    # reproduce it (sha256 is VARCHAR-only in DuckDB)
-                    digest = hashlib.sha256(
-                        bytes(payload) + b":" + str(idx).encode()
-                    ).hexdigest()[:16]
-                    rows.append({"media_id": str(mid), "frame_idx": idx,
-                                 "frame_digest": digest, "status": "ok"})
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, schema)
+    return media_rows(df, payload_col, id_col, schema, frames, many=True)

@@ -13,10 +13,10 @@ from the bitmap (the PNG is parsed by the same stdlib pixel decoder as
 the perceptual-hash path, operators/multimodal.py:_decode_png_raw).
 
 Scale shape: OCR is per-row work — the binary column never shuffles;
-decode runs where the bytes live via ``mapInPandas`` and only the
-(id, text, n_glyphs, status) row moves downstream, the identical
-discipline as decode_media / image_ahash.  At 10^12 images the cost is
-one Arrow-batched pass, zero exchanges.
+decode runs where the bytes live, in the same ``mapInArrow`` scaffold
+as decode_media / image_ahash (``multimodal.media_rows``), and only the
+(id, text, n_glyphs, status) row moves downstream.  At 10^12 images
+the cost is one Arrow-batched pass, zero exchanges.
 
 The font is intentionally CLOSED (A-Z, 0-9, space): a template-match
 decoder is exact on its own alphabet and says so ('?', n_unknown) off
@@ -28,6 +28,9 @@ is what makes the operator value-oracle-able end-to-end (decoded text
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+from ocr_spark.operators.multimodal import _decode_png_raw, media_rows
 
 GLYPH_W, GLYPH_H = 5, 7
 CELL_W, CELL_H = GLYPH_W + 1, GLYPH_H + 1   # 1px inter-glyph / inter-line
@@ -170,8 +173,6 @@ def decode_glyph_text(payload: bytes, threshold: int = 128) -> dict:
     font templates; a pattern off the alphabet decodes as '?' and
     increments ``n_unknown`` rather than guessing.  Lines join with
     '\\n'.  Returns {text, n_glyphs, n_unknown, width, height}."""
-    from ocr_spark.operators.multimodal import _decode_png_raw
-
     w, h, ch, pixels = _decode_png_raw(payload)
     if ch == 1:
         gray = pixels
@@ -252,9 +253,18 @@ def decode_glyph_text(payload: bytes, threshold: int = 128) -> dict:
     }
 
 
-OCR_SCHEMA = ("media_id string, text string, n_glyphs int, "
-              "n_unknown int, width int, height int, "
-              "status string, error_msg string")
+OCR_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.StringType(), True),
+        T.StructField("text", T.StringType(), True),
+        T.StructField("n_glyphs", T.IntegerType(), True),
+        T.StructField("n_unknown", T.IntegerType(), True),
+        T.StructField("width", T.IntegerType(), True),
+        T.StructField("height", T.IntegerType(), True),
+        T.StructField("status", T.StringType(), True),
+        T.StructField("error_msg", T.StringType(), True),
+    ]
+)
 
 
 def ocr_decode(df: DataFrame, payload_col: str = "payload",
@@ -264,23 +274,5 @@ def ocr_decode(df: DataFrame, payload_col: str = "payload",
     operator.  Same shape and error taxonomy as decode_media /
     image_ahash — bad payloads become ``processing_error`` ROWS (O16),
     never exceptions; the binary column never crosses an exchange."""
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {"media_id": str(mid), "text": None,
-                        "n_glyphs": None, "n_unknown": None,
-                        "width": None, "height": None,
-                        "status": "ok", "error_msg": None}
-                try:
-                    base.update(decode_glyph_text(bytes(payload)))
-                except Exception as exc:
-                    base["status"] = "processing_error"
-                    base["error_msg"] = f"{type(exc).__name__}: {exc}"
-                rows.append(base)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, OCR_SCHEMA)
+    return media_rows(df, payload_col, id_col, OCR_SCHEMA,
+                      decode_glyph_text)

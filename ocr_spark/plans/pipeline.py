@@ -13,7 +13,7 @@ Scale design notes (the parts the north rule grades):
   twice").  Keep-latest dedup rides that same exchange: because both
   ``bucket`` and ``salt`` are pure functions of ``url``, every capture
   of a url lands in the same partition, so a per-task
-  ``sortWithinPartitions(url, warc_ts desc, xxhash64(html))`` (an
+  ``sortWithinPartitions(url, warc_ts desc, html, lang)`` (an
   external, spillable sort — no shuffle) puts the winning capture first
   and the Arrow kernel drops the rest with an O(1) streaming filter.
 * **The write exchange moves text, not html.** The extracted output

@@ -55,8 +55,7 @@ def read_pages_stream(spark: SparkSession, path: str,
     return reader.parquet(path)
 
 
-def extract_stream(pages: DataFrame, with_spans: bool = True,
-                   all_pages: bool = False) -> DataFrame:
+def extract_stream(pages: DataFrame, all_pages: bool = False) -> DataFrame:
     """The extraction stage on a streaming DataFrame — the SAME Arrow
     kernel as the batch job, so stream output is byte-identical to
     batch output for the same input rows.  (No keep-latest dedup here:
@@ -66,7 +65,6 @@ def extract_stream(pages: DataFrame, with_spans: bool = True,
         pages,
         payload_col="html",
         passthrough=("url", "warc_ts", "lang"),
-        with_spans=with_spans,
         all_pages=all_pages,
     )
 
@@ -220,13 +218,12 @@ def dedup_stream(pages: DataFrame, keys: list[str] | None = None,
 
 def run_stream_to_parquet(pages: DataFrame, out_path: str,
                           checkpoint_path: str,
-                          available_now: bool = True,
-                          with_spans: bool = True):
+                          available_now: bool = True):
     """Extract a pages stream and append to parquet with exactly-once
     file-sink semantics (checkpointed).  Returns the StreamingQuery;
     with ``available_now`` the caller can ``awaitTermination()`` for a
     bounded run."""
-    extracted = extract_stream(pages, with_spans=with_spans)
+    extracted = extract_stream(pages)
     writer = (
         extracted.writeStream.format("parquet")
         .option("path", out_path)

@@ -486,13 +486,33 @@ def test_profiles_resolved_per_lang_in_spark_kernel(spark):
         [("a", "ko", payload), ("b", "en", payload), ("c", None, payload)],
         "url string, lang string, html binary")
     out = extract_pages(
-        df, passthrough=("url", "lang"), with_spans=False,
+        df, passthrough=("url", "lang"),
         profiles={"KO": {"min_words": 5}, "default": {}},
         profile_col="lang",
     )
     got = {r.url: r.text for r in out.collect()}
     assert got["a"].startswith("ten short words")   # ko profile (key lowercased)
     assert got["b"] == "" and got["c"] == ""        # default thresholds
+
+
+def test_extract_ms_counts_sub_millisecond_pages(spark):
+    """extract_ms is float milliseconds: a ~300-byte page extracts in
+    well under 1 ms, and its row still reports the time it took."""
+    from pyspark.sql import types as T
+
+    from ocr_spark.operators.extract import extract_pages
+
+    rows = []
+    for i in range(40):
+        body = " ".join(f"word{i}x{j}" for j in range(30))
+        html = f"<html><body><p>{body}</p></body></html>".encode()
+        assert 250 <= len(html) <= 350
+        rows.append((f"u{i}", html))
+    df = spark.createDataFrame(rows, "url string, html binary")
+    out = extract_pages(df)
+    ms = [r.extract_ms for r in out.select("extract_ms").collect()]
+    assert len(ms) == 40 and all(m > 0 for m in ms)
+    assert out.schema["extract_ms"].dataType == T.DoubleType()
 
 
 def test_link_dense_block_dropped_even_in_article():

@@ -392,7 +392,8 @@ def test_fingerprint_stability(spark):
 
 
 def test_multimodal_stub_and_fake(spark):
-    from ocr_spark.operators.multimodal import decode_media, sample_frames
+    from ocr_spark.operators.multimodal import (_fake_decode, decode_media,
+                                                sample_frames)
 
     df = spark.createDataFrame(
         [("m1", bytearray(b"payload-one")), ("m2", bytearray(b"payload-two"))],
@@ -401,15 +402,78 @@ def test_multimodal_stub_and_fake(spark):
     assert all(r.status == "processing_error" for r in stub)
     assert all("NotImplementedError" in r.error_msg for r in stub)
 
-    fake = {r.media_id: r for r in decode_media(df, fake=True).collect()}
+    fake = {r.media_id: r for r in decode_media(df, decode_fn=_fake_decode).collect()}
     assert fake["m1"].status == "ok"
     assert len(fake["m1"].feature) == 16
-    again = {r.media_id: r for r in decode_media(df, fake=True).collect()}
+    again = {r.media_id: r for r in decode_media(df, decode_fn=_fake_decode).collect()}
     assert fake["m1"].feature == again["m1"].feature  # deterministic
 
     frames = sample_frames(df, every_n=5, fake=True).collect()
     assert all(r.status == "ok" for r in frames)
     assert len(frames) > 0
+
+
+def test_media_operators_turn_null_payloads_into_rows(spark):
+    """The eight per-payload media/OCR operators on one frame holding
+    valid payloads, an invalid one and a NULL one: the NULL payload is
+    exactly one error row with the operator's own status (never a
+    failed query), the other rows equal those of the frame without it,
+    and the output columns and Spark types are the declared schema."""
+    from functools import partial
+
+    from pyspark.sql import types as T
+
+    from ocr_spark.data.synth import build_gif, build_png, build_wav
+    from ocr_spark.operators import multimodal as mm
+    from ocr_spark.operators.ocr import OCR_SCHEMA, ocr_decode, render_text_png
+
+    frame_schema = T.StructType([
+        T.StructField("media_id", T.StringType()),
+        T.StructField("frame_idx", T.IntegerType()),
+        T.StructField("frame_digest", T.StringType()),
+        T.StructField("status", T.StringType())])
+    pe, ps = "processing_error", "parse_error"
+    ops = {  # name -> (operator, schema, a payload it decodes, error status)
+        "decode_media": (mm.decode_media, mm.MEDIA_SCHEMA, "png", pe),
+        "image_ahash": (mm.image_ahash, mm.AHASH_SCHEMA, "png", pe),
+        "image_dhash": (mm.image_dhash, mm.AHASH_SCHEMA, "png", pe),
+        "gif_structure": (mm.gif_structure, mm.GIF_SCHEMA, "gif", ps),
+        "exif_extract": (mm.exif_extract, mm.EXIF_SCHEMA, "jpeg", ps),
+        "audio_segments": (mm.audio_segments, mm.SEGMENT_SCHEMA, "wav", pe),
+        "sample_frames": (partial(mm.sample_frames, fake=True), frame_schema,
+                          "png", pe),
+        "ocr_decode": (ocr_decode, OCR_SCHEMA, "text", pe),
+    }
+    rows = [("png", build_png(72, 8, color_type=0)),
+            ("text", render_text_png("NULL 0")),
+            ("gif", build_gif(16, 16, n_frames=2, loop=0)),
+            ("jpeg", _mk_exif_jpeg()),
+            ("wav", build_wav(450, rate=8000, sample_fn=lambda i: 2000)),
+            ("junk", b"junk"),
+            ("null", None)]
+    df = spark.createDataFrame(rows, "media_id string, payload binary")
+    no_null = df.where(F.col("media_id") != "null")
+    for name, (op, schema, valid, err_status) in ops.items():
+        out = op(df)
+        assert [(f.name, f.dataType) for f in out.schema] == \
+            [(f.name, f.dataType) for f in schema], name
+        got = out.collect()
+        null_rows = [r.asDict() for r in got if r.media_id == "null"]
+        assert len(null_rows) == 1, name
+        want = {f.name: None for f in schema}
+        want.update(media_id="null", status=err_status)
+        if "error_msg" in want:
+            want["error_msg"] = \
+                "TypeError: cannot convert 'NoneType' object to bytes"
+        if name == "sample_frames":
+            want["frame_idx"] = -1      # declared non-null, like the stub row
+        assert null_rows[0] == want, name
+        rest = sorted((r for r in got if r.media_id != "null"), key=repr)
+        assert rest == sorted(op(no_null).collect(), key=repr), name
+        assert {r.status for r in rest if r.media_id == valid} == {"ok"}, name
+        if name != "sample_frames":     # the fake decoder takes any bytes
+            assert [r.status for r in rest if r.media_id == "junk"] == \
+                [err_status], name
 
 
 # --------------------------------------------------------------------------

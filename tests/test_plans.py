@@ -647,18 +647,20 @@ def test_kn_model_joins_are_broadcast(spark):
 
 def test_ocr_decode_arrow_kernel_no_shuffle_of_bytes(spark):
     """Glyph OCR: render + decode are per-row Arrow stages — the plan
-    must show Python batch evaluation (mapInPandas), no per-row Python,
-    no cartesian, and NO Exchange between the PNG-build stage and the
-    decode stage (the binary column never crosses the network; only
-    the skinny OCR row is sorted at the end)."""
+    must show Python batch evaluation (mapInPandas for the build,
+    mapInArrow for the decode), no per-row Python, no cartesian, and NO
+    Exchange between the PNG-build stage and the decode stage (the
+    binary column never crosses the network; only the skinny OCR row
+    is sorted at the end)."""
     df = entry_mod.q_ocr_decode(spark, SF)
     plan = plan_of(df)
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
-    assert plan.count("MapInPandas") == 2        # build + decode
+    assert plan.count("MapInPandas") == 1        # build
+    assert plan.count("MapInArrow") == 1         # decode
     # exactly ONE exchange in the whole plan — the final orderBy's
     # range partitioning of the skinny result; the payload bytes stay
     # partition-local between the build and decode kernels
     assert plan.count("Exchange") == 1
-    between = plan.split("MapInPandas")[1]       # decode..build segment
-    assert "Exchange" not in between
+    between = plan.split("MapInArrow")[1].split("MapInPandas")[0]
+    assert "Exchange" not in between             # decode..build segment

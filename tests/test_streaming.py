@@ -84,8 +84,7 @@ def test_stream_extract_matches_oracle(spark, pages_parquet, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     stream = read_pages_stream(spark, _as_source_dir(pages_parquet, tmp_path))
-    q = run_stream_to_parquet(stream, out, ckpt, available_now=True,
-                              with_spans=False)
+    q = run_stream_to_parquet(stream, out, ckpt, available_now=True)
     q.awaitTermination(300)
     got = {
         r["url"]: r["text"]
@@ -115,7 +114,7 @@ def test_stream_extract_matches_oracle(spark, pages_parquet, tmp_path):
 
 def test_stream_windowed_lineage_reconciles(spark, pages_parquet, tmp_path):
     stream = read_pages_stream(spark, _as_source_dir(pages_parquet, tmp_path))
-    lineage = windowed_lineage(extract_stream(stream, with_spans=False),
+    lineage = windowed_lineage(extract_stream(stream),
                                window="30 days", watermark="1 hour")
     ckpt = str(tmp_path / "ckpt2")
     # complete mode: append would hold back the last (never-closed)
